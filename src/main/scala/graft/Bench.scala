@@ -15,7 +15,8 @@ import graft.pipeline.CrawlPipeline
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
+  /** The harness's local session; the `graft.tools` mains share it. */
+  private[graft] def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")

@@ -98,46 +98,13 @@ object BloomSeen {
 
   /** Build a Bloom over `hashCol` of `seen`, broadcast it, return a
     * might-contain predicate Column for frontier pre-filtering. (Single-
-    * filter form; the per-bucket form groups with `bloomAgg` and broadcasts
-    * the bucket→filter map.)
+    * filter form; the per-bucket form is `fileBucketPredicate` below.)
     */
   def mightContainPredicate(spark: SparkSession, seen: DataFrame, hashCol: String,
       expectedItems: Long = 1L << 20, fpp: Double = 0.01): Column = {
     val bf = seen.stat.bloomFilter(hashCol, expectedItems, fpp)
     val bc = spark.sparkContext.broadcast(serialize(bf))
     udf(new MightContain(bc)).apply(org.apache.spark.sql.functions.col(hashCol))
-  }
-
-  /** Executor-side cached per-bucket might-contain over a broadcast
-    * bucket→filter map (filters deserialized once per executor).
-    *
-    * NOTE: fixture-scale only — the whole bucket→filter map passes through
-    * the driver and is resident per executor. The 10^10-scale path is
-    * `fileBucketPredicate` below, which holds ONE bucket's filter per task.
-    */
-  final class MightContainBucketed(bc: Broadcast[Map[Long, Array[Byte]]])
-      extends ((Long, Long) => Boolean) with Serializable {
-    @transient private lazy val filters: Map[Long, BloomFilter] =
-      bc.value.map { case (b, bytes) => b -> deserialize(bytes) }
-    def apply(bucket: Long, h: Long): Boolean =
-      filters.get(bucket).forall(_.mightContainLong(h)) // unknown bucket → keep (no FN)
-  }
-
-  /** Small-scale form of the per-bucket predicate (whole map broadcast). */
-  def perBucketPredicate(spark: SparkSession, seen: DataFrame,
-      bucketCol: String, hashCol: String,
-      expectedItemsPerBucket: Long = 1L << 18, fpp: Double = 0.01): Column = {
-    import org.apache.spark.sql.functions.col
-    // partition-inferred bucket columns read back as int32 — normalize
-    val filters = seen
-      .groupBy(col(bucketCol).cast("long").as("b"))
-      .agg(bloomAgg(col(hashCol), expectedItemsPerBucket, fpp).as("bloom"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom"))
-      .toMap
-    val bc = spark.sparkContext.broadcast(filters)
-    udf(new MightContainBucketed(bc))
-      .apply(col(bucketCol).cast("long"), col(hashCol))
   }
 
   // --------------------------------------------------------------------

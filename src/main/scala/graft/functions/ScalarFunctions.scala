@@ -25,10 +25,9 @@ object ScalarFunctions {
     stripped.replaceAll("(?U)[-\\s]+", "-")
       .replaceAll("^[-_]+|[-_]+$", "")
   }
-  val slugifyUdf = udf(slugify _)
 
-  /** C5 as a pure builtin-Column chain (codegen'd; ASCII subset — the UDF
-    * handles the full NFKC form).
+  /** C5 as a pure builtin-Column chain (codegen'd; ASCII subset —
+    * `slugify` handles the full NFKC form).
     */
   def slugifyCol(c: Column): Column =
     regexp_replace(
@@ -171,15 +170,12 @@ object ScalarFunctions {
     inflater.end()
     new String(out.toByteArray, StandardCharsets.UTF_8)
   }
-  val deflateB64Udf = udf(deflateB64 _)
 
   // ---- C4: url encode/decode (reference: util.py:75-80) ----
   def urlEncode(s: String): String =
     if (s == null) null else URLEncoder.encode(s, StandardCharsets.UTF_8)
   def urlDecode(s: String): String =
     if (s == null) null else URLDecoder.decode(s, StandardCharsets.UTF_8)
-  val urlEncodeUdf = udf(urlEncode _)
-  val urlDecodeUdf = udf(urlDecode _)
 
   // ---- C18: DOI / web-URL predicates (reference: serializer/util.py:15,
   // 40-47) ----
@@ -188,12 +184,10 @@ object ScalarFunctions {
   def isDoi(s: String): Boolean = s != null && DoiRe.matches(s)
   def isWebUrl(s: String): Boolean =
     graft.model.UrlCanonicalizer.isValidUrl(s)
-  val isDoiUdf = udf(isDoi _)
 
   // ---- C19: validation regexes (reference: validator/__init__.py:16-26) ----
   val SemverPattern = "^(0|[1-9]\\d*)\\.(0|[1-9]\\d*)\\.(0|[1-9]\\d*)(?:-[0-9A-Za-z-.]+)?(?:\\+[0-9A-Za-z-.]+)?$"
   val Sha1Pattern = "^[A-Fa-f0-9]{40}$"
-  val Sha256Pattern = "^[A-Fa-f0-9]{64}$"
   // (no okhv regex: is_okh_version is an exact two-member set,
   // validator/__init__.py + strict.py:28-31 — a pattern could only widen it)
   val Bcp47Pattern = "^[a-zA-Z]{2,3}(-[a-zA-Z0-9]{2,8})*$"

@@ -102,7 +102,5 @@ object TextNormalize {
   def normalizeCaption(s: String): String =
     if (s == null) null else stripHtml(fixEncoding(s))
 
-  val stripHtmlUdf = udf(stripHtml _)
-  val fixEncodingUdf = udf(fixEncoding _)
   val normalizeCaptionUdf = udf(normalizeCaption _)
 }

@@ -44,14 +44,6 @@ object UrlFunctions {
     */
   def urlHash(unitPath: Column): Column = xxhash64(unitPath)
 
-  /** Partition bucket for the frontier/url_seen tables: hash-bucket of the
-    * hosting id combined with the Thingiverse-style id grouping
-    * (hosting_unit_web.py:29-33). `nBuckets` is the table layout constant —
-    * at 10^10 scale this is what bounds per-partition Bloom filter size.
-    */
-  def hostBucket(hostingId: Column, unitPath: Column, nBuckets: Int): Column =
-    pmod(xxhash64(hostingId, unitPath.substr(lit(0), lit(32))), lit(nBuckets))
-
   /** Platform priority for the golden crawl order: platforms are fetched
     * serially in registry order in the reference (fetcher/factory.py:31-38,
     * 124-128); we encode that serial order as an explicit priority column so

@@ -35,9 +35,6 @@ object HostingId {
     case "thingiverse.com" | "www.thingiverse.com" => Some(ThingiverseCom)
     case _                                        => None
   }
-
-  def fromUrl(url: String): Option[HostingId] =
-    UrlCanonicalizer.hostOf(url).flatMap(fromHost)
 }
 
 /** Canonical unit of storage: one crawled project.
@@ -157,12 +154,6 @@ object UrlCanonicalizer {
   def isValidUrl(url: String): Boolean = parseUrl(url).exists(_.isValid)
 
   /** Forge-family parse (reference: hosting_unit_forge.py:74-149). */
-  def parseForge(url: String): Either[ParseFailure, ForgeUnit] =
-    parseUrl(url) match {
-      case Some(u) => parseForgeParsed(url, u)
-      case None    => Left(ParseFailure(url, "invalid URL"))
-    }
-
   private def parseForgeParsed(url: String, parsed: ParsedUrl): Either[ParseFailure, ForgeUnit] = {
     val hostOpt = Option(parsed.host)
     val hidOpt = hostOpt.flatMap(HostingId.fromHost)
@@ -211,12 +202,6 @@ object UrlCanonicalizer {
   }
 
   /** Web-by-id parse (reference: hosting_unit_web.py:44-94). */
-  def parseWeb(url: String): Either[ParseFailure, WebUnit] =
-    parseUrl(url) match {
-      case Some(u) => parseWebParsed(url, u)
-      case None    => Left(ParseFailure(url, "invalid URL"))
-    }
-
   private def parseWebParsed(url: String, parsed: ParsedUrl): Either[ParseFailure, WebUnit] = {
     Option(parsed.host).flatMap(HostingId.fromHost) match {
       case Some(HostingId.AppropediaOrg) =>

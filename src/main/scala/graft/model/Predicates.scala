@@ -23,10 +23,6 @@ object Predicates {
     nameRe.findPrefixOf(stem).isDefined && suffixRe.findPrefixOf(suffix).isDefined
   }
 
-  /** Empty-content filter (reference: krawl/fetcher/util.py:35-37). */
-  def isEmptyContent(content: Array[Byte]): Boolean =
-    content == null || content.isEmpty
-
   /** Known-broken Thingiverse CDN image URL, dropped during normalize
     * (reference: krawl/shared/thingiverse.py:42 +
     * krawl/normalizer/thingiverse.py:159).

@@ -1,7 +1,6 @@
 package graft.normalize
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{ScalarFunctions, TextNormalize}
@@ -568,16 +567,5 @@ object Normalizers {
         |       then array(struct(s.licensor as name, cast(null as string) as email,
         |                         cast(null as string) as url))
         |       else array() end as licensor))""".stripMargin).as("software")): _*)
-  }
-
-  /** A6: unique part names within a project (dict_utils.py:136-145) —
-    * exposed for the manifest normalizer's part lists.
-    */
-  def uniquePartNames(parts: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("project_id"), col("name_clean")).orderBy(col("seq"))
-    parts.withColumn("rn", row_number().over(w))
-      .withColumn("name",
-        when(col("rn") > 1, concat(col("name_clean"), (col("rn") - 1).cast("string")))
-          .otherwise(col("name_clean")))
   }
 }

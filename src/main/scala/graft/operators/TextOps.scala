@@ -268,18 +268,15 @@ object TextOps {
     * identical min-wise behavior — the seeded rehash of a 64-bit id is
     * just as much a pseudo-permutation of the shingle set).
     */
-  def minhashSignatures(spark: SparkSession, sfDir: String, k: Int = 64): DataFrame =
-    minhashSignaturesOf(docs(spark, sfDir), k)
-
   def minhashSignaturesOf(docsDf: DataFrame, k: Int = 64): DataFrame = {
     val words = split(trim(lower(col("text"))), "\\s+")
     val n = 5
     // ONE array<long> signature column instead of k scalar columns, built
     // by the native `minhash_sig` kernel (bit-identical XXH64 composition —
     // see MinhashSig). The previous k-column higher-order-function form was
-    // interpreted per element (~15× slower per BenchExtra minhash_sig_only)
-    // and made every downstream operator drag k+1 attributes through
-    // analysis/optimization and codegen.
+    // interpreted per element (cold signature build 24.1 s vs 0.37 s at
+    // sf0.1, OPTIMIZATION_r06.md §4) and made every downstream operator
+    // drag k+1 attributes through analysis/optimization and codegen.
     ScanFloor(docsDf)
       .select(col("doc_id"), words.as("words"))
       .filter(size(col("words")) >= n)

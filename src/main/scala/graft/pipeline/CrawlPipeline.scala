@@ -202,6 +202,14 @@ object CrawlPipeline {
         // payload fingerprint delivered with the fetch — drives the
         // CrawlingMeta change detection on re-visits (data_set.py:17-39)
         col("phash").as("content_hash"))
+    frontierOf(ids)
+  }
+
+  /** The frontier columns over `ids` (an `id` column plus any columns to
+    * carry along): seed URL, canonical unit path, hosting id, priority,
+    * URL hash and bucket.
+    */
+  def frontierOf(ids: DataFrame): DataFrame =
     ids
       .withColumn("url", seedUrlCol(col("id")))
       .withColumn("seq", col("id"))
@@ -212,7 +220,6 @@ object CrawlPipeline {
       .withColumn("priority", UrlFunctions.hostPriority(col("hosting_id")))
       .withColumn("url_hash", UrlFunctions.urlHash(col("unit_path")))
       .withColumn("bucket", pmod(col("url_hash"), lit(NBuckets.toLong)))
-  }
 
   /** Skew-aware salting (SURVEY §7.4 risk 2): hosts whose frontier share
     * exceeds `threshold` of the total get one politeness bucket per
@@ -341,17 +348,6 @@ object CrawlPipeline {
     */
   private val manifestTomlUdf =
     udf((id: Long) => graft.fixtures.SyntheticManifests.toml(id))
-
-  private val profile = sys.env.get("GRAFT_PROFILE").contains("1")
-  private def timed[A](name: String)(f: => A): A = {
-    if (!profile) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[crawl-profile] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-  }
 
   /** Retryable errors are excluded from slice selection after this many
     * recorded attempts (CrawlingMeta-style re-visit bookkeeping replacing
@@ -505,7 +501,7 @@ object CrawlPipeline {
         col("caption"), col("phash"), col("phash_check"), col("unit_path"),
         col("id_group"))
 
-    val statusCounts = timed("status counts")(log.groupBy("status").count().collect())
+    val statusCounts = log.groupBy("status").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val nDenied = statusCounts.getOrElse("robots_denied", 0L)
 
@@ -528,11 +524,10 @@ object CrawlPipeline {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val resultsF = Future(alreadyCommitted(rStore).getOrElse(
-      timed("results append")(rStore.append(spark, results, "id_group",
-        Map("slice_id" -> sliceId)))))
+      rStore.append(spark, results, "id_group", Map("slice_id" -> sliceId))))
     val fetchLogF = Future(alreadyCommitted(lStore).getOrElse(
-      timed("fetch_log append")(lStore.append(spark, log.toDF(), "hosting_id",
-        statusCounts.updated("slice_id", sliceId), clusterBeforeWrite = true))))
+      lStore.append(spark, log.toDF(), "hosting_id",
+        statusCounts.updated("slice_id", sliceId), clusterBeforeWrite = true)))
     // S10: 3-graph RDF sink — the FULL normalize→TOML→RDF chain per fetched
     // unit, mirroring the reference's NormalizationListener
     // (fetcher/factory.py:49-59): the delivered manifest payload runs
@@ -545,7 +540,7 @@ object CrawlPipeline {
     // with the same slice_id idempotency.
     val projectsF = if (!rdfSink) None else Some {
       val pStore = projectsStore(tableRoot)
-      Future(alreadyCommitted(pStore).getOrElse(timed("projects append") {
+      Future(alreadyCommitted(pStore).getOrElse {
         // the manifest the platform delivers for a unit: deterministic
         // function of the store id (the fixture transport's payload twin,
         // like SyntheticStore for the image bytes)
@@ -589,14 +584,14 @@ object CrawlPipeline {
         }.toDF("project_id", "normalized_okh_toml_ttl", "meta_ttl",
           "data_okh_ttl", "id_group")
         pStore.append(spark, docs, "id_group", Map("slice_id" -> sliceId))
-      }))
+      })
     }
     // S9 raw sink: data-set metadata as canonical JSON + the original
     // payload bytes, straight from the result rows (to_json is builtin —
     // no UDF; bytes ride in the same partition layout as results)
     val rawF = if (!rawSink) None else Some {
       val store9 = rawStore(tableRoot)
-      Future(alreadyCommitted(store9).getOrElse(timed("raw append") {
+      Future(alreadyCommitted(store9).getOrElse {
         val raw = results.select(
           col("unit_path"),
           to_json(struct(
@@ -608,7 +603,7 @@ object CrawlPipeline {
             lit(sliceId + 1).as("run_seq"))).as("meta_json"),
           col("bytes").as("orig"), col("fmt"), col("id_group"))
         store9.append(spark, raw, "id_group", Map("slice_id" -> sliceId))
-      }))
+      })
     }
     val resultsSnap = Await.result(resultsF, Duration.Inf)
     Await.result(fetchLogF, Duration.Inf)
@@ -627,30 +622,30 @@ object CrawlPipeline {
       .select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
         col("url_hash"), col("bucket"), col("content_hash"))
       .withColumn("run_seq", lit(sliceId + 1))
-    val snap = timed("url_seen append")(seen.append(spark, seenRows,
-      "bucket", statusCounts, clusterBeforeWrite = true))
+    val snap = seen.append(spark, seenRows,
+      "bucket", statusCounts, clusterBeforeWrite = true)
     // the filter merge and the compaction below are independent post-commit
     // maintenance on disjoint state (per-bucket filter files vs the summary
     // table), each crash-safe on its own (a lost filter stamp → reconcile
     // rebuild next run; a lost summary → next compaction), so they run as
     // concurrent jobs — the serial tail of every run shrinks by the
     // smaller of the two.
-    val bloomF = Future(timed("bloom update")(seenFilters.update(spark,
+    val bloomF = Future(seenFilters.update(spark,
       seenRows.select(col("bucket"), col("url_hash")),
-      "bucket", "url_hash", bloomDir, snap.version)))
+      "bucket", "url_hash", bloomDir, snap.version))
 
     // auto-compaction policy: events appended since the summary's covered
     // version, counted from snapshot-manifest metrics alone (no table
     // scan — one small JSON per commit since the last compaction, a count
     // the policy itself keeps bounded)
-    if (autoCompactAlpha > 0) {
-      val summarySnap = urlSeenSummaryStore(tableRoot).currentSnapshot
-      val covered = summarySnap.flatMap(_.metrics.get("covered_version")).getOrElse(-1L)
-      val summaryRows = summarySnap.map(_.files.map(_.rows).sum).getOrElse(0L)
-      val deltaRows = ((covered + 1) to snap.version)
-        .map(v => seen.readSnapshot(v).metrics.getOrElse("commit_rows", 0L)).sum
-      if (deltaRows > autoCompactAlpha * math.max(1L, summaryRows))
-        timed("auto compact") {
+    val compacted = scala.util.Try {
+      if (autoCompactAlpha > 0) {
+        val summarySnap = urlSeenSummaryStore(tableRoot).currentSnapshot
+        val covered = summarySnap.flatMap(_.metrics.get("covered_version")).getOrElse(-1L)
+        val summaryRows = summarySnap.map(_.files.map(_.rows).sum).getOrElse(0L)
+        val deltaRows = ((covered + 1) to snap.version)
+          .map(v => seen.readSnapshot(v).metrics.getOrElse("commit_rows", 0L)).sum
+        if (deltaRows > autoCompactAlpha * math.max(1L, summaryRows)) {
           // INCREMENTAL compaction: this run's events are still cached (the
           // seenRows projection of `log`), so when the summary already
           // covers everything before this commit — or this commit IS the
@@ -674,10 +669,16 @@ object CrawlPipeline {
             case _ => compactUrlSeen(spark, tableRoot)
           }
         }
+      }
     }
-    Await.result(bloomF, Duration.Inf)
-
+    // the bloom job and the fetch-log cache outlive a failed compaction
+    // unless both are settled here: await the bloom, then unpersist, then
+    // rethrow the compaction error with any bloom error attached
+    val bloomed = scala.util.Try(Await.result(bloomF, Duration.Inf))
     log.unpersist()
+    for (c <- compacted.failed; b <- bloomed.failed) c.addSuppressed(b)
+    compacted.get
+    bloomed.get
     RunSummary(
       version = snap.version,
       attempted = statusCounts.values.sum,

@@ -194,25 +194,16 @@ final class SnapshotStore(val root: String) {
 
     val commitId = UUID.randomUUID().toString
     val commitRel: String = s"data/$commitId"
-    val profile = sys.env.get("GRAFT_PROFILE").contains("1")
-    def timed[A](name: String)(f: => A): A =
-      if (!profile) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[append-profile] $name%-20s ${(System.nanoTime() - t0) / 1e9}%7.2f s ($root)")
-        r
-      }
     // single pass: write the data, then derive per-partition lineage from
     // the committed files (partition-column-only scan = parquet footer
     // row counts, no data pages read, no recompute of the input plan)
     val toWrite = if (clusterBeforeWrite) df.repartition(col(partitionCol)) else df
-    timed("write")(toWrite.write.partitionBy(partitionCol).parquet(s"$root/$commitRel"))
+    toWrite.write.partitionBy(partitionCol).parquet(s"$root/$commitRel")
 
       // per-file row counts straight from the parquet footers on the driver
       // (local fs, ~1 ms/file, read in parallel) — no Spark job, no
       // recompute of the input plan
-      val newFiles = timed("footer counts") {
+      val newFiles = {
         val files = SnapshotStore.withWalk(p(commitRel))(
           _.filter(f => f.toString.endsWith(".parquet")).toVector)
         import scala.collection.parallel.CollectionConverters._

@@ -1,33 +1,51 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import graft.fetch.{FetchLogRow, FetchStage}
+import graft.pipeline.CrawlPipeline
 
-/** Frontier-cardinality smoke at 10^8 URLs (VERDICT r5 next-round item 8):
-  * a payload-free synthetic frontier — ids only, the six-family URL shapes
-  * of the production pipeline — driven through the REAL frontier operators
-  * (codegen URL canonicalize → first-wins dedup aggregation → per-host
-  * politeness window), proving the parse/agg/window posture empirically
-  * beyond sf0.1. Reports wall time per stage-group and total shuffle
-  * read/write bytes; completing at all demonstrates no driver OOM at the
-  * default forked-JVM heap.
+/** Frontier-cardinality smoke: a payload-free synthetic frontier of `n` ids
+  * driven through the crawl's own frontier chain (`CrawlPipeline.frontierOf`
+  * and the robots gate) and its fetch schedule (`FetchStage.toTasks` →
+  * `FetchStage.run`: the per-host politeness window and virtual-clock fold).
+  * Each stage runs from scratch into the `noop` sink. Reports rows and wall
+  * time per stage and the total shuffle and spill bytes; completing at all
+  * shows the driver heap holds at that frontier size.
   *
   * Not part of the driver contract. Usage:
   *   SPARK_GRAFT_FRONTIER_N=100000000 sbt "runMain graft.tools.FrontierScale"
   */
 object FrontierScale {
+  final case class Stage(name: String, rows: Long, seconds: Double)
+
+  /** The frontier over ids `0 until n` and its fetch schedule. */
+  def stages(spark: SparkSession, n: Long): (DataFrame, Dataset[FetchLogRow]) = {
+    val frontier = CrawlPipeline.robotsAllowed(
+      CrawlPipeline.frontierOf(spark.range(n).toDF()))
+    (frontier, FetchStage.run(spark, FetchStage.toTasks(spark, frontier)))
+  }
+
+  def run(spark: SparkSession, n: Long): Seq[Stage] = {
+    val (frontier, schedule) = stages(spark, n)
+    Seq(measure("frontier", frontier), measure("schedule", schedule.toDF()))
+  }
+
+  /** Runs `df` into the `noop` sink, counting its rows in the same pass. */
+  private def measure(name: String, df: DataFrame): Stage = {
+    val rows = Observation(name)
+    val t0 = System.nanoTime()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.format("noop").mode("overwrite").save()
+    Stage(name, rows.get("rows").asInstanceOf[Long], (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_N", "100000000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-frontier-scale")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", (cpus * 4).toString)
 
     @volatile var shuffleWrite = 0L
     @volatile var shuffleRead = 0L
@@ -43,42 +61,9 @@ object FrontierScale {
       }
     })
 
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[frontier-scale] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
+    run(spark, n).foreach { s =>
+      println(f"[frontier-scale] ${s.name}%-8s rows=${s.rows}%d ${s.seconds}%8.2f s")
     }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // the production pipeline's own seed shapes + codegen canonicalize
-    val frontier = spark.range(n).toDF("id")
-      .withColumn("url", graft.pipeline.CrawlPipeline.seedUrlCol(col("id")))
-      .withColumn("unit_path", graft.functions.CanonicalUnitPath(col("url")))
-      .filter(col("unit_path").isNotNull)
-      .withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
-      .withColumn("url_hash", graft.functions.UrlFunctions.urlHash(col("unit_path")))
-      .select("id", "unit_path", "hosting_id", "url_hash")
-
-    timed("canonicalize scan")(noop(frontier))
-
-    // first-wins dedup: ONE shuffle keyed on the unit path (hash agg)
-    val deduped = frontier
-      .groupBy("unit_path", "hosting_id")
-      .agg(min("id").as("first_seq"), count(lit(1)).as("n_aliases"))
-    timed("dedup aggregation")(noop(deduped))
-
-    // politeness schedule: per-host window over the deduped frontier
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("hosting_id")).orderBy(col("first_seq"))
-    val schedule = deduped
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .join(broadcast(graft.operators.CrawlOps.politenessDf(spark)), Seq("hosting_id"))
-      .withColumn("scheduled_ms", (col("pos") - 1) * col("min_interval_ms"))
-      .select("unit_path", "hosting_id", "pos", "scheduled_ms")
-    timed("politeness schedule")(noop(schedule))
-
     val heapMax = Runtime.getRuntime.maxMemory() / (1024.0 * 1024 * 1024)
     println(f"[frontier-scale] n=$n shuffle_write=${shuffleWrite / 1e9}%.2f GB " +
       f"shuffle_read=${shuffleRead / 1e9}%.2f GB disk_spill=${spillDisk / 1e9}%.2f GB " +

@@ -137,6 +137,23 @@ class CrawlPipelineSpec extends SparkTestBase {
     assert(okDups == 0, "duplicate ok rows in fetch_log after crash+resume")
   }
 
+  test("auto-compaction failure: the bloom update is awaited and the " +
+      "fetch-log cache released before the error surfaces") {
+    val root = freshRoot()
+    // a regular file where the summary table's directory goes: the first
+    // run's compaction fails creating it
+    Files.createFile(java.nio.file.Paths.get(s"$root/url_seen_summary"))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    intercept[java.io.IOException] {
+      CrawlPipeline.run(spark, storeDir, root, limit = Some(150L))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "fetch-log cache leaked")
+    val bloomDir = s"$root/${graft.frontier.SeenFilters.bloom.dirName}"
+    assert(graft.frontier.SeenFilters.bloom.filtersVersion(bloomDir) ==
+      CrawlPipeline.urlSeenStore(root).currentVersion)
+  }
+
   test("url_seen compaction: summary-first exclusion ≡ raw event-log fold " +
       "(both the summary-only and summary+delta merge paths)") {
     // big store so the never-succeeding error class (997) exists → the
