@@ -82,7 +82,7 @@ object Bench {
     // targeted invalidation (removeKeys → re-fetch of exactly those units),
     // the op the Bloom sketch cannot express.
     val seenKind = sys.env.getOrElse("SPARK_GRAFT_SEEN", "bloom")
-    val seenFilters = CrawlConfig.seenFiltersFor(seenKind)
+    val seenFilters = CrawlConfig(seenKind = seenKind).seenFilters
 
     // ---- query suite at the requested parallelism ----
     // SPARK_GRAFT_BENCH_ONLY=crawl skips the query suite (fast iteration on
@@ -220,7 +220,7 @@ object Bench {
     // op the north rule's "Bloom/cuckoo" naming earns its slash for):
     // full crawl kept on disk → removeKeys K resolved units → the next run
     // re-fetches exactly those units
-    val invalidation = if (seenKind != "cuckoo") "" else {
+    val invalidation = if (seenFilters != graft.frontier.SeenFilters.cuckoo) "" else {
       import org.apache.spark.sql.functions.col
       val (_, _, root) = crawlRun(scale4N, keepRoot = true)
       val sp = spark // stable identifier for the implicits import
@@ -236,7 +236,7 @@ object Bench {
       val keys = sp.createDataset(keyRows.toSeq).toDF("bucket", "url_hash")
       val t0 = System.nanoTime()
       val failed = graft.frontier.CuckooSeen.removeKeys(
-        spark, keys, "bucket", "url_hash", s"$root/cuckoo")
+        spark, keys, s"$root/${seenFilters.dirName}")
       val removeSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       // autoCompactAlpha = 0: the timed window must measure the targeted

@@ -1,6 +1,7 @@
 package graft
 
 import graft.fetch.FetchStage.Politeness
+import graft.frontier.{SeenFilterStore, SeenFilters}
 import graft.tables.Json
 
 /** Typed, validated crawl configuration — the engine twin of the
@@ -52,8 +53,7 @@ final case class CrawlConfig(
     hostRules ++ checkPoliteness("fallbackPoliteness", fallbackPoliteness) ++ Seq(
       Option.when(maxErrorRetries < 1 || maxErrorRetries > 100)(
         s"maxErrorRetries must be in [1, 100] (got $maxErrorRetries)"),
-      Option.when(!CrawlConfig.SeenKinds.contains(seenKind))(
-        s"seenKind must be one of ${CrawlConfig.SeenKinds.mkString("/")} (got '$seenKind')"),
+      Option.when(!SeenFilters.byName.contains(seenKind))(unknownSeenKind),
       Option.when(autoCompactAlpha < 0 || autoCompactAlpha.isNaN)(
         s"autoCompactAlpha must be >= 0 (got $autoCompactAlpha)")).flatten
   }
@@ -71,27 +71,20 @@ final case class CrawlConfig(
     * run the wrong filter; `validate` guards the same rule for callers
     * that check first).
     */
-  def seenFilters: graft.frontier.SeenFilterStore =
-    CrawlConfig.seenFiltersFor(seenKind)
+  def seenFilters: SeenFilterStore[_] =
+    SeenFilters.byName.getOrElse(seenKind, throw new IllegalArgumentException(unknownSeenKind))
+
+  private def unknownSeenKind: String =
+    s"seenKind must be one of ${SeenFilters.byName.keys.mkString("/")} (got '$seenKind')"
 }
 
 object CrawlConfig {
-  val SeenKinds: Set[String] = Set("bloom", "cuckoo")
-
   /** Bare lowercase hostname: dot-separated LDH labels (letters/digits/
     * hyphens, no leading/trailing hyphen, ≤ 63 chars each) — no scheme,
     * port, path, userinfo, or whitespace.
     */
   val HostnameRe: scala.util.matching.Regex =
     "^[a-z0-9](?:[a-z0-9-]{0,61}[a-z0-9])?(?:\\.[a-z0-9](?:[a-z0-9-]{0,61}[a-z0-9])?)*$".r
-
-  /** The one kind→store mapping (Bench and the config layer share it). */
-  def seenFiltersFor(kind: String): graft.frontier.SeenFilterStore = kind match {
-    case "bloom"  => graft.frontier.SeenFilters.bloom
-    case "cuckoo" => graft.frontier.SeenFilters.cuckoo
-    case other => throw new IllegalArgumentException(
-      s"seenKind must be one of ${SeenKinds.mkString("/")} (got '$other')")
-  }
 
   val default: CrawlConfig = CrawlConfig()
 

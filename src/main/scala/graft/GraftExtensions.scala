@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.frontier.BloomSeen
+import graft.frontier.{BloomCodec, SketchAgg}
 import graft.functions.CanonicalUnitPath
 
 /** Session extensions registering the engine's custom Catalyst pieces as
@@ -44,10 +44,10 @@ object GraftExtensions {
         s"bloom_filter_agg fpp must be a numeric literal, got $other")
     }
     children match {
-      case Seq(c) => BloomSeen.BloomFilterAgg(c, 1L << 20, 0.01)
-      case Seq(c, items) => BloomSeen.BloomFilterAgg(c, longArg(items, "items"), 0.01)
+      case Seq(c) => SketchAgg(c, BloomCodec(1L << 20, 0.01))
+      case Seq(c, items) => SketchAgg(c, BloomCodec(longArg(items, "items"), 0.01))
       case Seq(c, items, fpp) =>
-        BloomSeen.BloomFilterAgg(c, longArg(items, "items"), doubleArg(fpp))
+        SketchAgg(c, BloomCodec(longArg(items, "items"), doubleArg(fpp)))
       case _ => throw new IllegalArgumentException(
         "bloom_filter_agg(hash[, expectedItems[, fpp]])")
     }
@@ -59,7 +59,7 @@ object GraftExtensions {
         new ExpressionInfo(classOf[CanonicalUnitPath].getName, "canonical_unit_path"),
         canonicalUnitPathBuilder _),
       (FunctionIdentifier("bloom_filter_agg"),
-        new ExpressionInfo(classOf[BloomSeen.BloomFilterAgg].getName, "bloom_filter_agg"),
+        new ExpressionInfo(classOf[SketchAgg[_]].getName, "bloom_filter_agg"),
         bloomAggBuilder _))
 
   /** Register into an ALREADY-BUILT session (extensions normally apply at

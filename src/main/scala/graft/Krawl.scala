@@ -51,13 +51,21 @@ object Krawl {
     val statusCounts = log.groupBy("status").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val seenStore = CrawlPipeline.urlSeenStore(tableRoot)
+    val parentVersion = seenStore.currentVersion
     // same event-log schema as CrawlPipeline.run (one row per attempt,
     // run_seq + content_hash) so mixed commits stay union-compatible
-    seenStore.append(spark,
+    val snap = seenStore.append(spark,
       log.select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
         col("url_hash"), col("bucket"), col("content_hash"))
-        .withColumn("run_seq", lit(seenStore.currentVersion.getOrElse(-1L) + 1)),
+        .withColumn("run_seq", lit(parentVersion.getOrElse(-1L) + 1)),
       "bucket", statusCounts, clusterBeforeWrite = true)
+    // keep the seen filters current when they covered the parent commit;
+    // otherwise the next crawl run would rebuild every bucket from the
+    // whole url_seen log on the VERSION mismatch
+    val filters = c.seenFilters
+    val filterDir = s"$tableRoot/${filters.dirName}"
+    if (parentVersion.isDefined && filters.filtersVersion(filterDir) == parentVersion)
+      filters.update(spark, log.select(col("bucket"), col("url_hash")), filterDir, snap.version)
     // report: per input URL, its outcome (missing from store → not_in_store)
     parsed.join(log.select(col("unit_path"), col("status")), Seq("unit_path"), "left_outer")
       .withColumn("status",

@@ -1,21 +1,29 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Cuckoo twin of `BloomSeen` (SURVEY §2.11, J6; the north rule names
-  * "Bloom/cuckoo URL-seen filter" — both are first-class here): identical
-  * file-per-bucket layout, VERSION stamp, distributed build/merge, and
-  * per-task lazy residency — plus `removeKeys`, the capability Bloom
-  * structurally lacks. Deleting a unit's hash un-sees it in the sketch so
-  * the next run re-fetches it WITHOUT a full filter rebuild: targeted
-  * invalidation (re-crawl one host, one bucket, one recalled content set)
-  * at 10^10 scale touches only the affected buckets' files.
+/** `CuckooFilter` as a URL-seen sketch: the same no-false-negative contract
+  * as Bloom, plus deletion (see `CuckooSeen.removeKeys`).
+  */
+final case class CuckooCodec(expectedItems: Long) extends SketchCodec[CuckooFilter] {
+  def name: String = "cuckoo"
+  def create(): CuckooFilter = CuckooFilter.create(expectedItems)
+  // a false return means the filter saturated: it then answers true for
+  // every key, so the inserted key still cannot be a false negative
+  def insert(s: CuckooFilter, key: Long): Unit = { s.insert(key); () }
+  def merge(s: CuckooFilter, other: CuckooFilter): CuckooFilter = s.mergeInPlace(other)
+  def mightContain(s: CuckooFilter, key: Long): Boolean = s.mightContain(key)
+  def toBytes(s: CuckooFilter): Array[Byte] = s.serialized
+  def fromBytes(bytes: Array[Byte]): CuckooFilter = CuckooFilter.deserialize(bytes)
+}
+
+/** Targeted invalidation over the cuckoo store, the one operation Bloom
+  * structurally lacks. Deleting a unit's hash un-sees it in the sketch so the
+  * next run re-fetches it WITHOUT a full filter rebuild: re-crawling one host,
+  * one bucket or one recalled content set at 10^10 scale touches only the
+  * affected buckets' files.
   *
   * Invalidation semantics (see `CuckooFilter` doc): a deleted fingerprint
   * shared by a colliding key (~2⁻¹⁶ per bucket-pair) merely sends that key
@@ -25,236 +33,46 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   */
 object CuckooSeen {
 
-  /** Catalyst typed-imperative aggregate building a cuckoo filter over a
-    * LONG column — map-side partial filters, fingerprint-rehoming merge at
-    * the reducer (same shape as `BloomSeen.BloomFilterAgg`).
-    */
-  case class CuckooFilterAgg(
-      child: Expression,
-      expectedItems: Long,
-      override val mutableAggBufferOffset: Int = 0,
-      override val inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[CuckooFilter] with UnaryLike[Expression] {
-
-    override def createAggregationBuffer(): CuckooFilter =
-      CuckooFilter.create(expectedItems)
-
-    override def update(buffer: CuckooFilter, input: InternalRow): CuckooFilter = {
-      val v = child.eval(input)
-      if (v != null) buffer.insert(v.asInstanceOf[Long])
-      buffer
-    }
-
-    override def merge(buffer: CuckooFilter, other: CuckooFilter): CuckooFilter =
-      buffer.mergeInPlace(other)
-
-    override def eval(buffer: CuckooFilter): Any = buffer.serialized
-
-    override def serialize(buffer: CuckooFilter): Array[Byte] = buffer.serialized
-
-    override def deserialize(bytes: Array[Byte]): CuckooFilter =
-      CuckooFilter.deserialize(bytes)
-
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    override def prettyName: String = "cuckoo_filter_agg"
-
-    override def withNewMutableAggBufferOffset(offset: Int): CuckooFilterAgg =
-      copy(mutableAggBufferOffset = offset)
-    override def withNewInputAggBufferOffset(offset: Int): CuckooFilterAgg =
-      copy(inputAggBufferOffset = offset)
-    override protected def withNewChildInternal(newChild: Expression): CuckooFilterAgg =
-      copy(child = newChild)
-  }
-
-  def cuckooAgg(hashCol: Column, expectedItems: Long = 1L << 18): Column = {
-    import org.apache.spark.sql.graftbridge.{columnOf, expressionOf}
-    columnOf(CuckooFilterAgg(expressionOf(hashCol), expectedItems)
-      .toAggregateExpression())
-  }
-
-  private def bucketFile(dir: String, bucket: Long) =
-    java.nio.file.Paths.get(dir, s"bucket_$bucket.cuckoo")
-
-  def filtersVersion(dir: String): Option[Long] = BloomSeen.filtersVersion(dir)
-
-  private def writeAtomic(target: java.nio.file.Path, bytes: Array[Byte]): Unit = {
-    val tmp = target.resolveSibling(
-      target.getFileName.toString + s".tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.write(tmp, bytes)
-    java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def stampVersion(dir: String, version: Long): Unit = {
-    val vTmp = java.nio.file.Paths.get(dir, s"VERSION.tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(vTmp, version.toString)
-    java.nio.file.Files.move(vTmp, java.nio.file.Paths.get(dir, "VERSION"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Merge `keys` (bucketCol, hashCol) into the per-bucket filter files and
-    * stamp `version` — executor-side writes, nothing through the driver
-    * (mirror of `BloomSeen.updateBucketFilters`).
-    */
-  def updateBucketFilters(spark: SparkSession, keys: DataFrame,
-      bucketCol: String, hashCol: String, dir: String, version: Long,
-      expectedItemsPerBucket: Long = 1L << 18): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val aggregated = keys
-      .groupBy(col(bucketCol).cast("long").as("b"))
-      .agg(cuckooAgg(col(hashCol), expectedItemsPerBucket).as("cuckoo"))
-    aggregated.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      it.foreach { r =>
-        val bucket = r.getLong(0)
-        val fresh = CuckooFilter.deserialize(r.getAs[Array[Byte]]("cuckoo"))
-        val target = bucketFile(dir, bucket)
-        val merged =
-          if (java.nio.file.Files.exists(target)) {
-            val existing = CuckooFilter.deserialize(
-              java.nio.file.Files.readAllBytes(target))
-            existing.mergeInPlace(fresh)
-            existing
-          } else fresh
-        writeAtomic(target, merged.serialized)
-      }
-    }
-    stampVersion(dir, version)
-  }
-
-  /** Drop and rebuild from the full seen-key set (initial build; VERSION-
-    * mismatch crash recovery; the escape hatch for a saturated filter).
-    */
-  def rebuildBucketFilters(spark: SparkSession, allKeys: DataFrame,
-      bucketCol: String, hashCol: String, dir: String, version: Long,
-      expectedItemsPerBucket: Long = 1L << 18): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(p)
-      val entries = try s.iterator().asScala.toVector finally s.close()
-      entries.foreach(java.nio.file.Files.delete)
-    }
-    updateBucketFilters(spark, allKeys, bucketCol, hashCol, dir, version,
-      expectedItemsPerBucket)
-  }
-
-  /** Targeted invalidation — the Bloom-impossible op: delete `keys`
-    * (bucketCol, hashCol) from their buckets' filters so the next run
-    * re-fetches them. Executor-side, touches only the affected bucket
-    * files; the VERSION stamp is NOT advanced (the filters still cover the
-    * same url_seen snapshot — they now just under-approximate it, which is
-    * exactly the intent).
+  /** Delete `keys` (bucket, url_hash) from their buckets' filters under
+    * `dir`, executor-side. The VERSION stamp is NOT advanced: the filters
+    * still cover the same url_seen snapshot, they now just under-approximate
+    * it, which is exactly the intent.
     *
     * Returns the number of keys that could NOT be un-seen because their
-    * bucket's filter is SATURATED (lost slot fidelity, answers true for
-    * everything — deletion cannot take effect). A non-zero return means
-    * those buckets need a rebuild at larger sizing (minus the invalidated
-    * keys) before the re-fetch will happen; silently ignoring it would turn
-    * the documented "over-invalidation only" contract into silent
-    * under-invalidation. A key absent from a HEALTHY filter is NOT a
-    * failure: its lookup already answers false, so the re-fetch happens —
-    * the invalidation goal — whether or not a slot was removed.
+    * bucket's filter is SATURATED (answers true for everything, so deletion
+    * cannot take effect). A non-zero return means those buckets need a
+    * rebuild at larger sizing (minus the invalidated keys) before the
+    * re-fetch will happen; ignoring it would turn "over-invalidation only"
+    * into silent under-invalidation. A key absent from a HEALTHY filter is
+    * not a failure: its lookup already answers false, so the re-fetch
+    * happens whether or not a slot was removed.
     */
-  def removeKeys(spark: SparkSession, keys: DataFrame,
-      bucketCol: String, hashCol: String, dir: String): Long = {
+  def removeKeys(spark: SparkSession, keys: DataFrame, dir: String): Long = {
     import spark.implicits._
+    val store = SeenFilters.cuckoo
     val failed = spark.sparkContext.longAccumulator("cuckoo_remove_failed")
-    keys.select(col(bucketCol).cast("long"), col(hashCol).cast("long"))
+    keys.select(col("bucket").cast("long"), col("url_hash").cast("long"))
       .as[(Long, Long)]
-      .repartition(col(bucketCol))
+      .repartition(col("bucket"))
       .foreachPartition { (it: Iterator[(Long, Long)]) =>
-        val byBucket = it.toVector.groupBy(_._1)
-        byBucket.foreach { case (bucket, rows) =>
-          val target = bucketFile(dir, bucket)
-          if (java.nio.file.Files.exists(target)) {
-            val f = CuckooFilter.deserialize(java.nio.file.Files.readAllBytes(target))
+        it.toVector.groupBy(_._1).foreach { case (bucket, rows) =>
+          val target = store.bucketFile(dir, bucket)
+          // absent file = empty bucket: nothing to un-see, and the
+          // conservative might-contain already sends these keys to the
+          // exact anti-join — not a failure
+          if (Files.exists(target)) {
+            val f = store.load(target)
             if (f.saturated) failed.add(rows.size.toLong)
             else {
-              // delete() returning false here = key not present (never
-              // inserted, duplicate in `keys`, or fingerprint shared with
-              // an earlier delete) — already effectively un-seen, not a
-              // failure
+              // delete() returning false = key not present (never inserted,
+              // duplicate in `keys`, or fingerprint shared with an earlier
+              // delete): already un-seen, not a failure
               rows.foreach { case (_, h) => f.delete(h) }
-              writeAtomic(target, f.serialized)
+              SeenFilterStore.writeAtomic(target, f.serialized)
             }
           }
-          // absent file = empty bucket: nothing to un-see, and the
-          // conservative might-contain already sends these to the exact
-          // anti-join — not a failure
         }
       }
     failed.value
-  }
-
-  /** Per-task lazily-loading might-contain over the filter-file directory
-    * (mirror of `BloomSeen.MightContainFromFiles`; absent file = empty
-    * bucket under a version-consistent dir, and a missing filter keeps the
-    * conservative "might be seen" answer).
-    */
-  final class MightContainFromFiles(dir: String,
-      loadCounter: Option[org.apache.spark.util.LongAccumulator])
-      extends ((Long, Long) => Boolean) with Serializable {
-    @transient private lazy val cache =
-      scala.collection.mutable.Map.empty[Long, Option[CuckooFilter]]
-    def apply(bucket: Long, h: Long): Boolean = {
-      val f = cache.getOrElseUpdate(bucket, {
-        val p = bucketFile(dir, bucket)
-        if (java.nio.file.Files.exists(p)) {
-          loadCounter.foreach(_.add(1L))
-          Some(CuckooFilter.deserialize(java.nio.file.Files.readAllBytes(p)))
-        } else None
-      })
-      f.forall(_.mightContain(h))
-    }
-  }
-
-  def fileBucketPredicate(dir: String,
-      loadCounter: Option[org.apache.spark.util.LongAccumulator] = None): Column =
-    udf(new MightContainFromFiles(dir, loadCounter))
-      .apply(col("bucket").cast("long"), col("url_hash"))
-}
-
-/** Pluggable URL-seen sketch for the pipeline: same file-per-bucket
-  * protocol, selectable implementation (`SeenFilters.bloom` — the default —
-  * or `SeenFilters.cuckoo` when targeted invalidation is wanted). Each kind
-  * keeps its own directory under the table root, so switching kinds on an
-  * existing table simply triggers a fresh build of the new kind.
-  */
-sealed trait SeenFilterStore extends Serializable {
-  def dirName: String
-  def filtersVersion(dir: String): Option[Long]
-  def rebuild(spark: SparkSession, keys: DataFrame, bucketCol: String,
-      hashCol: String, dir: String, version: Long): Unit
-  def update(spark: SparkSession, keys: DataFrame, bucketCol: String,
-      hashCol: String, dir: String, version: Long): Unit
-  def predicate(dir: String): Column
-}
-
-object SeenFilters {
-  case object bloom extends SeenFilterStore {
-    val dirName = "bloom"
-    def filtersVersion(dir: String): Option[Long] = BloomSeen.filtersVersion(dir)
-    def rebuild(spark: SparkSession, keys: DataFrame, bucketCol: String,
-        hashCol: String, dir: String, version: Long): Unit =
-      BloomSeen.rebuildBucketFilters(spark, keys, bucketCol, hashCol, dir, version)
-    def update(spark: SparkSession, keys: DataFrame, bucketCol: String,
-        hashCol: String, dir: String, version: Long): Unit =
-      BloomSeen.updateBucketFilters(spark, keys, bucketCol, hashCol, dir, version)
-    def predicate(dir: String): Column = BloomSeen.fileBucketPredicate(dir)
-  }
-
-  case object cuckoo extends SeenFilterStore {
-    val dirName = "cuckoo"
-    def filtersVersion(dir: String): Option[Long] = CuckooSeen.filtersVersion(dir)
-    def rebuild(spark: SparkSession, keys: DataFrame, bucketCol: String,
-        hashCol: String, dir: String, version: Long): Unit =
-      CuckooSeen.rebuildBucketFilters(spark, keys, bucketCol, hashCol, dir, version)
-    def update(spark: SparkSession, keys: DataFrame, bucketCol: String,
-        hashCol: String, dir: String, version: Long): Unit =
-      CuckooSeen.updateBucketFilters(spark, keys, bucketCol, hashCol, dir, version)
-    def predicate(dir: String): Column = CuckooSeen.fileBucketPredicate(dir)
   }
 }

@@ -137,7 +137,7 @@ object CrawlOps {
   /** URL-seen anti-join (J6): drop units already fetched in a prior run.
     * The "seen" set here is the deterministic fixture subset (every 7th
     * part key); production path couples this with the per-partition Bloom
-    * pre-filter (graft.frontier.BloomSeen) so the exact anti-join only sees
+    * pre-filter (graft.frontier.SeenFilters) so the exact anti-join only sees
     * Bloom-positive candidates.
     */
   def urlSeenAnti(spark: SparkSession, sfDir: String): DataFrame = {

@@ -370,7 +370,7 @@ object CrawlPipeline {
     */
   def selectCandidates(spark: SparkSession, tableRoot: String,
       fullFrontier: DataFrame, seenOpt: Option[DataFrame],
-      seenFilters: graft.frontier.SeenFilterStore,
+      seenFilters: graft.frontier.SeenFilterStore[_],
       maxErrorRetries: Int = MaxErrorRetries): DataFrame = seenOpt match {
     case None => fullFrontier
     case Some(seenDf) =>
@@ -414,7 +414,7 @@ object CrawlPipeline {
       // default; cuckoo adds targeted invalidation (CuckooSeen.removeKeys).
       // Each kind owns its directory, so switching kinds on an existing
       // table root just builds the new kind fresh.
-      seenFilters: graft.frontier.SeenFilterStore = graft.frontier.SeenFilters.bloom,
+      seenFilters: graft.frontier.SeenFilterStore[_] = graft.frontier.SeenFilters.bloom,
       // self-triggering table maintenance (reference parity: the state
       // rewrite happens on every store, fetcher_state.py:26-51): compact
       // the url_seen event log into the resolved summary whenever the
@@ -460,8 +460,7 @@ object CrawlPipeline {
         // crash between url_seen commit and filter update (or first read
         // of a pre-existing table): rebuild so filters can't be stale
         seenFilters.rebuild(spark,
-          seenDf.select(col("bucket"), col("url_hash")),
-          "bucket", "url_hash", bloomDir, curV)
+          seenDf.select(col("bucket"), col("url_hash")), bloomDir, curV)
       }
     }
     val candidates =
@@ -631,8 +630,7 @@ object CrawlPipeline {
     // concurrent jobs — the serial tail of every run shrinks by the
     // smaller of the two.
     val bloomF = Future(seenFilters.update(spark,
-      seenRows.select(col("bucket"), col("url_hash")),
-      "bucket", "url_hash", bloomDir, snap.version))
+      seenRows.select(col("bucket"), col("url_hash")), bloomDir, snap.version))
 
     // auto-compaction policy: events appended since the summary's covered
     // version, counted from snapshot-manifest metrics alone (no table

@@ -27,7 +27,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     val filters = spark.sql(
       "SELECT bucket, bloom_filter_agg(h, 4096, 0.01) AS bloom FROM seen_keys GROUP BY bucket")
       .collect()
-      .map(r => r.getLong(0) -> graft.frontier.BloomSeen.deserialize(r.getAs[Array[Byte]](1)))
+      .map(r => r.getLong(0) -> graft.frontier.SeenFilters.bloom.codec.fromBytes(r.getAs[Array[Byte]](1)))
       .toMap
     assert(filters.size == 4)
     (1L to 1000L).foreach(i =>

@@ -35,6 +35,22 @@ class KrawlSpec extends SparkTestBase {
     assert(seen == Set("thingiverse.com/0/7", "thingiverse.com/0/14"))
   }
 
+  test("fetch url after a crawl run: the seen filters follow the url_seen commit " +
+      "(no VERSION mismatch, so the next run does not rebuild them)") {
+    import graft.frontier.SeenFilters
+    import graft.pipeline.CrawlPipeline
+    val storeDir = Files.createTempDirectory("graft-krawl-store").toString
+    SyntheticStore.ensureOnDisk(spark, storeDir, 60)
+    val root = Files.createTempDirectory("graft-krawl-tables").toString
+    CrawlPipeline.run(spark, storeDir, root, limit = Some(20L))
+    Krawl.fetchUrls(spark, Seq("https://www.thingiverse.com/thing:49"), storeDir, root)
+    val seen = CrawlPipeline.urlSeenStore(root)
+    val dir = s"$root/${SeenFilters.bloom.dirName}"
+    assert(SeenFilters.bloom.filtersVersion(dir) == seen.currentVersion)
+    // every committed key, the fetched one included, passes the filters
+    assert(seen.read(spark).get.filter(!SeenFilters.bloom.predicate(dir)).isEmpty)
+  }
+
   test("convert: manifest → normalized → TOML + canonical JSON emissions (§3.3)") {
     val toml =
       """okhv = "OKH-LOSHv1.0"

@@ -381,7 +381,7 @@ class CrawlPipelineSpec extends SparkTestBase {
     val keys = CrawlPipeline.urlSeenStore(rootB).read(spark).get
       .filter(col("unit_path").isin(paths: _*))
       .select("bucket", "url_hash").distinct()
-    CuckooSeen.removeKeys(spark, keys, "bucket", "url_hash", s"$rootB/cuckoo")
+    CuckooSeen.removeKeys(spark, keys, s"$rootB/cuckoo")
     val s3 = CrawlPipeline.run(spark, storeDir, rootB, seenFilters = SeenFilters.cuckoo)
     assert(s3.ok == 10L, s"invalidation re-fetched ${s3.ok}, expected 10")
     // the re-visits are recorded as new events (visits=2, no change)
