@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.fetch.FetchStage
 import graft.functions.UrlFunctions
 import graft.model.HostingId
 import graft.normalize.Normalizers
@@ -24,10 +23,12 @@ object Krawl {
     */
   def listFetchers: Seq[String] = HostingId.all.map(_.id)
 
-  /** `krawl fetch url <url…>` (§3.1): canonicalize the given URLs, restrict
-    * the frontier to exactly those units, run the full fetch→normalize→
-    * commit pipeline against the local store. Unknown-platform URLs surface
-    * as parse_error rows in the returned frame, mirroring the reference's
+  /** `krawl fetch url <url…>` (§3.1): canonicalize the given URLs and run
+    * the one crawl path (`CrawlPipeline.runConfigured`) scoped to exactly
+    * those units, re-visiting them even when already resolved — so the
+    * payload sinks, the seen filters and the compaction follow the same
+    * commits as a platform crawl. Unknown-platform URLs surface as
+    * parse_error rows in the returned frame, mirroring the reference's
     * per-URL error reporting (url.py:110-112 exit code = failures).
     */
   def fetchUrls(spark: SparkSession, urls: Seq[String], storeDir: String,
@@ -37,37 +38,22 @@ object Krawl {
       // every violation listed when invalid
       config: CrawlConfig = CrawlConfig.default): DataFrame = {
     import spark.implicits._
-    val c = config.validated
     val parsed = urls.toDF("url")
       .withColumn("canon", UrlFunctions.canonicalize(col("url")))
       .select(col("url"), col("canon.unit_path").as("unit_path"),
         col("canon.parse_error").as("parse_error"))
-    val wanted = parsed.filter(col("parse_error").isNull).select("unit_path")
-
-    val frontier = CrawlPipeline.robotsAllowed(CrawlPipeline.frontier(spark, storeDir))
-      .join(broadcast(wanted), Seq("unit_path"), "left_semi")
-    val log = FetchStage.run(spark, FetchStage.toTasks(spark, frontier),
-      politeness = c.politeness, fallback = c.fallbackPoliteness)
-    val statusCounts = log.groupBy("status").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val seenStore = CrawlPipeline.urlSeenStore(tableRoot)
-    val parentVersion = seenStore.currentVersion
-    // same event-log schema as CrawlPipeline.run (one row per attempt,
-    // run_seq + content_hash) so mixed commits stay union-compatible
-    val snap = seenStore.append(spark,
-      log.select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
-        col("url_hash"), col("bucket"), col("content_hash"))
-        .withColumn("run_seq", lit(parentVersion.getOrElse(-1L) + 1)),
-      "bucket", statusCounts, clusterBeforeWrite = true)
-    // keep the seen filters current when they covered the parent commit;
-    // otherwise the next crawl run would rebuild every bucket from the
-    // whole url_seen log on the VERSION mismatch
-    val filters = c.seenFilters
-    val filterDir = s"$tableRoot/${filters.dirName}"
-    if (parentVersion.isDefined && filters.filtersVersion(filterDir) == parentVersion)
-      filters.update(spark, log.select(col("bucket"), col("url_hash")), filterDir, snap.version)
+    // sorted: the scope is part of the run's resume key, so the same URLs
+    // must give the same predicate
+    val paths = parsed.filter(col("parse_error").isNull)
+      .select("unit_path").distinct().as[String].collect().sorted
+    val summary = CrawlPipeline.runConfigured(spark, storeDir, tableRoot, config,
+      limit = Some(paths.length.toLong), revisit = true,
+      scope = col("unit_path").isin(paths.toSeq: _*))
+    val fetched = CrawlPipeline.urlSeenStore(tableRoot).readAt(spark, summary.version)
+      .map(_.filter(col("run_seq") === summary.version).select("unit_path", "status"))
+      .getOrElse(Seq.empty[(String, String)].toDF("unit_path", "status"))
     // report: per input URL, its outcome (missing from store → not_in_store)
-    parsed.join(log.select(col("unit_path"), col("status")), Seq("unit_path"), "left_outer")
+    parsed.join(fetched, Seq("unit_path"), "left_outer")
       .withColumn("status",
         coalesce(col("status"),
           when(col("parse_error").isNotNull, concat(lit("parse_error: "), col("parse_error")))

@@ -220,7 +220,8 @@ object KrawlCli {
           // (fetcher.py:84-86) — restrict the frontier accordingly, so the
           // summary lines below report this fetcher's counts, not the store's
           val summary = graft.pipeline.CrawlPipeline.runConfigured(
-            spark, store, root, cfg, hostingFilter = Some(f.hostingId))
+            spark, store, root, cfg,
+            scope = org.apache.spark.sql.functions.col("hosting_id") === f.hostingId)
           val lines = Seq(
             s"attempted: ${summary.attempted}", s"ok: ${summary.ok}",
             s"not_found: ${summary.notFound}", s"error: ${summary.error}",

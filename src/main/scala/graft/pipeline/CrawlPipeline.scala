@@ -175,10 +175,6 @@ object CrawlPipeline {
       .otherwise(concat(lit("https://www.thingiverse.com/thing:"), id))
   }
 
-  /** Frontier from the synthetic store dir: one URL per store row (the
-    * store's image_id encodes the payload id; the platform family comes
-    * from the id residue). Seeds are (url, seq=id).
-    */
   /** The lightweight key projection of a payload store (guide §8: every
     * decision pass reads small rows; only the decode/join stage touches
     * payload bytes). Written by `ensureBucketedStore` as part of the same
@@ -191,6 +187,10 @@ object CrawlPipeline {
   def storeKeysDir(storeDir: String): String =
     storeDir.stripSuffix("/") + "_keys"
 
+  /** Frontier from the synthetic store dir: one URL per store row (the
+    * store's image_id encodes the payload id; the platform family comes
+    * from the id residue). Seeds are (url, seq=id).
+    */
   def frontier(spark: SparkSession, storeDir: String): DataFrame = {
     val keysDir = storeKeysDir(storeDir)
     val src =
@@ -253,6 +253,16 @@ object CrawlPipeline {
       !graft.model.Robots.allowedCol(df.sparkSession, robotsTxtByHost,
         col("hosting_id"), regexp_replace(col("url"), "^https?://[^/]+", "")))
 
+  /** Catalog table name for a bucketed store dir: a 128-bit SHA-256 prefix
+    * of the full path (dir.hashCode is 32-bit — two distinct store dirs
+    * colliding would silently join the wrong payload bytes).
+    */
+  def storeTableName(dir: String): String = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
+    s"graft_store_b$digest"
+  }
+
   /** One-time ingest of the payload store into an id-bucketed table — the
     * shared storage layout that makes the payload join storage-partitioned.
     *
@@ -264,16 +274,6 @@ object CrawlPipeline {
     * files across sessions (re-registering the external table when a fresh
     * catalog doesn't know it yet).
     */
-  /** Catalog table name for a bucketed store dir: a 128-bit SHA-256 prefix
-    * of the full path (dir.hashCode is 32-bit — two distinct store dirs
-    * colliding would silently join the wrong payload bytes).
-    */
-  def storeTableName(dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
-    s"graft_store_b$digest"
-  }
-
   def ensureBucketedStore(spark: SparkSession, storeDir: String): String = {
     val dir = storeDir.stripSuffix("/") + "_bucketed"
     val tbl = storeTableName(dir)
@@ -339,10 +339,6 @@ object CrawlPipeline {
       store.join(fetched.hint("shuffle_hash"), Seq("id"))
   }
 
-  /** One crawl run: process up to `limit` frontier units not yet in
-    * url_seen, commit snapshots, return counters. Re-invoking continues
-    * from the committed snapshot (resume, R6).
-    */
   /** The OKH manifest the synthetic transport delivers per store id (the
     * TOML twin of SyntheticStore's image payload).
     */
@@ -402,6 +398,10 @@ object CrawlPipeline {
         maybeSeen.join(resolved, Seq("unit_path"), "left_anti"))
   }
 
+  /** One crawl run: process up to `limit` frontier units not yet in
+    * url_seen, commit snapshots, return counters. Re-invoking continues
+    * from the committed snapshot (resume, R6).
+    */
   def run(spark: SparkSession, storeDir: String, tableRoot: String,
       limit: Option[Long] = None,
       salts: Map[String, Int] = Map.empty,
@@ -427,18 +427,18 @@ object CrawlPipeline {
       politenessBase: Map[String, FetchStage.Politeness] = FetchStage.defaultPoliteness,
       fallbackPoliteness: FetchStage.Politeness = FetchStage.FallbackPoliteness,
       maxErrorRetries: Int = MaxErrorRetries,
-      // restrict the run to ONE hosting family (the reference's
-      // FetcherXCommand fetches only the named hosting, fetcher.py:84-86);
-      // None = the whole frontier
-      hostingFilter: Option[String] = None
+      // frontier rows this run may fetch: `krawl fetch <hosting>` passes
+      // `col("hosting_id") === h` (the reference's FetcherXCommand fetches
+      // only the named hosting, fetcher.py:84-86), `krawl fetch url` the
+      // given unit paths. The default is the whole frontier; the optimizer
+      // drops the always-true filter, so full-run plans are unchanged
+      scope: Column = lit(true)
       ): RunSummary = {
     import spark.implicits._
 
     val seen = urlSeenStore(tableRoot)
     val bloomDir = s"$tableRoot/${seenFilters.dirName}"
-    val fullFrontier = hostingFilter.foldLeft(
-      robotsAllowed(frontier(spark, storeDir), robotsTxt))(
-      (f, h) => f.filter(col("hosting_id") === h))
+    val fullFrontier = robotsAllowed(frontier(spark, storeDir), robotsTxt).filter(scope)
 
     // URL-seen anti-join with per-bucket Bloom pre-filter (no false
     // negatives by construction; exact anti-join on unit_path settles the
@@ -486,60 +486,53 @@ object CrawlPipeline {
     val tasks = FetchStage.toTasks(spark, sliced)
     val log = FetchStage.run(spark, tasks, politeness = politeness,
       salts = salts, fallback = fallbackPoliteness).cache()
+    try {
+      // normalize + invariants for fetched units: attach the store payload
+      // (broadcast for bounded slices, storage-partitioned at limit=None —
+      // see payloadJoin)
+      val fetched = log.filter(col("status") === "ok")
+        .select(col("unit_path"), col("id"), col("pos"), col("scheduled_ms"))
+      val results = payloadJoin(spark, storeDir, fetched, limit)
+        .withColumn("caption", TextNormalize.normalizeCaptionUdf(col("caption")))
+        .withColumn("phash_check", ImageFunctions.phash64(col("bytes")))
+        .withColumn("id_group", (col("id") / 10000).cast("long"))
+        .select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt"),
+          col("caption"), col("phash"), col("phash_check"), col("unit_path"),
+          col("id_group"))
 
-    // normalize + invariants for fetched units: attach the store payload
-    // (broadcast for bounded slices, storage-partitioned at limit=None —
-    // see payloadJoin)
-    val fetched = log.filter(col("status") === "ok")
-      .select(col("unit_path"), col("id"), col("pos"), col("scheduled_ms"))
-    val results = payloadJoin(spark, storeDir, fetched, limit)
-      .withColumn("caption", TextNormalize.normalizeCaptionUdf(col("caption")))
-      .withColumn("phash_check", ImageFunctions.phash64(col("bytes")))
-      .withColumn("id_group", (col("id") / 10000).cast("long"))
-      .select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt"),
-        col("caption"), col("phash"), col("phash_check"), col("unit_path"),
-        col("id_group"))
+      val statusCounts = log.groupBy("status").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-    val statusCounts = log.groupBy("status").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nDenied = statusCounts.getOrElse("robots_denied", 0L)
-
-    // commits (order matters for crash safety: payload sinks before the
-    // url_seen commit that makes units invisible to the next run). Resume
-    // idempotency: the slice is a deterministic function of the committed
-    // url_seen version (same store + same seen state → same candidate
-    // slice), so each payload commit is tagged with slice_id = that
-    // version. A crash between the payload commits and the url_seen commit
-    // re-runs the same slice — and any payload append whose store already
-    // carries this slice_id is SKIPPED instead of appended twice.
-    // results and fetch_log are independent tables → submit their write
-    // jobs concurrently (Spark schedules parallel jobs from threads)
-    val sliceId = seen.currentVersion.getOrElse(-1L)
-    val rStore = resultsStore(tableRoot)
-    val lStore = fetchLogStore(tableRoot)
-    def alreadyCommitted(s: SnapshotStore): Option[SnapshotStore#Snapshot] =
-      s.currentSnapshot.filter(_.metrics.get("slice_id").contains(sliceId))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val resultsF = Future(alreadyCommitted(rStore).getOrElse(
-      rStore.append(spark, results, "id_group", Map("slice_id" -> sliceId))))
-    val fetchLogF = Future(alreadyCommitted(lStore).getOrElse(
-      lStore.append(spark, log.toDF(), "hosting_id",
-        statusCounts.updated("slice_id", sliceId), clusterBeforeWrite = true)))
-    // S10: 3-graph RDF sink — the FULL normalize→TOML→RDF chain per fetched
-    // unit, mirroring the reference's NormalizationListener
-    // (fetcher/factory.py:49-59): the delivered manifest payload runs
-    // through Normalizers.manifest, the normalized project serializes to
-    // the empty-stripped manifest TOML (toml_serializer.py:88-110) stored
-    // on normalized_toml, then RdfSerializer emits the three turtle graphs
-    // (normalized.okh_toml carries the deflate+base64 TOML,
-    // rdf_serializer.py:827-832). Everything after the normalize transform
-    // is one typed map — pure per-row serialization, no shuffle — committed
-    // with the same slice_id idempotency.
-    val projectsF = if (!rdfSink) None else Some {
-      val pStore = projectsStore(tableRoot)
-      Future(alreadyCommitted(pStore).getOrElse {
+      // commits (order matters for crash safety: payload sinks before the
+      // url_seen commit that makes units invisible to the next run). Resume
+      // idempotency: the slice is a deterministic function of the committed
+      // url_seen version and the selecting arguments (store, scope, revisit,
+      // limit), so each payload commit is tagged with both: slice_id = that
+      // version, slice_key = a hash of the arguments. A crash between the
+      // payload commits and the url_seen commit re-runs the same slice, and
+      // any payload append whose store already carries this tag is SKIPPED
+      // instead of appended twice; a run with another scope at the same
+      // version appends. The sinks are independent tables → their write jobs
+      // run concurrently (Spark schedules parallel jobs from threads)
+      val sliceId = seen.currentVersion.getOrElse(-1L)
+      val sliceKey = java.nio.ByteBuffer.wrap(
+        java.security.MessageDigest.getInstance("SHA-256")
+          .digest(s"$storeDir|$scope|$revisit|$limit".getBytes("UTF-8"))).getLong
+      val sliceTag = Map("slice_id" -> sliceId, "slice_key" -> sliceKey)
+      def once(s: SnapshotStore)(append: SnapshotStore => SnapshotStore#Snapshot) = () =>
+        s.currentSnapshot.filter(snap => sliceTag.toSet.subsetOf(snap.metrics.toSet))
+          .getOrElse(append(s))
+      // S10: 3-graph RDF sink — the FULL normalize→TOML→RDF chain per fetched
+      // unit, mirroring the reference's NormalizationListener
+      // (fetcher/factory.py:49-59): the delivered manifest payload runs
+      // through Normalizers.manifest, the normalized project serializes to
+      // the empty-stripped manifest TOML (toml_serializer.py:88-110) stored
+      // on normalized_toml, then RdfSerializer emits the three turtle graphs
+      // (normalized.okh_toml carries the deflate+base64 TOML,
+      // rdf_serializer.py:827-832). Everything after the normalize transform
+      // is one typed map — pure per-row serialization, no shuffle — committed
+      // with the same slice-tag idempotency.
+      val projectsSink = Option.when(rdfSink)(once(projectsStore(tableRoot)) { pStore =>
         // the manifest the platform delivers for a unit: deterministic
         // function of the store id (the fixture transport's payload twin,
         // like SyntheticStore for the image bytes)
@@ -582,15 +575,12 @@ object CrawlPipeline {
           (unitPath, d.normalized_okh_toml_ttl, d.meta_ttl, d.data_okh_ttl, idGroup)
         }.toDF("project_id", "normalized_okh_toml_ttl", "meta_ttl",
           "data_okh_ttl", "id_group")
-        pStore.append(spark, docs, "id_group", Map("slice_id" -> sliceId))
+        pStore.append(spark, docs, "id_group", sliceTag)
       })
-    }
-    // S9 raw sink: data-set metadata as canonical JSON + the original
-    // payload bytes, straight from the result rows (to_json is builtin —
-    // no UDF; bytes ride in the same partition layout as results)
-    val rawF = if (!rawSink) None else Some {
-      val store9 = rawStore(tableRoot)
-      Future(alreadyCommitted(store9).getOrElse {
+      // S9 raw sink: data-set metadata as canonical JSON + the original
+      // payload bytes, straight from the result rows (to_json is builtin —
+      // no UDF; bytes ride in the same partition layout as results)
+      val rawSinkTask = Option.when(rawSink)(once(rawStore(tableRoot)) { store9 =>
         val raw = results.select(
           col("unit_path"),
           to_json(struct(
@@ -601,43 +591,34 @@ object CrawlPipeline {
             col("phash").as("content_hash"),
             lit(sliceId + 1).as("run_seq"))).as("meta_json"),
           col("bytes").as("orig"), col("fmt"), col("id_group"))
-        store9.append(spark, raw, "id_group", Map("slice_id" -> sliceId))
+        store9.append(spark, raw, "id_group", sliceTag)
       })
-    }
-    val resultsSnap = Await.result(resultsF, Duration.Inf)
-    Await.result(fetchLogF, Duration.Inf)
-    projectsF.foreach(Await.result(_, Duration.Inf))
-    rawF.foreach(Await.result(_, Duration.Inf))
-    val resultRows = resultsSnap.metrics("commit_rows")
+      val sinkSnaps = awaitAll(Seq(
+        once(resultsStore(tableRoot))(_.append(spark, results, "id_group", sliceTag)),
+        once(fetchLogStore(tableRoot))(_.append(spark, log.toDF(), "hosting_id",
+          statusCounts ++ sliceTag, clusterBeforeWrite = true))) ++
+        projectsSink ++ rawSinkTask)
+      val resultRows = sinkSnaps.head.metrics("commit_rows")
 
-    if (crashBeforeSeenCommit)
-      throw new RuntimeException("injected crash between payload and url_seen commits")
+      if (crashBeforeSeenCommit)
+        throw new RuntimeException("injected crash between payload and url_seen commits")
 
-    // url_hash/bucket/content_hash rode through the fetch stage — no
-    // re-join needed. EVERY attempt is recorded (CrawlingMeta event log):
-    // errors accumulate a retry count and stop being selected after
-    // MaxErrorRetries; re-visits accumulate visit/change counters.
-    val seenRows = log
-      .select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
-        col("url_hash"), col("bucket"), col("content_hash"))
-      .withColumn("run_seq", lit(sliceId + 1))
-    val snap = seen.append(spark, seenRows,
-      "bucket", statusCounts, clusterBeforeWrite = true)
-    // the filter merge and the compaction below are independent post-commit
-    // maintenance on disjoint state (per-bucket filter files vs the summary
-    // table), each crash-safe on its own (a lost filter stamp → reconcile
-    // rebuild next run; a lost summary → next compaction), so they run as
-    // concurrent jobs — the serial tail of every run shrinks by the
-    // smaller of the two.
-    val bloomF = Future(seenFilters.update(spark,
-      seenRows.select(col("bucket"), col("url_hash")), bloomDir, snap.version))
+      // url_hash/bucket/content_hash rode through the fetch stage — no
+      // re-join needed. EVERY attempt is recorded (CrawlingMeta event log):
+      // errors accumulate a retry count and stop being selected after
+      // MaxErrorRetries; re-visits accumulate visit/change counters.
+      val seenRows = log
+        .select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
+          col("url_hash"), col("bucket"), col("content_hash"))
+        .withColumn("run_seq", lit(sliceId + 1))
+      val snap = seen.append(spark, seenRows,
+        "bucket", statusCounts, clusterBeforeWrite = true)
 
-    // auto-compaction policy: events appended since the summary's covered
-    // version, counted from snapshot-manifest metrics alone (no table
-    // scan — one small JSON per commit since the last compaction, a count
-    // the policy itself keeps bounded)
-    val compacted = scala.util.Try {
-      if (autoCompactAlpha > 0) {
+      // auto-compaction policy: events appended since the summary's covered
+      // version, counted from snapshot-manifest metrics alone (no table
+      // scan — one small JSON per commit since the last compaction, a count
+      // the policy itself keeps bounded)
+      def autoCompact(): Unit = if (autoCompactAlpha > 0) {
         val summarySnap = urlSeenSummaryStore(tableRoot).currentSnapshot
         val covered = summarySnap.flatMap(_.metrics.get("covered_version")).getOrElse(-1L)
         val summaryRows = summarySnap.map(_.files.map(_.rows).sum).getOrElse(0L)
@@ -668,23 +649,42 @@ object CrawlPipeline {
           }
         }
       }
+      // the filter merge and the compaction are independent post-commit
+      // maintenance on disjoint state (per-bucket filter files vs the summary
+      // table), each crash-safe on its own (a lost filter stamp → reconcile
+      // rebuild next run; a lost summary → next compaction), so they run as
+      // concurrent jobs — the serial tail of every run shrinks by the
+      // smaller of the two. A compaction error surfaces with any filter
+      // error attached.
+      awaitAll(Seq(() => autoCompact(), () => seenFilters.update(spark,
+        seenRows.select(col("bucket"), col("url_hash")), bloomDir, snap.version)))
+      RunSummary(
+        version = snap.version,
+        attempted = statusCounts.values.sum,
+        ok = statusCounts.getOrElse("ok", 0L),
+        notFound = statusCounts.getOrElse("not_found", 0L),
+        error = statusCounts.getOrElse("error", 0L),
+        robotsDenied = statusCounts.getOrElse("robots_denied", 0L),
+        resultRows = resultRows)
+    } finally log.unpersist()
+  }
+
+  /** Run `tasks` concurrently and wait for every one of them. The first
+    * failure in task order is rethrown with the later ones attached as
+    * suppressed, so a failed task never leaves the others running detached.
+    */
+  private def awaitAll[A](tasks: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val started = tasks.map(t => Future(t()))
+    val done = started.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+    val errors = done.collect { case scala.util.Failure(e) => e }
+    for (first <- errors.headOption) {
+      errors.tail.foreach(first.addSuppressed)
+      throw first
     }
-    // the bloom job and the fetch-log cache outlive a failed compaction
-    // unless both are settled here: await the bloom, then unpersist, then
-    // rethrow the compaction error with any bloom error attached
-    val bloomed = scala.util.Try(Await.result(bloomF, Duration.Inf))
-    log.unpersist()
-    for (c <- compacted.failed; b <- bloomed.failed) c.addSuppressed(b)
-    compacted.get
-    bloomed.get
-    RunSummary(
-      version = snap.version,
-      attempted = statusCounts.values.sum,
-      ok = statusCounts.getOrElse("ok", 0L),
-      notFound = statusCounts.getOrElse("not_found", 0L),
-      error = statusCounts.getOrElse("error", 0L),
-      robotsDenied = nDenied,
-      resultRows = resultRows)
+    done.map(_.get)
   }
 
   /** Config-driven run: every knob from a VALIDATED `CrawlConfig` (the
@@ -692,6 +692,7 @@ object CrawlPipeline {
     * budgets, retry bounds, sketch kind, sink toggles, and the compaction
     * policy all come from user config instead of code constants. Throws on
     * an invalid config with every violation listed, before any job runs.
+    * `scope` restricts the frontier as in `run`.
     */
   def runConfigured(spark: SparkSession, storeDir: String, tableRoot: String,
       config: graft.CrawlConfig,
@@ -699,7 +700,7 @@ object CrawlPipeline {
       salts: Map[String, Int] = Map.empty,
       revisit: Boolean = false,
       robotsTxt: Map[String, String] = Map.empty,
-      hostingFilter: Option[String] = None): RunSummary = {
+      scope: Column = lit(true)): RunSummary = {
     val c = config.validated
     run(spark, storeDir, tableRoot, limit, salts,
       rdfSink = c.rdfSink, rawSink = c.rawSink, revisit = revisit,
@@ -708,7 +709,7 @@ object CrawlPipeline {
       politenessBase = c.politeness,
       fallbackPoliteness = c.fallbackPoliteness,
       maxErrorRetries = c.maxErrorRetries,
-      hostingFilter = hostingFilter)
+      scope = scope)
   }
 
   /** Scope a `--start-over` reset to ONE hosting family (the reference

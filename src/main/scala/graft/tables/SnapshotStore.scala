@@ -161,13 +161,12 @@ final class SnapshotStore(val root: String) {
 
   /** Append `df` as a new commit. `partitionCol` drives both the on-disk
     * layout (`partitionBy`) and the per-partition lineage counts. Returns the
-    * committed snapshot.
-    */
-  /** `clusterBeforeWrite`: shuffle rows onto their partition key before the
-    * write. Worth it for small-row tables whose key is hash-random (every
-    * task would otherwise open a file per partition value — file-open
-    * overhead dwarfs the data); wrong for payload tables whose input order
-    * is already aligned with the key (a shuffle would move the heavy bytes).
+    * committed snapshot. `clusterBeforeWrite`: shuffle rows onto their
+    * partition key before the write. Worth it for small-row tables whose key
+    * is hash-random (every task would otherwise open a file per partition
+    * value — file-open overhead dwarfs the data); wrong for payload tables
+    * whose input order is already aligned with the key (a shuffle would move
+    * the heavy bytes).
     */
   def append(spark: SparkSession, df: DataFrame, partitionCol: String,
       metrics: Map[String, Long] = Map.empty,

@@ -51,6 +51,24 @@ class KrawlSpec extends SparkTestBase {
     assert(seen.read(spark).get.filter(!SeenFilters.bloom.predicate(dir)).isEmpty)
   }
 
+  test("fetch url then crawl: every ok unit lands in results exactly once") {
+    import graft.pipeline.CrawlPipeline
+    val storeDir = Files.createTempDirectory("graft-krawl-store").toString
+    SyntheticStore.ensureOnDisk(spark, storeDir, 60)
+    val root = Files.createTempDirectory("graft-krawl-tables").toString
+    Krawl.fetchUrls(spark, Seq("https://www.thingiverse.com/thing:7",
+      "https://www.thingiverse.com/thing:14"), storeDir, root)
+    CrawlPipeline.run(spark, storeDir, root)
+    val ok = CrawlPipeline.urlSeenStore(root).read(spark).get
+      .filter(col("status") === "ok").select("unit_path").as[String].collect().toSet
+    assert(Set("thingiverse.com/0/7", "thingiverse.com/0/14").subsetOf(ok))
+    val results = CrawlPipeline.resultsStore(root).read(spark).get
+    val perUnit = results.groupBy("unit_path").count().as[(String, Long)].collect().toMap
+    assert(perUnit == ok.map(_ -> 1L).toMap,
+      s"missing: ${ok -- perUnit.keySet}, repeated: ${perUnit.filter(_._2 > 1)}")
+    assert(results.filter(col("phash_check") =!= col("phash")).isEmpty)
+  }
+
   test("convert: manifest → normalized → TOML + canonical JSON emissions (§3.3)") {
     val toml =
       """okhv = "OKH-LOSHv1.0"

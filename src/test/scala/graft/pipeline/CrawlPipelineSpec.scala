@@ -154,6 +154,43 @@ class CrawlPipelineSpec extends SparkTestBase {
       CrawlPipeline.urlSeenStore(root).currentVersion)
   }
 
+  test("sink failure: every sink write is awaited and the fetch-log cache " +
+      "released before the error surfaces; url_seen is not committed") {
+    val root = freshRoot()
+    // a regular file where the results table's directory goes: the results
+    // append fails while the fetch_log append runs beside it
+    Files.createFile(java.nio.file.Paths.get(s"$root/results"))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    intercept[java.io.IOException] {
+      CrawlPipeline.run(spark, storeDir, root, limit = Some(150L))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "fetch-log cache leaked")
+    assert(CrawlPipeline.fetchLogStore(root).currentVersion.isDefined,
+      "the fetch_log append was left running")
+    assert(CrawlPipeline.urlSeenStore(root).currentVersion.isEmpty)
+  }
+
+  test("crash in a scoped run, then a run with another scope: its payload " +
+      "appends are not skipped as already committed") {
+    val root = freshRoot()
+    intercept[RuntimeException] {
+      CrawlPipeline.run(spark, storeDir, root,
+        scope = col("hosting_id") === "github.com", crashBeforeSeenCommit = true)
+    }
+    CrawlPipeline.run(spark, storeDir, root,
+      scope = col("hosting_id") === "thingiverse.com")
+    val ok = CrawlPipeline.urlSeenStore(root).read(spark).get
+      .filter(col("status") === "ok").select("unit_path").as[String].collect().toSet
+    assert(ok.nonEmpty && ok.forall(_.startsWith("thingiverse.com/")), ok.toString)
+    val inResults = CrawlPipeline.resultsStore(root).read(spark).get
+      .select("unit_path").as[String].collect().toSet
+    assert(ok.subsetOf(inResults), s"resolved without results: ${ok -- inResults}")
+    val okLogged = CrawlPipeline.fetchLogStore(root).read(spark).get
+      .filter(col("status") === "ok").select("unit_path").as[String].collect().toSet
+    assert(ok.subsetOf(okLogged), s"no fetch_log row: ${ok -- okLogged}")
+  }
+
   test("url_seen compaction: summary-first exclusion ≡ raw event-log fold " +
       "(both the summary-only and summary+delta merge paths)") {
     // big store so the never-succeeding error class (997) exists → the
