@@ -22,23 +22,20 @@ import graft.model.Predicates
   */
 object CrawlOps {
 
-  /** Politeness constants per platform — the reference's hard-coded budget
-    * (BASELINE.md: thingiverse.py:293 sleep(1); github.py:219,233-234;
-    * oshwa.py:54,60). Broadcast dimension, joined on hosting_id.
+  /** Page size per platform — the reference's hard-coded paging
+    * (BASELINE.md: github.py:219,233-234; oshwa.py:54,60); the interval is
+    * the fetch stage's `defaultPoliteness`. Broadcast dimension, joined on
+    * hosting_id.
     */
-  val politeness: Seq[(String, Long, Int)] = Seq(
-    // (hosting_id, min_interval_ms, page_size)
-    ("thingiverse.com", 1000L, 1),
-    ("github.com", 5000L, 10),
-    ("oshwa.org", 5000L, 50),
-    ("appropedia.org", 1000L, 1),
-    ("gitlab.com", 5000L, 10),
-    ("codeberg.org", 5000L, 10)
-  )
+  private val pageSize: Seq[(String, Int)] = Seq("thingiverse.com" -> 1,
+    "github.com" -> 10, "oshwa.org" -> 50, "appropedia.org" -> 1,
+    "gitlab.com" -> 10, "codeberg.org" -> 10)
 
   def politenessDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    politeness.toDF("hosting_id", "min_interval_ms", "page_size")
+    pageSize.map { case (host, n) =>
+      (host, graft.fetch.FetchStage.defaultPoliteness(host).minIntervalMs, n)
+    }.toDF("hosting_id", "min_interval_ms", "page_size")
   }
 
   /** Seed URLs → canonical units. Invalid URLs keep a parse_error instead of

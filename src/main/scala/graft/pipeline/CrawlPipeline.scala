@@ -210,14 +210,21 @@ object CrawlPipeline {
     * URL hash and bucket.
     */
   def frontierOf(ids: DataFrame): DataFrame =
-    ids
+    withSeenKeys(ids
       .withColumn("url", seedUrlCol(col("id")))
       .withColumn("seq", col("id"))
-      // codegen'd custom Expression (one parse); hosting id = path prefix
+      // codegen'd custom Expression (one parse)
       .withColumn("unit_path", graft.functions.CanonicalUnitPath(col("url")))
-      .filter(col("unit_path").isNotNull)
-      .withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
+      .filter(col("unit_path").isNotNull))
       .withColumn("priority", UrlFunctions.hostPriority(col("hosting_id")))
+
+  /** The URL-seen key columns of a frame with `unit_path`: hosting id (the
+    * path prefix), URL hash and seen-filter bucket. The batch frontier and
+    * the streaming frontier sink both derive them here, so a unit lands in
+    * the same bucket whichever path recorded it.
+    */
+  def withSeenKeys(df: DataFrame): DataFrame =
+    df.withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
       .withColumn("url_hash", UrlFunctions.urlHash(col("unit_path")))
       .withColumn("bucket", pmod(col("url_hash"), lit(NBuckets.toLong)))
 

@@ -4,6 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.fetch.FetchStage
+import graft.fetch.FetchStage.PacerState
 
 /** Structured-Streaming surface (SURVEY §2.10). The reference is
   * batch-with-resume; the streaming twin exists for incremental crawl runs:
@@ -195,7 +197,6 @@ object EventStream {
   def incrementalFrontierSink(deduped: Dataset[FrontierUrl],
       store: graft.tables.SnapshotStore, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
     deduped.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -213,11 +214,7 @@ object EventStream {
           batch.persist()
           try {
             if (!batch.isEmpty) {
-              val rows = batch.toDF()
-                .withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
-                .withColumn("url_hash", xxhash64(col("unit_path")))
-                .withColumn("bucket", pmod(col("url_hash"),
-                  lit(graft.pipeline.CrawlPipeline.NBuckets.toLong)))
+              val rows = graft.pipeline.CrawlPipeline.withSeenKeys(batch.toDF())
               store.append(batch.sparkSession, rows, "bucket",
                 Map("batch_id" -> batchId), clusterBeforeWrite = true)
             }
@@ -231,24 +228,13 @@ object EventStream {
   // ---- stateful politeness pacing ----
 
   final case class FetchRequest(host: String, unit_path: String, ts: Timestamp)
-  /** `nextFreeMs` is the completion time of the previous request — the
-    * earliest slot the next request may start at (the streaming form of
-    * the batch stage's per-host virtual clock, FetchStage.scala:197-198).
-    */
-  final case class PacerState(nextFreeMs: Long, scheduledCount: Long,
-      windowStartMs: Long = 0L, windowUsed: Long = 0L)
   final case class ScheduledFetch(host: String, unit_path: String,
       scheduled_ms: Long, position: Long, completed_ms: Long)
 
-  /** Per-host pacing state machine — the EXACT batch-FetchStage recurrence
-    * as streaming state (rate_limit.py:15-50 semantics): each request
-    * costs `attempts + 1` slots (every retry is a request — charged
-    * against BOTH the interval clock and the R1 window budget, matching
-    * `FetchStage.run`'s `usedNow + attempts + 1` accounting at
-    * FetchStage.scala:183-197), starts at the earliest slot ≥ the previous
-    * request's completion (≥ its arrival time), and sleeps to the next
-    * window start when the remaining window budget can't cover it.
-    * Deterministic given per-host arrival order.
+  /** Per-host pacing over one micro-batch: `FetchStage.pace`, the batch
+    * fetch stage's own step, folded over the requests in arrival order with
+    * the carried state. Each request costs attempts + 1 slots, attempts =
+    * min(transient failures, maxRetries) as in the batch stage.
     *
     * Parity scope: equal to the batch stage's schedule for UNSALTED hosts
     * whenever arrival times never outrun the virtual clock (the batch
@@ -261,69 +247,37 @@ object EventStream {
       maxRetries: Int = Int.MaxValue): (Seq[ScheduledFetch], PacerState) = {
     var s = state
     val out = requests.map { r =>
-      // in-stage retries are bounded exactly like the batch stage
-      // (attempts = min(transient failures, maxRetries), FetchStage.scala:174)
-      val attempts = math.min(math.max(0, attemptsOf(r)), maxRetries)
-      val cost = attempts + 1L
-      var slot =
-        if (s.scheduledCount == 0L) math.max(0L, r.ts.getTime)
-        else math.max(r.ts.getTime, s.nextFreeMs)
-      var winStart = s.windowStartMs
-      var used = s.windowUsed
-      if (budgetRequests > 0 && windowMs > 0) {
-        val curWin = math.max(winStart, slot / windowMs * windowMs)
-        val usedNow = if (curWin > winStart) 0L else used
-        if (usedNow + cost > budgetRequests) {
-          slot = curWin + windowMs // sleep until the window resets
-          winStart = slot
-          used = cost
-        } else {
-          winStart = curWin
-          used = usedNow + cost
-        }
-      }
-      // each attempt consumes one interval slot (batch: completed =
-      // start + interval × (attempts + 1))
-      val completed = slot + minIntervalMs * cost
-      s = PacerState(completed, s.scheduledCount + 1, winStart, used)
-      ScheduledFetch(r.host, r.unit_path, slot, s.scheduledCount, completed)
+      val cost = math.min(math.max(0, attemptsOf(r)), maxRetries) + 1L
+      val (start, next) = FetchStage.pace(s, r.ts.getTime, cost, minIntervalMs,
+        budgetRequests, windowMs)
+      s = next
+      ScheduledFetch(r.host, r.unit_path, start, s.scheduledCount, s.nextFreeMs)
     }.toSeq
     (out, s)
   }
 
-  def politenessPacer(requests: Dataset[FetchRequest],
-      minIntervalMs: Long = 1000L): Dataset[ScheduledFetch] =
-    pacerImpl(requests, Map.empty,
-      graft.fetch.FetchStage.Politeness(minIntervalMs, 0), _ => 0)
-
-  /** Config-driven pacer: per-HOST budgets from the validated
-    * `CrawlConfig` — the streaming twin of the batch fetch stage, honoring
-    * BOTH the fixed interval (R2) and the request-budget window (R1) per
-    * host; unconfigured hosts pace at the fallback.
+  /** Interval-only pacer: every host at `minIntervalMs`, no window budget,
+    * no retries.
     */
   def politenessPacer(requests: Dataset[FetchRequest],
-      config: graft.CrawlConfig): Dataset[ScheduledFetch] =
-    politenessPacer(requests, config, _ => 0)
+      minIntervalMs: Long): Dataset[ScheduledFetch] =
+    politenessPacer(requests, graft.CrawlConfig(politeness = Map.empty,
+      fallbackPoliteness = FetchStage.Politeness(minIntervalMs, 0)))
 
-  /** Config-driven pacer with retry modeling: `attemptsOf` reports the
-    * transient failures a request will see (the streaming analogue of the
-    * batch stage's `outcome` injector) — each request then charges
-    * `attempts + 1` slots, so the streaming schedule equals the batch
-    * golden schedule under the same outcomes, window budgets included
+  /** Config-driven pacer as streaming state (flatMapGroupsWithState keyed
+    * by host): per-host interval (R2) and window budget (R1) from the
+    * validated `CrawlConfig`, unconfigured hosts at the fallback.
+    * `attemptsOf` reports the transient failures a request will see (the
+    * batch stage's `outcome` injector), so the streaming schedule equals
+    * the batch schedule under the same outcomes, window budgets included
     * (EventStreamSpec pins the equality on a budget that actually trips).
     */
   def politenessPacer(requests: Dataset[FetchRequest],
       config: graft.CrawlConfig,
-      attemptsOf: FetchRequest => Int): Dataset[ScheduledFetch] = {
-    val c = config.validated
-    pacerImpl(requests, c.politeness, c.fallbackPoliteness, attemptsOf)
-  }
-
-  private def pacerImpl(requests: Dataset[FetchRequest],
-      hostPol: Map[String, graft.fetch.FetchStage.Politeness],
-      fallback: graft.fetch.FetchStage.Politeness,
-      attemptsOf: FetchRequest => Int): Dataset[ScheduledFetch] = {
+      attemptsOf: FetchRequest => Int = _ => 0): Dataset[ScheduledFetch] = {
     import requests.sparkSession.implicits._
+    val c = config.validated
+    val (hostPol, fallback) = (c.politeness, c.fallbackPoliteness)
     requests
       .groupByKey(_.host)
       .flatMapGroupsWithState[PacerState, ScheduledFetch](

@@ -1,7 +1,10 @@
 package graft.fetch
 
+import java.sql.Timestamp
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
 import graft.SparkTestBase
+import graft.streaming.EventStream
 
 class FetchStageSpec extends SparkTestBase {
   import spark.implicits._
@@ -88,5 +91,95 @@ class FetchStageSpec extends SparkTestBase {
     starts.sliding(5).foreach { w =>
       if (w.length == 5) assert(w.last - w.head >= 4000L, "aggregate host rate exceeded")
     }
+  }
+
+  test("a salted host with a window budget stays within it: its salt " +
+      "buckets are capped by the budget") {
+    // 9 buckets of max(1, 4 / 9) = 1 request each would start 9 requests
+    // per window
+    val pol = Map("api.test" -> FetchStage.Politeness(100L, 3,
+      budgetRequests = 4, windowMs = 1000L))
+    val log = FetchStage.run(spark, tasks(40, "api.test"), pol,
+      salts = Map("api.test" -> 9)).collect()
+    val byWindow = log.groupBy(_.scheduled_ms / 1000L).view
+      .mapValues(_.map(_.retries + 1).sum).toMap
+    assert(byWindow.values.max <= 4, s"window budget overrun: $byWindow")
+  }
+
+  /** Random per-host policies: interval 1–5000 ms, budget 0–8 (mostly
+    * with a 100–5000 ms window, sometimes with none), 0–3 retries.
+    */
+  private val policies: Gen[FetchStage.Politeness] = for {
+    interval <- Gen.choose(1L, 5000L)
+    budget <- Gen.choose(0, 8)
+    window <- Gen.frequency(1 -> Gen.const(0L), 3 -> Gen.choose(100L, 5000L))
+    retries <- Gen.choose(0, 3)
+  } yield FetchStage.Politeness(interval, retries, budget, window)
+
+  /** Transient failures per task (index = id - 1), some past any retry bound. */
+  private val failureCounts: Gen[Vector[Int]] =
+    Gen.choose(1, 60).flatMap(n => Gen.containerOfN[Vector, Int](n, Gen.choose(0, 4)))
+
+  private def runHost(p: FetchStage.Politeness, failures: Vector[Int],
+      salts: Int): Array[FetchLogRow] =
+    FetchStage.run(spark, tasks(failures.size, "h.test"), Map("h.test" -> p),
+      outcome = id => FetchStage.Outcome("ok", failures(id.toInt - 1)),
+      salts = Map("h.test" -> salts)).collect()
+
+  private def requests(n: Int, arrivals: Int => Long) =
+    (1 to n).map(i => EventStream.FetchRequest("h.test", s"h.test/u$i",
+      new Timestamp(arrivals(i))))
+
+  private def failuresOf(failures: Vector[Int]) = (r: EventStream.FetchRequest) =>
+    failures(r.unit_path.stripPrefix("h.test/u").toInt - 1)
+
+  test("property: in every window a host's attempts over all its salt " +
+      "buckets stay within its budget") {
+    check(Prop.forAll(policies, failureCounts, Gen.choose(1, 12)) {
+      (p, failures, salts) =>
+        val log = runHost(p, failures, salts)
+        // a request whose attempts alone exceed the budget runs in a
+        // window of its own; every other window holds at most the budget
+        p.budgetRequests == 0 || p.windowMs == 0 ||
+          log.groupBy(_.scheduled_ms / p.windowMs).values.forall(w =>
+            w.length == 1 || w.map(_.retries + 1).sum <= p.budgetRequests)
+    })
+  }
+
+  test("property: for one unsalted host the batch stage's schedule equals " +
+      "the streaming pacer's with every arrival at 0") {
+    check(Prop.forAll(policies, failureCounts) { (p, failures) =>
+      val batch = runHost(p, failures, 1).sortBy(_.pos)
+        .map(r => (r.unit_path, r.pos, r.scheduled_ms, r.completed_ms)).toSeq
+      val (paced, _) = EventStream.paceBatch(
+        requests(failures.size, _ => 0L).iterator,
+        FetchStage.PacerState(Long.MinValue, 0L), p.minIntervalMs,
+        p.budgetRequests, p.windowMs, failuresOf(failures), p.maxRetries)
+      batch == paced.map(f => (f.unit_path, f.position, f.scheduled_ms, f.completed_ms))
+    })
+  }
+
+  test("property: pacing micro-batches with the carried state equals one pass") {
+    val cases = for {
+      p <- policies
+      failures <- failureCounts
+      arrivals <- Gen.containerOfN[Vector, Long](failures.size, Gen.choose(-1000L, 50000L))
+      cuts <- Gen.listOfN(3, Gen.choose(0, failures.size))
+    } yield (p, failures, arrivals, cuts.sorted)
+    check(Prop.forAll(cases) { case (p, failures, arrivals, cuts) =>
+      val reqs = requests(failures.size, i => arrivals(i - 1))
+      def pace(rs: Seq[EventStream.FetchRequest], s: FetchStage.PacerState) =
+        EventStream.paceBatch(rs.iterator, s, p.minIntervalMs, p.budgetRequests,
+          p.windowMs, failuresOf(failures), p.maxRetries)
+      val whole = pace(reqs, FetchStage.PacerState(Long.MinValue, 0L))
+      val bounds = 0 +: cuts :+ reqs.size
+      val split = bounds.zip(bounds.tail).foldLeft(
+        (Seq.empty[EventStream.ScheduledFetch], FetchStage.PacerState(Long.MinValue, 0L))) {
+        case ((out, s), (from, until)) =>
+          val (o, next) = pace(reqs.slice(from, until), s)
+          (out ++ o, next)
+      }
+      split == whole
+    })
   }
 }

@@ -3,8 +3,7 @@ package graft.frontier
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop, Test => Check}
-import org.scalacheck.util.Pretty
+import org.scalacheck.{Gen, Prop}
 import graft.SparkTestBase
 
 /** The per-bucket file protocol of the URL-seen store, run once per sketch:
@@ -31,12 +30,6 @@ abstract class SeenFilterStoreSpec[S](protected val store: SeenFilterStore[S])
     hashes.map(Math.floorMod(_, nBuckets.toLong)).distinct
       .forall(b => Files.exists(store.bucketFile(dir, b))) &&
       keysDF(hashes).filter(!store.predicate(dir)).isEmpty
-
-  protected def check(p: Prop): Unit = {
-    val r = Check.check(
-      Check.Parameters.default.withMinSuccessfulTests(8).withWorkers(1), p)
-    assert(r.passed, Pretty.pretty(r))
-  }
 
   /** 1–400 distinct random keys. */
   protected val keySets: Gen[Vector[Long]] = for {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
 import graft.SparkTestBase
 import graft.fixtures.SyntheticStore
 import graft.functions.{ImageFunctions, TextNormalize}
@@ -378,6 +379,41 @@ class CrawlPipelineSpec extends SparkTestBase {
     val changed2 = CrawlPipeline.urlSeenSummaryStore(root).read(spark).get
       .filter(col("changes") > 1).count()
     assert(changed2 > 0, "the second mutation must add merge-seam changes")
+  }
+
+  test("property: the compaction merge of two adjacent event-log segments " +
+      "equals the fold of the whole log") {
+    import graft.operators.CrawlOps
+    // (unit, status, content_hash) per (run_seq, unit): repeated units, all
+    // four statuses, and a 3-value hash alphabet so hashes change across
+    // the split
+    val event = for {
+      status <- Gen.oneOf("ok", "not_found", "robots_denied", "error")
+      hash <- Gen.choose(1L, 3L)
+    } yield (status, if (status == "ok") hash else 0L)
+    val logs = for {
+      units <- Gen.choose(1, 6)
+      runs <- Gen.choose(1, 6)
+      events <- Gen.listOfN(units * runs, Gen.option(event))
+      split <- Gen.choose(0L, runs.toLong)
+    } yield (units, events, split)
+    val cols = Seq("unit_path", "visits", "first_visited", "last_visited",
+      "last_successfully_visited", "changes", "last_detected_change",
+      "first_ok_hash", "first_ok_seq", "last_ok_hash", "bucket", "perm", "n_err")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect()
+        .map(r => cols.map(c => Option(r.getAs[Any](c)).map(_.toString).orNull))
+        .toSet
+    check(Prop.forAll(logs) { case (units, events, split) =>
+      val log = events.zipWithIndex.collect { case (Some((status, hash)), i) =>
+        val unit = i % units
+        (s"h.test/u$unit", (i / units).toLong, status, hash, unit % 4L)
+      }.toDF("unit_path", "run_seq", "status", "content_hash", "bucket")
+      val merged = CrawlOps.mergeMetaStatesWithResolution(
+        CrawlOps.metaStateWithResolution(log.filter(col("run_seq") < split)),
+        CrawlOps.metaStateWithResolution(log.filter(col("run_seq") >= split)))
+      rows(merged) == rows(CrawlOps.metaStateWithResolution(log))
+    })
   }
 
   test("frontier key sidecar: identical frontier rows with and without the " +

@@ -115,7 +115,7 @@ class GithubGraphQLSpec extends SparkTestBase {
     val (out, _) = graft.streaming.EventStream.paceBatch(
       (1 to 3).iterator.map(i => graft.streaming.EventStream.FetchRequest(
         "github.com", s"u$i", new java.sql.Timestamp(0L))),
-      graft.streaming.EventStream.PacerState(Long.MinValue, 0L),
+      graft.fetch.FetchStage.PacerState(Long.MinValue, 0L),
       pol.minIntervalMs, pol.budgetRequests, pol.windowMs)
     assert(out.map(_.scheduled_ms) == Seq(0L, 5000L, 3600000L))
   }

@@ -92,7 +92,7 @@ class EventStreamSpec extends SparkTestBase {
     val reqs = (0 until 10).map(i =>
       EventStream.FetchRequest("thingiverse.com", s"u$i", new Timestamp(t0 + i * 100)))
     val (out, state) = EventStream.paceBatch(reqs.iterator,
-      EventStream.PacerState(Long.MinValue, 0L), 1000L)
+      graft.fetch.FetchStage.PacerState(Long.MinValue, 0L), 1000L)
     assert(out.head.scheduled_ms == t0)
     out.sliding(2).foreach { case Seq(a, b) =>
       assert(b.scheduled_ms - a.scheduled_ms >= 1000L)
@@ -280,7 +280,7 @@ class EventStreamSpec extends SparkTestBase {
     val (out, _) = EventStream.paceBatch(
       (1L to n).iterator.map(id =>
         EventStream.FetchRequest("gh.com", path(id), new Timestamp(0L))),
-      EventStream.PacerState(Long.MinValue, 0L),
+      graft.fetch.FetchStage.PacerState(Long.MinValue, 0L),
       pol.minIntervalMs, pol.budgetRequests, pol.windowMs,
       r => residueAttempts(r.unit_path.drop(8).toLong), pol.maxRetries)
     val streaming = out.map(f =>
@@ -333,13 +333,13 @@ class EventStreamSpec extends SparkTestBase {
     val reqs = (1 to 5).map(i =>
       EventStream.FetchRequest("gh.com", s"u$i", new Timestamp(0L)))
     val (out, st) = EventStream.paceBatch(reqs.iterator,
-      EventStream.PacerState(Long.MinValue, 0L),
+      graft.fetch.FetchStage.PacerState(Long.MinValue, 0L),
       minIntervalMs = 1000L, budgetRequests = 3, windowMs = 10000L)
     assert(out.map(_.scheduled_ms) == Seq(0L, 1000L, 2000L, 10000L, 11000L))
     assert(st.windowStartMs == 10000L && st.windowUsed == 2L)
     // without a budget the same stream paces purely by interval
     val (noBudget, _) = EventStream.paceBatch(reqs.iterator,
-      EventStream.PacerState(Long.MinValue, 0L), minIntervalMs = 1000L)
+      graft.fetch.FetchStage.PacerState(Long.MinValue, 0L), minIntervalMs = 1000L)
     assert(noBudget.map(_.scheduled_ms) == Seq(0L, 1000L, 2000L, 3000L, 4000L))
   }
 
