@@ -1953,8 +1953,10 @@ object SparkEntry {
         |    CAST(((w + 13) // 14) * ((h + 13) // 14) AS BIGINT) AS n_patches,
         |    CAST(length(regexp_split_to_array(cc, '\s+')) AS BIGINT)
         |      AS caption_tokens,
-        |    CAST(FLOOR(length(regexp_replace(cc, '[^A-Za-z]', '', 'g'))
-        |      * 1000.0 / length(cc)) AS BIGINT) AS caption_alpha_permille,
+        |    CASE WHEN length(cc) > 0
+        |      THEN CAST(FLOOR(length(regexp_replace(cc, '[^A-Za-z]', '', 'g'))
+        |        * 1000.0 / length(cc)) AS BIGINT)
+        |      ELSE 0 END AS caption_alpha_permille,
         |    (LEAST(w, h) >= 16 AND w <= 2 * h AND h <= 2 * w) AS keep_image
         |  FROM n)
         |SELECT image_id, n_patches, caption_tokens, caption_alpha_permille,

@@ -114,27 +114,22 @@ object FetchStage {
     "codeberg.org" -> Politeness(5000L, 3))
 
   /** One politeness stream's clock: `nextFreeMs` is the previous request's
-    * completion (the earliest start of the next), `scheduledCount` the
-    * requests paced so far, and (`windowStartMs`, `windowUsed`) the R1
-    * window the last request was charged to.
+    * completion (the earliest start of the next), and (`windowStartMs`,
+    * `windowUsed`) the R1 window the last request was charged to.
     */
-  final case class PacerState(nextFreeMs: Long, scheduledCount: Long,
-      windowStartMs: Long = 0L, windowUsed: Long = 0L)
+  final case class PacerState(nextFreeMs: Long, windowStartMs: Long = 0L,
+      windowUsed: Long = 0L)
 
-  /** The politeness recurrence (rate_limit.py:15-50), shared by the batch
-    * stage and the streaming pacer: a request costing `cost` slots
-    * (attempts + 1 — every retry is a request, charged against both the
-    * interval clock and the window budget) starts no earlier than its
-    * arrival and the previous request's completion (the first request of
-    * a stream at max(0, arrival)), sleeps to the next window start when the
-    * window budget can't cover it, and completes at start + interval × cost.
+  /** The politeness recurrence (rate_limit.py:15-50): a request costing
+    * `cost` slots (attempts + 1 — every retry is a request, charged against
+    * both the interval clock and the window budget) starts at the previous
+    * request's completion, sleeps to the next window start when the window
+    * budget can't cover it, and completes at start + interval × cost.
     * Returns the start and the next state.
     */
-  def pace(s: PacerState, arrivalMs: Long, cost: Long, intervalMs: Long,
+  def pace(s: PacerState, cost: Long, intervalMs: Long,
       budgetRequests: Int, windowMs: Long): (Long, PacerState) = {
-    val earliest =
-      if (s.scheduledCount == 0L) math.max(0L, arrivalMs)
-      else math.max(arrivalMs, s.nextFreeMs)
+    val earliest = s.nextFreeMs
     val (start, winStart, used) =
       if (budgetRequests <= 0 || windowMs <= 0)
         (earliest, s.windowStartMs, s.windowUsed)
@@ -145,7 +140,7 @@ object FetchStage {
           (curWin + windowMs, curWin + windowMs, cost)
         else (earliest, curWin, usedNow + cost)
       }
-    (start, PacerState(start + intervalMs * cost, s.scheduledCount + 1, winStart, used))
+    (start, PacerState(start + intervalMs * cost, winStart, used))
   }
 
   /** Salted host bucket: hosts needing more than one politeness stream at
@@ -206,7 +201,7 @@ object FetchStage {
         it.map { case (unitPath, host, id, priority, seq, urlHash, bucket,
             contentHash, robotsDenied, salt, pos) =>
           val key = (host, salt)
-          val s = clocks.getOrElse(key, PacerState(0L, 0L))
+          val s = clocks.getOrElse(key, PacerState(0L))
           if (robotsDenied) {
             // robots gate (R5): no request issued, no politeness slot spent
             FetchLogRow(unitPath, host, id, priority, seq, urlHash, bucket, 0L, pos,
@@ -220,8 +215,7 @@ object FetchStage {
               if (o.status != "ok") o.status
               else if (o.transientFailures > p.maxRetries) "error"
               else "ok"
-            // every task arrives at 0: the stream's clock alone paces it
-            val (start, next) = pace(s, 0L, attempts + 1L, p.minIntervalMs * k,
+            val (start, next) = pace(s, attempts + 1L, p.minIntervalMs * k,
               p.budgetRequests / k, p.windowMs)
             clocks(key) = next
             // the payload fingerprint is only meaningful for delivered content

@@ -132,11 +132,11 @@ object ScalarFunctions {
   val parsePersonUdf = udf(parsePerson _)
 
   // ---- C17: zlib-deflate + base64 (reference: rdf_serializer.py:827-832) ----
-  // one zlib state per thread, reset per call: Deflater construction runs
-  // deflateInit (a ~256 KB native allocation) — per-row allocation was the
-  // dominant cost of the C17 path at serializer throughput (guide §4.5:
-  // heavyweight state once per task, not per row). reset() restores the
-  // exact fresh-stream state, so the emitted bytes are identical.
+  // one zlib state per thread, reset to a fresh stream per call (identical
+  // bytes): per-row deflateInit (~256 KB native) dominated C17 (guide §4.5).
+  // Never end()ed: Spark task threads form a bounded, reused pool, so at
+  // most one zlib state lives per pool thread; the JDK's Deflater cleaner
+  // frees it once that thread is collected.
   private val threadDeflater = new ThreadLocal[Deflater] {
     override def initialValue(): Deflater = new Deflater(9)
   }

@@ -216,8 +216,10 @@ object MultimodalOps {
           .cast("long").as("n_patches"),
         size(split(col("caption_clean"), "\\s+")).cast("long")
           .as("caption_tokens"),
-        floor(alpha * lit(1000.0) / nChars).cast("long")
-          .as("caption_alpha_permille"),
+        // an empty cleaned caption scores 0, failing the alpha gate, instead
+        // of dividing by zero (ANSI mode raises that for the whole scan)
+        when(nChars > 0, floor(alpha * lit(1000.0) / nChars).cast("long"))
+          .otherwise(lit(0L)).as("caption_alpha_permille"),
         (least(col("w"), col("h")) >= minDim &&
           col("w") <= lit(2) * col("h") && col("h") <= lit(2) * col("w"))
           .as("keep_image"))

@@ -138,9 +138,8 @@ object RelOps {
           .as("promo_permille"))
   }
 
-  /** Tumbling-window event aggregation (batch expression of the streaming
-    * windowed-agg semantics; the streaming twin lives in
-    * graft.streaming.EventStream). 1-hour tumbling windows per event_type.
+  /** Tumbling-window event aggregation: 1-hour tumbling windows per
+    * event_type.
     */
   def eventWindows(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/events.parquet")

@@ -141,14 +141,7 @@ object TextOps {
     * recrawls. All thresholds integer (permille / bucket counts); no
     * doubles cross an engine boundary.
     */
-  /** The gate + metric + fingerprint + split projection of `trainingMix`
-    * WITHOUT the dedup — pure scan-stage column arithmetic over any
-    * (doc_id, text, …) frame, batch or streaming (no shuffle, no state),
-    * so the batch window dedup and the streaming stateful dedup consume
-    * the exact same gated rows. Output adds (pred_lang, split, n_tokens,
-    * n_chars_m, alpha_permille, fp).
-    */
-  def trainingGate(docsDf: DataFrame,
+  def trainingMix(spark: SparkSession, sfDir: String,
       minAlphaPermille: Int = 500, minChars: Int = 40,
       maxChars: Int = 100000, langs: Seq[String] = langMarkers.map(_._1),
       valBuckets: Int = 13, testBuckets: Int = 13): DataFrame = {
@@ -156,7 +149,9 @@ object TextOps {
     val nChars = length(t).cast("long")
     val alpha = length(regexp_replace(t, "[^A-Za-z]", "")).cast("long")
     val bucket = md5Bucket256("split:", col("doc_id"))
-    docsDf
+    // one shuffle: min-id canonical per fingerprint, window form (no join)
+    val fpw = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
+    docs(spark, sfDir)
       .withColumn("n_chars_m", nChars)
       .withColumn("alpha_permille", floor(alpha * 1000.0 / nChars).cast("long"))
       .withColumn("pred_lang", langIdCol(t))
@@ -170,16 +165,6 @@ object TextOps {
           .when(col("bucket") < testBuckets + valBuckets, "val")
           .otherwise("train"))
       .withColumn("n_tokens", size(split(trim(t), "\\s+")).cast("long"))
-  }
-
-  def trainingMix(spark: SparkSession, sfDir: String,
-      minAlphaPermille: Int = 500, minChars: Int = 40,
-      maxChars: Int = 100000, langs: Seq[String] = langMarkers.map(_._1),
-      valBuckets: Int = 13, testBuckets: Int = 13): DataFrame = {
-    // one shuffle: min-id canonical per fingerprint, window form (no join)
-    val fpw = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    trainingGate(docs(spark, sfDir), minAlphaPermille, minChars, maxChars,
-      langs, valBuckets, testBuckets)
       .withColumn("canonical", min(col("doc_id")).over(fpw))
       .filter(col("doc_id") === col("canonical"))
       .select(col("doc_id"), col("pred_lang"), col("split"),

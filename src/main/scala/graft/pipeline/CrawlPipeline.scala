@@ -206,27 +206,20 @@ object CrawlPipeline {
   }
 
   /** The frontier columns over `ids` (an `id` column plus any columns to
-    * carry along): seed URL, canonical unit path, hosting id, priority,
-    * URL hash and bucket.
+    * carry along): seed URL, canonical unit path, hosting id (the path
+    * prefix), priority, URL hash and seen-filter bucket.
     */
   def frontierOf(ids: DataFrame): DataFrame =
-    withSeenKeys(ids
+    ids
       .withColumn("url", seedUrlCol(col("id")))
       .withColumn("seq", col("id"))
       // codegen'd custom Expression (one parse)
       .withColumn("unit_path", graft.functions.CanonicalUnitPath(col("url")))
-      .filter(col("unit_path").isNotNull))
-      .withColumn("priority", UrlFunctions.hostPriority(col("hosting_id")))
-
-  /** The URL-seen key columns of a frame with `unit_path`: hosting id (the
-    * path prefix), URL hash and seen-filter bucket. The batch frontier and
-    * the streaming frontier sink both derive them here, so a unit lands in
-    * the same bucket whichever path recorded it.
-    */
-  def withSeenKeys(df: DataFrame): DataFrame =
-    df.withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
+      .filter(col("unit_path").isNotNull)
+      .withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
       .withColumn("url_hash", UrlFunctions.urlHash(col("unit_path")))
       .withColumn("bucket", pmod(col("url_hash"), lit(NBuckets.toLong)))
+      .withColumn("priority", UrlFunctions.hostPriority(col("hosting_id")))
 
   /** Skew-aware salting (SURVEY §7.4 risk 2): hosts whose frontier share
     * exceeds `threshold` of the total get one politeness bucket per

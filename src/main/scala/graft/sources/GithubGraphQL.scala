@@ -149,8 +149,8 @@ object GithubGraphQL {
 
   /** The primary GraphQL budget as an R1 politeness window: hourly point
     * allowance (`rateLimit.limit`) over a 1 h window — the same
-    * window-budget mechanism the fetch stage and the streaming pacer
-    * enforce (github.py:148-157; rate_limit.py:15-34).
+    * window-budget mechanism the fetch stage enforces (github.py:148-157;
+    * rate_limit.py:15-34).
     */
   def primaryPoliteness(base: graft.fetch.FetchStage.Politeness,
       hourlyPointLimit: Int): graft.fetch.FetchStage.Politeness =

@@ -1,10 +1,8 @@
 package graft.fetch
 
-import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import graft.SparkTestBase
-import graft.streaming.EventStream
 
 class FetchStageSpec extends SparkTestBase {
   import spark.implicits._
@@ -55,6 +53,17 @@ class FetchStageSpec extends SparkTestBase {
     log.sliding(2).foreach { case Array(a, b) =>
       assert(b.scheduled_ms >= a.completed_ms)
     }
+    // the literal schedule: 3 requests per 10 s window at a 1 s interval
+    // start at 0, 1000, 2000, then sleep to the window reset; without a
+    // budget the same tasks pace purely by interval
+    def scheduled(p: FetchStage.Politeness) =
+      FetchStage.run(spark, tasks(5, "api.test"), Map("api.test" -> p),
+        outcome = _ => FetchStage.Outcome("ok", 0))
+        .orderBy("pos").collect().map(_.scheduled_ms).toSeq
+    assert(scheduled(FetchStage.Politeness(1000L, 3, budgetRequests = 3,
+      windowMs = 10000L)) == Seq(0L, 1000L, 2000L, 10000L, 11000L))
+    assert(scheduled(FetchStage.Politeness(1000L, 3)) ==
+      Seq(0L, 1000L, 2000L, 3000L, 4000L))
   }
 
   test("R1+R3: retries count against the window budget") {
@@ -126,13 +135,6 @@ class FetchStageSpec extends SparkTestBase {
       outcome = id => FetchStage.Outcome("ok", failures(id.toInt - 1)),
       salts = Map("h.test" -> salts)).collect()
 
-  private def requests(n: Int, arrivals: Int => Long) =
-    (1 to n).map(i => EventStream.FetchRequest("h.test", s"h.test/u$i",
-      new Timestamp(arrivals(i))))
-
-  private def failuresOf(failures: Vector[Int]) = (r: EventStream.FetchRequest) =>
-    failures(r.unit_path.stripPrefix("h.test/u").toInt - 1)
-
   test("property: in every window a host's attempts over all its salt " +
       "buckets stay within its budget") {
     check(Prop.forAll(policies, failureCounts, Gen.choose(1, 12)) {
@@ -146,40 +148,41 @@ class FetchStageSpec extends SparkTestBase {
     })
   }
 
-  test("property: for one unsalted host the batch stage's schedule equals " +
-      "the streaming pacer's with every arrival at 0") {
-    check(Prop.forAll(policies, failureCounts) { (p, failures) =>
-      val batch = runHost(p, failures, 1).sortBy(_.pos)
-        .map(r => (r.unit_path, r.pos, r.scheduled_ms, r.completed_ms)).toSeq
-      val (paced, _) = EventStream.paceBatch(
-        requests(failures.size, _ => 0L).iterator,
-        FetchStage.PacerState(Long.MinValue, 0L), p.minIntervalMs,
-        p.budgetRequests, p.windowMs, failuresOf(failures), p.maxRetries)
-      batch == paced.map(f => (f.unit_path, f.position, f.scheduled_ms, f.completed_ms))
-    })
+  /** The batch stage's schedule for one unsalted host by `pos`, and the
+    * reference for it: `FetchStage.pace` folded over the tasks in
+    * (priority, seq) order, each costing min(failures, maxRetries) + 1.
+    */
+  private def scheduleAndReference(p: FetchStage.Politeness,
+      failures: Vector[Int]) = {
+    val batch = runHost(p, failures, 1).sortBy(_.pos)
+      .map(r => (r.unit_path, r.pos, r.scheduled_ms, r.completed_ms)).toSeq
+    var s = FetchStage.PacerState(0L)
+    val reference = failures.zipWithIndex.map { case (f, i) =>
+      val (start, next) = FetchStage.pace(s, math.min(f, p.maxRetries) + 1L,
+        p.minIntervalMs, p.budgetRequests, p.windowMs)
+      s = next
+      (s"h.test/u${i + 1}", i + 1L, start, next.nextFreeMs)
+    }
+    (batch, reference)
   }
 
-  test("property: pacing micro-batches with the carried state equals one pass") {
-    val cases = for {
-      p <- policies
-      failures <- failureCounts
-      arrivals <- Gen.containerOfN[Vector, Long](failures.size, Gen.choose(-1000L, 50000L))
-      cuts <- Gen.listOfN(3, Gen.choose(0, failures.size))
-    } yield (p, failures, arrivals, cuts.sorted)
-    check(Prop.forAll(cases) { case (p, failures, arrivals, cuts) =>
-      val reqs = requests(failures.size, i => arrivals(i - 1))
-      def pace(rs: Seq[EventStream.FetchRequest], s: FetchStage.PacerState) =
-        EventStream.paceBatch(rs.iterator, s, p.minIntervalMs, p.budgetRequests,
-          p.windowMs, failuresOf(failures), p.maxRetries)
-      val whole = pace(reqs, FetchStage.PacerState(Long.MinValue, 0L))
-      val bounds = 0 +: cuts :+ reqs.size
-      val split = bounds.zip(bounds.tail).foldLeft(
-        (Seq.empty[EventStream.ScheduledFetch], FetchStage.PacerState(Long.MinValue, 0L))) {
-        case ((out, s), (from, until)) =>
-          val (o, next) = pace(reqs.slice(from, until), s)
-          (out ++ o, next)
-      }
-      split == whole
+  test("property: for one unsalted host the batch stage's schedule equals " +
+      "the pacing step folded in (priority, seq) order") {
+    check(Prop.forAll(policies, failureCounts) { (p, failures) =>
+      val (batch, reference) = scheduleAndReference(p, failures)
+      batch == reference
     })
+    // one fixed case where the window budget trips under retries: 500
+    // tasks, 5 requests per 2 s window, the default outcomes' transient
+    // failures (two for every 97th id)
+    val (batch, reference) = scheduleAndReference(
+      FetchStage.Politeness(100L, 3, budgetRequests = 5, windowMs = 2000L),
+      Vector.tabulate(500)(i => FetchStage.defaultOutcome(i + 1L).transientFailures))
+    assert(batch == reference)
+    // a budget sleep shows as an idle gap after the previous completion
+    assert(batch.sliding(2).exists { case Seq(a, b) => b._3 > a._4 },
+      "fixture must trip the window budget")
+    // and cost-3 fetches occur (completed - scheduled = 3 x 100 ms)
+    assert(batch.exists(r => r._4 - r._3 == 300L))
   }
 }

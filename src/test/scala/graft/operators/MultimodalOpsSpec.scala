@@ -184,6 +184,23 @@ class MultimodalOpsSpec extends SparkTestBase {
     assert(both.getLong(2) == 8L) // caption_tokens
   }
 
+  test("pairGate: a caption that normalizes to empty scores alpha 0 and " +
+      "fails the caption gate instead of aborting the scan") {
+    val img = ImageFunctions.encode(Array.fill(28 * 28)(0x336699), 28, 28, "png")
+    // Spark's trim strips spaces only, so the blank caption is spaces
+    val pairs = Seq(("p/empty", img, ""), ("p/blank", img, "   "),
+      ("p/markup", img, "<p> </p>")).toDF("image_id", "bytes", "caption")
+    val got = MultimodalOps.pairGate(spark, pairs)
+      .select("image_id", "caption_alpha_permille", "keep_image",
+        "keep_caption", "keep")
+      .as[(String, Long, Boolean, Boolean, Boolean)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
+    assert(got == Map(
+      "p/empty" -> ((0L, true, false, false)),
+      "p/blank" -> ((0L, true, false, false)),
+      "p/markup" -> ((0L, true, false, false))))
+  }
+
   test("audio/video stubs: deterministic typed metadata with real schema") {
     val withAudio = store.limit(10)
       .withColumn("audio_meta", MultimodalOps.audioMetaUdf(col("bytes")))

@@ -111,12 +111,13 @@ class GithubGraphQLSpec extends SparkTestBase {
       graft.fetch.FetchStage.defaultPoliteness("github.com"),
       hourlyPointLimit = 2)
     assert(pol.windowMs == 3600000L && pol.budgetRequests == 2)
-    // the mapped budget actually paces: 3rd request sleeps to the window reset
-    val (out, _) = graft.streaming.EventStream.paceBatch(
-      (1 to 3).iterator.map(i => graft.streaming.EventStream.FetchRequest(
-        "github.com", s"u$i", new java.sql.Timestamp(0L))),
-      graft.fetch.FetchStage.PacerState(Long.MinValue, 0L),
-      pol.minIntervalMs, pol.budgetRequests, pol.windowMs)
-    assert(out.map(_.scheduled_ms) == Seq(0L, 5000L, 3600000L))
+    // the mapped budget actually paces the fetch stage: the 3rd request
+    // sleeps to the window reset
+    val tasks = (1 to 3).map(i => graft.fetch.FetchTask(s"github.com/u$i",
+      "github.com", i.toLong, 1, i.toLong, 0L, 0L, 0L, false)).toDS()
+    val out = graft.fetch.FetchStage.run(spark, tasks, Map("github.com" -> pol),
+      outcome = _ => graft.fetch.FetchStage.Outcome("ok", 0))
+      .orderBy("pos").collect().map(_.scheduled_ms).toSeq
+    assert(out == Seq(0L, 5000L, 3600000L))
   }
 }
