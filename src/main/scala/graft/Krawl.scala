@@ -42,8 +42,7 @@ object Krawl {
       .withColumn("canon", UrlFunctions.canonicalize(col("url")))
       .select(col("url"), col("canon.unit_path").as("unit_path"),
         col("canon.parse_error").as("parse_error"))
-    // sorted: the scope is part of the run's resume key, so the same URLs
-    // must give the same predicate
+    // sorted: the same URLs give the same scope predicate
     val paths = parsed.filter(col("parse_error").isNull)
       .select("unit_path").distinct().as[String].collect().sorted
     val summary = CrawlPipeline.runConfigured(spark, storeDir, tableRoot, config,

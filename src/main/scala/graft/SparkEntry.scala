@@ -657,17 +657,15 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       val dumpDir = "/tmp/graft_mm_store_500"
       graft.fixtures.SyntheticStore.ensureOnDisk(s, dumpDir, 500L)
-      val nChars = length(col("caption_clean")).cast("long")
-      val alpha = length(regexp_replace(col("caption_clean"), "[^A-Za-z]", ""))
-        .cast("long")
       graft.operators.ScanFloor(s.read.parquet(dumpDir))
         .select(col("image_id"),
           trim(graft.functions.TextNormalize.normalizeCaptionUdf(col("caption")))
             .as("caption_clean"))
         .select(col("image_id"), col("caption_clean"),
-          nChars.as("n_chars"),
+          length(col("caption_clean")).cast("long").as("n_chars"),
           size(split(col("caption_clean"), "\\s+")).cast("long").as("n_tokens"),
-          floor(alpha * lit(1000.0) / nChars).cast("long").as("alpha_permille"))
+          graft.operators.MultimodalOps.alphaPermille(col("caption_clean"))
+            .as("alpha_permille"))
     }),
     // full crawl pipeline end-to-end (frontier → bloom dedup → robots →
     // politeness fetch → normalize+invariants → snapshot commits); output =
@@ -1930,8 +1928,10 @@ object SparkEntry {
         |  CAST(length(caption_clean) AS BIGINT) AS n_chars,
         |  CAST(length(regexp_split_to_array(caption_clean, '\s+')) AS BIGINT)
         |    AS n_tokens,
-        |  CAST(FLOOR(length(regexp_replace(caption_clean, '[^A-Za-z]', '', 'g'))
-        |    * 1000.0 / length(caption_clean)) AS BIGINT) AS alpha_permille
+        |  CASE WHEN length(caption_clean) > 0
+        |    THEN CAST(FLOOR(length(regexp_replace(caption_clean, '[^A-Za-z]', '', 'g'))
+        |      * 1000.0 / length(caption_clean)) AS BIGINT)
+        |    ELSE 0 END AS alpha_permille
         |FROM n""".stripMargin,
     // the pair gate: the vision-prep integer arithmetic ∧ the per-residue
     // caption repair, both straight from the dumped store

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.awt.image.BufferedImage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fixtures.SyntheticStore
 import graft.functions.ImageFunctions
@@ -187,6 +187,13 @@ object MultimodalOps {
           col("w") <= lit(2) * col("h") && col("h") <= lit(2) * col("w"))
           .as("keep"))
 
+  /** Letters per thousand characters of a cleaned caption; an empty caption
+    * scores 0 instead of dividing by zero (ANSI mode fails the whole scan).
+    */
+  def alphaPermille(caption: Column): Column =
+    when(length(caption) > 0, floor(length(regexp_replace(caption, "[^A-Za-z]", "")) *
+      lit(1000.0) / length(caption)).cast("long")).otherwise(lit(0L))
+
   /** Training-ready IMAGE+CAPTION pair gate — the capstone filter of the
     * pair table (the engine's input shape: image bytes + caption per
     * row): a pair survives iff the image passes the `visionPrep` quality
@@ -202,9 +209,6 @@ object MultimodalOps {
       minDim: Int = 16, minCaptionTokens: Int = 3,
       minCaptionAlphaPermille: Int = 780): DataFrame = {
     val cc = trim(graft.functions.TextNormalize.normalizeCaptionUdf(col("caption")))
-    val nChars = length(col("caption_clean")).cast("long")
-    val alpha = length(regexp_replace(col("caption_clean"), "[^A-Za-z]", ""))
-      .cast("long")
     graft.operators.ScanFloor(storeDf)
       .withColumn("meta", imageMetaUdf(col("bytes")))
       .select(col("image_id"),
@@ -216,10 +220,7 @@ object MultimodalOps {
           .cast("long").as("n_patches"),
         size(split(col("caption_clean"), "\\s+")).cast("long")
           .as("caption_tokens"),
-        // an empty cleaned caption scores 0, failing the alpha gate, instead
-        // of dividing by zero (ANSI mode raises that for the whole scan)
-        when(nChars > 0, floor(alpha * lit(1000.0) / nChars).cast("long"))
-          .otherwise(lit(0L)).as("caption_alpha_permille"),
+        alphaPermille(col("caption_clean")).as("caption_alpha_permille"),
         (least(col("w"), col("h")) >= minDim &&
           col("w") <= lit(2) * col("h") && col("h") <= lit(2) * col("w"))
           .as("keep_image"))

@@ -399,8 +399,8 @@ object CrawlPipeline {
   }
 
   /** One crawl run: process up to `limit` frontier units not yet in
-    * url_seen, commit snapshots, return counters. Re-invoking continues
-    * from the committed snapshot (resume, R6).
+    * url_seen, publish every table it writes in one commit, return counters.
+    * Re-invoking continues from the committed snapshot (resume, R6).
     */
   def run(spark: SparkSession, storeDir: String, tableRoot: String,
       limit: Option[Long] = None,
@@ -437,6 +437,11 @@ object CrawlPipeline {
     import spark.implicits._
 
     val seen = urlSeenStore(tableRoot)
+    val seenSnap = seen.currentSnapshot
+    // the url_seen version this run's slice is selected from: the run's
+    // events carry run_seq = sliceId + 1, and its commit fails loudly if
+    // url_seen has moved on in between
+    val sliceId = seenSnap.fold(-1L)(_.version)
     val bloomDir = s"$tableRoot/${seenFilters.dirName}"
     val fullFrontier = robotsAllowed(frontier(spark, storeDir), robotsTxt).filter(scope)
 
@@ -449,18 +454,17 @@ object CrawlPipeline {
     // excluded from future slices once it has a permanent outcome or
     // MaxErrorRetries failed attempts. `revisit` ignores the exclusion and
     // re-crawls the whole frontier (visit counters + change detection).
-    val seenOpt = seen.read(spark)
+    val seenOpt = seenSnap.flatMap(snap => seen.readAt(spark, snap.version))
     // reconcile the filter files with the committed url_seen BEFORE this
     // run uses or updates them — for EVERY run shape (a revisit run also
     // stamps a new VERSION at commit, so skipping the reconcile here would
     // permanently hide keys lost to a crash → Bloom false negatives)
     seenOpt.foreach { seenDf =>
-      val curV = seen.currentVersion.get
-      if (!seenFilters.filtersVersion(bloomDir).contains(curV)) {
-        // crash between url_seen commit and filter update (or first read
+      if (!seenFilters.filtersVersion(bloomDir).contains(sliceId)) {
+        // crash between the run's commit and filter update (or first read
         // of a pre-existing table): rebuild so filters can't be stale
         seenFilters.rebuild(spark,
-          seenDf.select(col("bucket"), col("url_hash")), bloomDir, curV)
+          seenDf.select(col("bucket"), col("url_hash")), bloomDir, sliceId)
       }
     }
     val candidates =
@@ -503,25 +507,6 @@ object CrawlPipeline {
       val statusCounts = log.groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-      // commits (order matters for crash safety: payload sinks before the
-      // url_seen commit that makes units invisible to the next run). Resume
-      // idempotency: the slice is a deterministic function of the committed
-      // url_seen version and the selecting arguments (store, scope, revisit,
-      // limit), so each payload commit is tagged with both: slice_id = that
-      // version, slice_key = a hash of the arguments. A crash between the
-      // payload commits and the url_seen commit re-runs the same slice, and
-      // any payload append whose store already carries this tag is SKIPPED
-      // instead of appended twice; a run with another scope at the same
-      // version appends. The sinks are independent tables → their write jobs
-      // run concurrently (Spark schedules parallel jobs from threads)
-      val sliceId = seen.currentVersion.getOrElse(-1L)
-      val sliceKey = java.nio.ByteBuffer.wrap(
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(s"$storeDir|$scope|$revisit|$limit".getBytes("UTF-8"))).getLong
-      val sliceTag = Map("slice_id" -> sliceId, "slice_key" -> sliceKey)
-      def once(s: SnapshotStore)(append: SnapshotStore => SnapshotStore#Snapshot) = () =>
-        s.currentSnapshot.filter(snap => sliceTag.toSet.subsetOf(snap.metrics.toSet))
-          .getOrElse(append(s))
       // S10: 3-graph RDF sink — the FULL normalize→TOML→RDF chain per fetched
       // unit, mirroring the reference's NormalizationListener
       // (fetcher/factory.py:49-59): the delivered manifest payload runs
@@ -530,9 +515,8 @@ object CrawlPipeline {
       // on normalized_toml, then RdfSerializer emits the three turtle graphs
       // (normalized.okh_toml carries the deflate+base64 TOML,
       // rdf_serializer.py:827-832). Everything after the normalize transform
-      // is one typed map — pure per-row serialization, no shuffle — committed
-      // with the same slice-tag idempotency.
-      val projectsSink = Option.when(rdfSink)(once(projectsStore(tableRoot)) { pStore =>
+      // is one typed map — pure per-row serialization, no shuffle.
+      val projectsSink = Option.when(rdfSink)(() => {
         // the manifest the platform delivers for a unit: deterministic
         // function of the store id (the fixture transport's payload twin,
         // like SyntheticStore for the image bytes)
@@ -575,12 +559,12 @@ object CrawlPipeline {
           (unitPath, d.normalized_okh_toml_ttl, d.meta_ttl, d.data_okh_ttl, idGroup)
         }.toDF("project_id", "normalized_okh_toml_ttl", "meta_ttl",
           "data_okh_ttl", "id_group")
-        pStore.append(spark, docs, "id_group", sliceTag)
+        projectsStore(tableRoot).write(spark, docs, "id_group")
       })
       // S9 raw sink: data-set metadata as canonical JSON + the original
       // payload bytes, straight from the result rows (to_json is builtin —
       // no UDF; bytes ride in the same partition layout as results)
-      val rawSinkTask = Option.when(rawSink)(once(rawStore(tableRoot)) { store9 =>
+      val rawSinkTask = Option.when(rawSink)(() => {
         val raw = results.select(
           col("unit_path"),
           to_json(struct(
@@ -591,18 +575,8 @@ object CrawlPipeline {
             col("phash").as("content_hash"),
             lit(sliceId + 1).as("run_seq"))).as("meta_json"),
           col("bytes").as("orig"), col("fmt"), col("id_group"))
-        store9.append(spark, raw, "id_group", sliceTag)
+        rawStore(tableRoot).write(spark, raw, "id_group")
       })
-      val sinkSnaps = awaitAll(Seq(
-        once(resultsStore(tableRoot))(_.append(spark, results, "id_group", sliceTag)),
-        once(fetchLogStore(tableRoot))(_.append(spark, log.toDF(), "hosting_id",
-          statusCounts ++ sliceTag, clusterBeforeWrite = true))) ++
-        projectsSink ++ rawSinkTask)
-      val resultRows = sinkSnaps.head.metrics("commit_rows")
-
-      if (crashBeforeSeenCommit)
-        throw new RuntimeException("injected crash between payload and url_seen commits")
-
       // url_hash/bucket/content_hash rode through the fetch stage — no
       // re-join needed. EVERY attempt is recorded (CrawlingMeta event log):
       // errors accumulate a retry count and stop being selected after
@@ -611,8 +585,25 @@ object CrawlPipeline {
         .select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
           col("url_hash"), col("bucket"), col("content_hash"))
         .withColumn("run_seq", lit(sliceId + 1))
-      val snap = seen.append(spark, seenRows,
-        "bucket", statusCounts, clusterBeforeWrite = true)
+      // every sink stages its data files (independent tables → their write
+      // jobs run concurrently; Spark schedules parallel jobs from threads),
+      // then ONE commit publishes them all. A run that fails or crashes
+      // before that commit publishes nothing, so any later run, under any
+      // scope or limit, selects and writes its slice exactly once.
+      val changes = awaitAll(Seq(
+        () => resultsStore(tableRoot).write(spark, results, "id_group"),
+        () => fetchLogStore(tableRoot).write(spark, log.toDF(), "hosting_id",
+          statusCounts, clusterBeforeWrite = true),
+        () => seen.write(spark, seenRows, "bucket", statusCounts,
+          clusterBeforeWrite = true).copy(basedOn = Some(sliceId))) ++
+        projectsSink ++ rawSinkTask)
+
+      if (crashBeforeSeenCommit)
+        throw new RuntimeException("injected crash between the sink writes and the run's commit")
+
+      val snaps = SnapshotStore.commit(changes)
+      val resultRows = snaps.head.metrics("commit_rows")
+      val snap = snaps(2) // url_seen
 
       // auto-compaction policy: events appended since the summary's covered
       // version, counted from snapshot-manifest metrics alone (no table
@@ -718,41 +709,34 @@ object CrawlPipeline {
     * the derived url_seen summary is dropped entirely (rebuilt by the
     * next compaction) and the per-bucket seen-filter files reconcile
     * automatically on the next run (their stamped version no longer
-    * matches the rewritten url_seen).
+    * matches the rewritten url_seen). All four resets publish in one
+    * commit, which fails if a table moved while its rewrite was written.
     */
   def startOverHosting(spark: SparkSession, tableRoot: String,
       hostingId: String): Unit = {
-    // the DERIVED summary drops FIRST: a crash after the url_seen rewrite
-    // but before a trailing summary truncate would leave stale summary
-    // rows still marking the reset hosting's units as resolved — the next
-    // run's summary-first exclusion would then silently skip them.
-    // Dropping the summary first is crash-safe in both orders of failure:
-    // worst case the next run pays one full event-log fold (correct, just
-    // uncompacted) until the next compaction rebuilds it.
-    urlSeenSummaryStore(tableRoot).read(spark)
-      .foreach(_ => urlSeenSummaryStore(tableRoot).truncate())
-    // clusterBeforeWrite on every rewrite — same write policy as the
-    // append path (the partition keys are hash-random per task; without
-    // clustering each read task writes a file per partition value)
+    // each table keeps the rows `keep` selects, rewritten with the append
+    // path's clusterBeforeWrite (its partition keys are hash-random per task)
     def rewrite(store: SnapshotStore, partitionCol: String,
-        keep: DataFrame => DataFrame): Unit =
-      store.read(spark).foreach { df =>
-        val remaining = keep(df)
-        if (remaining.isEmpty) store.truncate()
-        else store.replace(spark, remaining, partitionCol,
-          clusterBeforeWrite = true)
-      }
-    rewrite(urlSeenStore(tableRoot), "bucket",
-      _.filter(col("hosting_id") =!= hostingId))
-    rewrite(fetchLogStore(tableRoot), "hosting_id",
-      _.filter(col("hosting_id") =!= hostingId))
-    // NOTE scale trade-off: results is partitioned by id_group, so this
-    // predicate cannot prune — resetting one hosting rewrites the other
-    // hostings' payload rows too. At fixture/operator scale that is fine;
-    // a 10^10-row deployment would instead apply a per-hosting tombstone
-    // at read time and fold it into the next compaction.
-    rewrite(resultsStore(tableRoot), "id_group",
-      _.filter(substring_index(col("unit_path"), "/", 1) =!= hostingId))
+        keep: Column): Option[SnapshotStore.Change] = for {
+      snap <- store.currentSnapshot
+      remaining <- store.readAt(spark, snap.version).map(_.filter(keep))
+    } yield (if (remaining.isEmpty) store.truncation
+      else store.write(spark, remaining, partitionCol, clusterBeforeWrite = true,
+        replace = true)).copy(basedOn = Some(snap.version))
+    val summary = urlSeenSummaryStore(tableRoot)
+    val otherHosting = col("hosting_id") =!= hostingId
+    val changes = Seq(
+      Option.when(summary.currentSnapshot.exists(_.files.nonEmpty))(summary.truncation),
+      rewrite(urlSeenStore(tableRoot), "bucket", otherHosting),
+      rewrite(fetchLogStore(tableRoot), "hosting_id", otherHosting),
+      // NOTE scale trade-off: results is partitioned by id_group, so this
+      // predicate cannot prune — resetting one hosting rewrites the other
+      // hostings' payload rows too. At fixture/operator scale that is fine;
+      // a 10^10-row deployment would instead apply a per-hosting tombstone
+      // at read time and fold it into the next compaction.
+      rewrite(resultsStore(tableRoot), "id_group",
+        substring_index(col("unit_path"), "/", 1) =!= hostingId)).flatten
+    if (changes.nonEmpty) SnapshotStore.commit(changes)
   }
 
   /** The CrawlingMeta view over this table root's url_seen event log. */

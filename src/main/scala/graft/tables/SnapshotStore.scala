@@ -1,85 +1,56 @@
 package graft.tables
 
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.StandardOpenOption.{CREATE, WRITE}
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantLock
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** "Iceberg-lite" snapshot layer: partitioned Parquet data files + versioned
-  * JSON snapshot manifests + an atomic CURRENT pointer.
-  *
-  * No Iceberg runtime jar exists in this environment (SURVEY §7.0), so the
-  * table layer implements the subset of snapshot semantics the north rule
-  * needs — resumable checkpoint with per-partition lineage + metrics —
-  * API-shaped so a real catalog could be swapped in:
+/** "Iceberg-lite" snapshot layer (no Iceberg runtime jar exists here, SURVEY
+  * §7.0): partitioned Parquet data files, versioned JSON manifests per table
+  * with per-partition lineage + metrics, and ONE commit log per table root.
+  * A `SnapshotStore` is one table; the directory above it is its table root:
   *
   * ```
-  * <root>/data/<commit-uuid>/part-*.parquet      immutable data files
-  * <root>/snapshots/v<N>.json                    manifest: files, lineage, metrics
-  * <root>/CURRENT                                text "v<N>", atomically replaced
+  * <root>/_commits/v<K>.json       {"version":K,"tables":{"<table>":N,…}}
+  * <root>/_commits/CURRENT         text "v<K>", atomically replaced
+  * <root>/_commits/LOCK            the commit lock file
+  * <root>/<table>/data/<commit-uuid>/part-*.parquet   immutable data files
+  * <root>/<table>/snapshots/v<N>.json   manifest: files, lineage, metrics
   * ```
   *
-  * Commit protocol (crash-safe on a POSIX fs): (1) write data files into a
-  * fresh commit dir, (2) write v<N>.json via temp-file + ATOMIC_MOVE,
-  * (3) flip CURRENT via temp-file + ATOMIC_MOVE. A crash at any point leaves
-  * either the old CURRENT (orphan data/manifest ignored by readers) or the
-  * fully-committed new version. This mirrors the reference's
-  * store-state-then-continue checkpointing (fetcher_state.py:26-51) with
-  * table-level atomicity instead of a mutable JSON file.
+  * Commit protocol (crash-safe on a POSIX fs; the single atomic log entry of
+  * Delta Lake and Iceberg): (1) `write` stages a table's data files into a
+  * fresh commit dir, outside any lock; (2) `SnapshotStore.commit` publishes
+  * any set of staged changes under the root's lock: it reads the log,
+  * builds each table's snapshot on that table's current version (appends
+  * rebase, so concurrent committers lose nothing), writes each `v<N>.json`,
+  * then the entry `v<K>.json` (both temp-file + ATOMIC_MOVE), and last flips
+  * `_commits/CURRENT`, the only pointer readers follow. A crash at any point
+  * leaves either the old entry (orphan files are ignored, overwritten by the
+  * next commit, reclaimed by `expire`) or every table of the commit
+  * published at once — the reference's store-state-then-continue
+  * checkpointing (fetcher_state.py:26-51) with root-level atomicity.
   */
 final class SnapshotStore(val root: String) {
+  import SnapshotStore._
 
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
 
-  final case class DataFileMeta(path: String, rows: Long, partitionKey: String)
+  private val path = Paths.get(root).toAbsolutePath.normalize
+  /** The table root this table publishes through, and its name there. */
+  private val (tableRoot, name) = (path.getParent, path.getFileName.toString)
 
-  /** One committed table version. `lineage` records, per partition key, how
-    * many rows each commit contributed — the per-partition lineage the north
-    * rule asks for. `metrics` are free-form counters for the commit.
-    */
-  final case class Snapshot(
-      version: Long,
-      parentVersion: Long, // -1 for first
-      files: Vector[DataFileMeta],
-      lineage: Map[String, Long],
-      metrics: Map[String, Long]) {
-
-    def toJson: Json.JObj = Json.obj(
-      "version" -> Json.n(version),
-      "parent_version" -> Json.n(parentVersion),
-      "files" -> Json.JArr(files.map(f => Json.obj(
-        "path" -> Json.s(f.path),
-        "rows" -> Json.n(f.rows),
-        "partition" -> Json.s(f.partitionKey)): Json.Value)),
-      "lineage" -> Json.JObj(lineage.toVector.sortBy(_._1)
-        .map { case (k, v) => k -> (Json.n(v): Json.Value) }),
-      "metrics" -> Json.JObj(metrics.toVector.sortBy(_._1)
-        .map { case (k, v) => k -> (Json.n(v): Json.Value) }))
-  }
-
-  private def snapshotFromJson(j: Json.JObj): Snapshot = Snapshot(
-    version = j.long("version"),
-    parentVersion = j.long("parent_version"),
-    files = j.arr("files").map { case o: Json.JObj =>
-      DataFileMeta(o.str("path"), o.long("rows"), o.str("partition"))
-    },
-    lineage = j("lineage").asInstanceOf[Json.JObj].v
-      .map { case (k, v) => k -> v.asInstanceOf[Json.JNum].toLong }.toMap,
-    metrics = j("metrics").asInstanceOf[Json.JObj].v
-      .map { case (k, v) => k -> v.asInstanceOf[Json.JNum].toLong }.toMap)
-
-  def currentVersion: Option[Long] = {
-    val cur = p("CURRENT")
-    if (!Files.exists(cur)) None
-    else Some(Files.readString(cur).trim.stripPrefix("v").toLong)
-  }
+  def currentVersion: Option[Long] = logEntry(tableRoot).flatMap(_._2.get(name))
 
   def currentSnapshot: Option[Snapshot] = currentVersion.map(readSnapshot)
 
-  def readSnapshot(version: Long): Snapshot = {
-    val j = Json.parse(Files.readString(p("snapshots", s"v$version.json")))
-    snapshotFromJson(j.asInstanceOf[Json.JObj])
-  }
+  def readSnapshot(version: Long): Snapshot =
+    snapshotFromJson(Json.parse(Files.readString(p("snapshots", s"v$version.json")))
+      .asInstanceOf[Json.JObj])
 
   /** Time travel: read the table as of snapshot `version` (every snapshot
     * lists its full file set, so any committed version stays readable until
@@ -159,109 +130,63 @@ final class SnapshotStore(val root: String) {
       Some(parts.reduce(_.unionByName(_, allowMissingColumns = true)))
     }
 
-  /** Append `df` as a new commit. `partitionCol` drives both the on-disk
-    * layout (`partitionBy`) and the per-partition lineage counts. Returns the
-    * committed snapshot. `clusterBeforeWrite`: shuffle rows onto their
-    * partition key before the write. Worth it for small-row tables whose key
-    * is hash-random (every task would otherwise open a file per partition
-    * value — file-open overhead dwarfs the data); wrong for payload tables
-    * whose input order is already aligned with the key (a shuffle would move
-    * the heavy bytes).
+  /** Stage `df` as this table's next change: its data files, invisible to
+    * readers until `SnapshotStore.commit` publishes them. An append adds them
+    * to the table; `replace` makes them the whole table (the Iceberg
+    * `overwrite` analogue; prior files become history, reclaimed by
+    * `expire`). `partitionCol` drives the on-disk layout and the lineage
+    * counts. `clusterBeforeWrite`: shuffle rows onto their partition key
+    * first — worth it for small-row tables whose key is hash-random (each
+    * task would otherwise open a file per key); wrong for payload tables
+    * whose input order already follows the key (it would move the bytes).
     */
-  def append(spark: SparkSession, df: DataFrame, partitionCol: String,
+  def write(spark: SparkSession, df: DataFrame, partitionCol: String,
       metrics: Map[String, Long] = Map.empty,
-      clusterBeforeWrite: Boolean = false): Snapshot =
-    commit(spark, df, partitionCol, metrics, clusterBeforeWrite, replaceAll = false)
-
-  /** REPLACE the table contents in ONE commit (the Iceberg `overwrite`
-    * analogue): the new snapshot references only this commit's files, so a
-    * crash at any point leaves either the fully-old or the fully-new table —
-    * never an empty or doubled one. Prior files become unreferenced history
-    * (reclaim with `expire`).
-    */
-  def replace(spark: SparkSession, df: DataFrame, partitionCol: String,
-      metrics: Map[String, Long] = Map.empty,
-      clusterBeforeWrite: Boolean = false): Snapshot =
-    commit(spark, df, partitionCol, metrics, clusterBeforeWrite, replaceAll = true)
-
-  private def commit(spark: SparkSession, df: DataFrame, partitionCol: String,
-      metrics: Map[String, Long],
-      clusterBeforeWrite: Boolean, replaceAll: Boolean): Snapshot = synchronized {
-    import org.apache.spark.sql.functions._
+      clusterBeforeWrite: Boolean = false, replace: Boolean = false): Change = {
+    import org.apache.spark.sql.functions.col
     Files.createDirectories(p("data"))
-    Files.createDirectories(p("snapshots"))
-
-    val commitId = UUID.randomUUID().toString
-    val commitRel: String = s"data/$commitId"
-    // single pass: write the data, then derive per-partition lineage from
-    // the committed files (partition-column-only scan = parquet footer
-    // row counts, no data pages read, no recompute of the input plan)
+    val commitRel = s"data/${UUID.randomUUID()}"
     val toWrite = if (clusterBeforeWrite) df.repartition(col(partitionCol)) else df
     toWrite.write.partitionBy(partitionCol).parquet(s"$root/$commitRel")
-
-      // per-file row counts straight from the parquet footers on the driver
-      // (local fs, ~1 ms/file, read in parallel) — no Spark job, no
-      // recompute of the input plan
-      val newFiles = {
-        val files = SnapshotStore.withWalk(p(commitRel))(
-          _.filter(f => f.toString.endsWith(".parquet")).toVector)
-        import scala.collection.parallel.CollectionConverters._
-        files.par.map { f =>
-          val rel = p("").toAbsolutePath.relativize(f.toAbsolutePath).toString
-          val pk = f.getParent.getFileName.toString match {
-            case s if s.startsWith(s"$partitionCol=") => s.substring(partitionCol.length + 1)
-            case _ => ""
-          }
-          DataFileMeta(rel, footerRowCount(f), pk)
-        }.toVector.seq
+    // per-file row counts straight from the parquet footers on the driver
+    // (local fs, ~1 ms/file, read in parallel) — no Spark job, no recompute
+    // of the input plan
+    val files = withWalk(p(commitRel))(_.filter(_.toString.endsWith(".parquet")).toVector)
+    import scala.collection.parallel.CollectionConverters._
+    val newFiles = files.par.map { f =>
+      val rel = p("").toAbsolutePath.relativize(f.toAbsolutePath).toString
+      val pk = f.getParent.getFileName.toString match {
+        case s if s.startsWith(s"$partitionCol=") => s.substring(partitionCol.length + 1)
+        case _ => ""
       }
-
-      val counts: Map[String, Long] = newFiles.groupBy(_.partitionKey)
-        .map { case (pk, fs) => pk -> fs.map(_.rows).sum }
-
-      val parent = currentSnapshot
-      val version = parent.map(_.version + 1).getOrElse(0L)
-      // replace: the snapshot owns ONLY this commit's files and lineage
-      val mergedLineage =
-        if (replaceAll) counts
-        else counts.foldLeft(parent.map(_.lineage).getOrElse(Map.empty)) {
-          case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v)
-        }
-      val snap = Snapshot(
-        version = version,
-        parentVersion = parent.map(_.version).getOrElse(-1L),
-        files = (if (replaceAll) Vector.empty
-                 else parent.map(_.files).getOrElse(Vector.empty)) ++ newFiles,
-        lineage = mergedLineage,
-        metrics = metrics.updated("commit_rows", counts.values.sum))
-
-      writeAtomic(p("snapshots", s"v$version.json"), snap.toJson.toString)
-      writeAtomic(p("CURRENT"), s"v$version")
-      snap
+      DataFileMeta(rel, footerRowCount(f), pk)
+    }.toVector.seq
+    Change(this, newFiles, replace, metrics)
   }
 
-  /** Start-over semantics (R6: `start_over=True` deletes state,
-    * github.py:374-382): commit an empty snapshot; prior data files become
-    * unreferenced history.
-    */
-  def truncate(): Snapshot = synchronized {
-    Files.createDirectories(p("snapshots"))
-    val parent = currentSnapshot
-    val version = parent.map(_.version + 1).getOrElse(0L)
-    val snap = Snapshot(version, parent.map(_.version).getOrElse(-1L),
-      Vector.empty, Map.empty, Map("truncated" -> 1L))
-    writeAtomic(p("snapshots", s"v$version.json"), snap.toJson.toString)
-    writeAtomic(p("CURRENT"), s"v$version")
-    snap
-  }
+  /** Start-over (R6: `start_over=True` deletes state, github.py:374-382):
+    * a change to an empty table; prior data files become history. */
+  def truncation: Change = Change(this, Vector.empty, replace = true, Map("truncated" -> 1L))
+
+  /** `write` then `commit`, as this table's own commit. */
+  def append(spark: SparkSession, df: DataFrame, partitionCol: String,
+      metrics: Map[String, Long] = Map.empty, clusterBeforeWrite: Boolean = false): Snapshot =
+    commit(Seq(write(spark, df, partitionCol, metrics, clusterBeforeWrite))).head
+
+  def replace(spark: SparkSession, df: DataFrame, partitionCol: String,
+      metrics: Map[String, Long] = Map.empty, clusterBeforeWrite: Boolean = false): Snapshot =
+    commit(Seq(write(spark, df, partitionCol, metrics, clusterBeforeWrite, replace = true))).head
+
+  def truncate(): Snapshot = commit(Seq(truncation)).head
 
   /** Physically expire history (the Iceberg `expire_snapshots` analogue):
     * keep the last `keepLast` snapshot manifests; delete every data file
-    * referenced by NO kept snapshot, then the dropped manifests. Versions
-    * below the kept range stop being time-travelable (see `readAt`);
-    * the commit protocol is untouched (CURRENT always stays valid).
+    * referenced by NO kept snapshot — including the staged files of runs
+    * that never committed — then the dropped manifests. Versions below the
+    * kept range stop being time-travelable (see `readAt`). Runs under the
+    * commit lock, so the current version cannot move underneath it.
     */
-  def expire(keepLast: Int = 1): Unit = synchronized {
+  def expire(keepLast: Int = 1): Unit = locked(tableRoot) {
     require(keepLast >= 1, "must keep at least the current snapshot")
     currentVersion.foreach { cur =>
       val keepFrom = math.max(0L, cur - keepLast + 1)
@@ -269,18 +194,14 @@ final class SnapshotStore(val root: String) {
         .flatMap(v => readSnapshot(v).files.map(_.path)).toSet
       val dataDir = p("data")
       if (Files.exists(dataDir)) {
-        val all = SnapshotStore.withWalk(dataDir)(
-          _.filter(f => f.toString.endsWith(".parquet")).toVector)
+        val all = withWalk(dataDir)(_.filter(_.toString.endsWith(".parquet")).toVector)
         all.foreach { f =>
           val rel = p("").toAbsolutePath.relativize(f.toAbsolutePath).toString
           if (!kept.contains(rel)) Files.delete(f)
         }
         // prune directories emptied by the deletes (deepest first)
-        SnapshotStore.withWalk(dataDir)(
-          _.filter(Files.isDirectory(_)).toVector).sortBy(-_.getNameCount)
-          .foreach { d =>
-            if (d != dataDir && SnapshotStore.isEmptyDir(d)) Files.delete(d)
-          }
+        withWalk(dataDir)(_.filter(Files.isDirectory(_)).toVector).sortBy(-_.getNameCount)
+          .foreach { d => if (d != dataDir && isEmptyDir(d)) Files.delete(d) }
       }
       (0L until keepFrom).foreach { v =>
         Files.deleteIfExists(p("snapshots", s"v$v.json"))
@@ -291,9 +212,125 @@ final class SnapshotStore(val root: String) {
   private def footerRowCount(file: Path): Long = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri),
-        SnapshotStore.sharedHadoopConf))
+        new org.apache.hadoop.fs.Path(file.toUri), sharedHadoopConf))
     try reader.getRecordCount finally reader.close()
+  }
+}
+
+object SnapshotStore {
+
+  final case class DataFileMeta(path: String, rows: Long, partitionKey: String)
+
+  /** One committed table version. `lineage` records, per partition key, how
+    * many rows each commit contributed — the per-partition lineage the north
+    * rule asks for. `metrics` are free-form counters for the commit.
+    */
+  final case class Snapshot(
+      version: Long,
+      parentVersion: Long, // -1 for first
+      files: Vector[DataFileMeta],
+      lineage: Map[String, Long],
+      metrics: Map[String, Long]) {
+
+    def toJson: Json.JObj = Json.obj(
+      "version" -> Json.n(version),
+      "parent_version" -> Json.n(parentVersion),
+      "files" -> Json.JArr(files.map(f => Json.obj("path" -> Json.s(f.path),
+        "rows" -> Json.n(f.rows), "partition" -> Json.s(f.partitionKey)): Json.Value)),
+      "lineage" -> longsJson(lineage),
+      "metrics" -> longsJson(metrics))
+  }
+
+  private def snapshotFromJson(j: Json.JObj): Snapshot = Snapshot(
+    version = j.long("version"),
+    parentVersion = j.long("parent_version"),
+    files = j.arr("files").map { case o: Json.JObj =>
+      DataFileMeta(o.str("path"), o.long("rows"), o.str("partition"))
+    },
+    lineage = longs(j("lineage")),
+    metrics = longs(j("metrics")))
+
+  private def longsJson(m: Map[String, Long]): Json.JObj =
+    Json.JObj(m.toVector.sortBy(_._1).map { case (k, v) => k -> (Json.n(v): Json.Value) })
+
+  private def longs(j: Json.Value): Map[String, Long] =
+    j.asInstanceOf[Json.JObj].v.map { case (k, v) => k -> v.asInstanceOf[Json.JNum].toLong }.toMap
+
+  /** Staged data files of one table, not yet visible to readers. `basedOn`:
+    * the table version the change was computed from — its commit fails if
+    * the table has moved since (-1 = the table had no version). None rebases
+    * the change onto whatever version is current.
+    */
+  final case class Change(store: SnapshotStore, files: Vector[DataFileMeta],
+      replace: Boolean, metrics: Map[String, Long], basedOn: Option[Long] = None) {
+
+    private[SnapshotStore] def on(parent: Option[Snapshot]): Snapshot = {
+      val counts = files.groupBy(_.partitionKey).map { case (pk, fs) => pk -> fs.map(_.rows).sum }
+      val base = parent.filterNot(_ => replace) // a replace owns only its files
+      Snapshot(parent.fold(0L)(_.version + 1), parent.fold(-1L)(_.version),
+        base.fold(Vector.empty[DataFileMeta])(_.files) ++ files,
+        counts.foldLeft(base.fold(Map.empty[String, Long])(_.lineage)) {
+          case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v) },
+        metrics.updated("commit_rows", counts.values.sum))
+    }
+  }
+
+  /** Publish `changes` (one per table, all under one table root) in ONE log
+    * entry; returns their snapshots in order. Throws, publishing nothing, if
+    * a change's `basedOn` version is no longer its table's current one. */
+  def commit(changes: Seq[Change]): Seq[Snapshot] = {
+    val root = changes.head.store.tableRoot
+    require(changes.forall(_.store.tableRoot == root) &&
+      changes.map(_.store.name).distinct.size == changes.size,
+      s"a commit takes one change per table, all under $root")
+    locked(root) {
+      val (version, tables) = logEntry(root).getOrElse((-1L, Map.empty[String, Long]))
+      val snaps = changes.map { c =>
+        val current = tables.get(c.store.name)
+        for (v <- c.basedOn if current.getOrElse(-1L) != v)
+          throw new java.util.ConcurrentModificationException(s"${c.store.root} " +
+            s"moved from v$v to v${current.getOrElse(-1L)} while this change was written")
+        val snap = c.on(current.map(c.store.readSnapshot))
+        writeAtomic(Files.createDirectories(c.store.p("snapshots"))
+          .resolve(s"v${snap.version}.json"), snap.toJson.toString)
+        snap
+      }
+      val entry = tables ++ changes.map(_.store.name).zip(snaps.map(_.version))
+      val log = root.resolve(LogDir)
+      writeAtomic(log.resolve(s"v${version + 1}.json"), Json.obj(
+        "version" -> Json.n(version + 1), "tables" -> longsJson(entry)).toString)
+      writeAtomic(log.resolve("CURRENT"), s"v${version + 1}")
+      snaps
+    }
+  }
+
+  private val LogDir = "_commits"
+
+  /** A root's current log entry: its version and the table versions it
+    * names. None before the root's first commit. */
+  private def logEntry(root: Path): Option[(Long, Map[String, Long])] = {
+    val current = root.resolve(LogDir).resolve("CURRENT")
+    Option.when(Files.exists(current)) {
+      val k = Files.readString(current).trim.stripPrefix("v")
+      val j = Json.parse(Files.readString(root.resolve(LogDir).resolve(s"v$k.json")))
+      (k.toLong, longs(j.asInstanceOf[Json.JObj]("tables")))
+    }
+  }
+
+  private val rootLocks = new ConcurrentHashMap[String, ReentrantLock]()
+
+  /** Run `body` under a table root's commit lock: a JVM-wide lock keyed by
+    * the root's real path, then a `FileChannel` lock on `_commits/LOCK` for
+    * other processes (alone it throws `OverlappingFileLockException` within
+    * one JVM). */
+  private def locked[A](root: Path)(body: => A): A = {
+    val log = Files.createDirectories(root.resolve(LogDir))
+    val jvmLock = rootLocks.computeIfAbsent(log.toRealPath().toString, _ => new ReentrantLock())
+    jvmLock.lock()
+    try {
+      val channel = FileChannel.open(log.resolve("LOCK"), CREATE, WRITE)
+      try { channel.lock(); body } finally channel.close()
+    } finally jvmLock.unlock()
   }
 
   private def writeAtomic(target: Path, content: String): Unit = {
@@ -302,25 +339,20 @@ final class SnapshotStore(val root: String) {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
-}
 
-object SnapshotStore {
-  /** ONE shared Hadoop conf for footer reads: constructing a Configuration
-    * per file re-parses the default resources (~ms each) — at hundreds of
-    * commit files that was >1 s of serial driver time per commit, a pure
-    * non-scaling cost on every crawl run. Configuration reads are
-    * thread-safe (the .par footer scan only reads it).
+  /** ONE shared Hadoop conf for footer reads: a Configuration per file
+    * re-parses the default resources (~ms each, >1 s per commit at hundreds
+    * of files). Its reads are thread-safe (the .par footer scan only reads).
     */
-  private[tables] lazy val sharedHadoopConf =
-    new org.apache.hadoop.conf.Configuration()
+  private lazy val sharedHadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** Loan-pattern walk: NIO directory streams hold an fd until closed. */
-  private[tables] def withWalk[A](dir: Path)(f: Iterator[Path] => A): A = {
+  private def withWalk[A](dir: Path)(f: Iterator[Path] => A): A = {
     val s = Files.walk(dir)
     try f(s.iterator().asScala) finally s.close()
   }
 
-  private[tables] def isEmptyDir(d: Path): Boolean = {
+  private def isEmptyDir(d: Path): Boolean = {
     val s = Files.list(d)
     try !s.iterator().hasNext finally s.close()
   }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import graft.SparkTestBase
@@ -167,8 +168,13 @@ class CrawlPipelineSpec extends SparkTestBase {
     }
     assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
       "fetch-log cache leaked")
-    assert(CrawlPipeline.fetchLogStore(root).currentVersion.isDefined,
-      "the fetch_log append was left running")
+    // the fetch_log write beside it finished (it was awaited) but, like
+    // every table of the failed run, was not published
+    val staged = Files.list(java.nio.file.Paths.get(s"$root/fetch_log/data"))
+    assert(staged.iterator().asScala.exists(d => Files.exists(d.resolve("_SUCCESS"))),
+      "the fetch_log write was left running")
+    staged.close()
+    assert(CrawlPipeline.fetchLogStore(root).currentVersion.isEmpty)
     assert(CrawlPipeline.urlSeenStore(root).currentVersion.isEmpty)
   }
 
@@ -190,6 +196,40 @@ class CrawlPipelineSpec extends SparkTestBase {
     val okLogged = CrawlPipeline.fetchLogStore(root).read(spark).get
       .filter(col("status") === "ok").select("unit_path").as[String].collect().toSet
     assert(ok.subsetOf(okLogged), s"no fetch_log row: ${ok -- okLogged}")
+  }
+
+  test("crash in a bounded slice, then an unbounded run: every unit lands " +
+      "in results once and no ok unit is logged twice") {
+    val root = freshRoot()
+    intercept[RuntimeException] {
+      CrawlPipeline.run(spark, storeDir, root, Some(150L), crashBeforeSeenCommit = true)
+    }
+    CrawlPipeline.run(spark, storeDir, root)
+    val ids = CrawlPipeline.resultsStore(root).read(spark).get
+      .select("image_id").as[String].collect()
+    val (rows, distinct) = (ids.length, ids.distinct.length)
+    val okTwice = CrawlPipeline.fetchLogStore(root).read(spark).get
+      .filter(col("status") === "ok").groupBy("unit_path").count()
+      .filter(col("count") > 1).count()
+    assert(rows == distinct && okTwice == 0,
+      s"$rows results rows for $distinct image ids; $okTwice ok units logged twice")
+  }
+
+  test("crash in a fetch-url scope, then a hosting run: every unit lands in " +
+      "results once") {
+    val root = freshRoot()
+    // the run `Krawl.fetchUrls` makes for two thingiverse URLs
+    val paths = Seq("thingiverse.com/0/7", "thingiverse.com/0/14")
+    intercept[RuntimeException] {
+      CrawlPipeline.run(spark, storeDir, root, limit = Some(2L), revisit = true,
+        scope = col("unit_path").isin(paths: _*), crashBeforeSeenCommit = true)
+    }
+    CrawlPipeline.run(spark, storeDir, root,
+      scope = col("hosting_id") === "thingiverse.com")
+    val ids = CrawlPipeline.resultsStore(root).read(spark).get
+      .select("image_id").as[String].collect()
+    val (rows, distinct) = (ids.length, ids.distinct.length)
+    assert(rows > 0 && rows == distinct, s"$rows results rows for $distinct image ids")
   }
 
   test("url_seen compaction: summary-first exclusion ≡ raw event-log fold " +

@@ -6,8 +6,9 @@ import graft.SparkTestBase
 class SnapshotStoreSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** A table in a fresh table root (the root holds the commit log). */
   private def tmp(): String =
-    Files.createTempDirectory("graft-snap").toString
+    Files.createTempDirectory("graft-snap").resolve("t").toString
 
   test("replace: one-commit overwrite — read sees only the new rows, old " +
       "versions stay time-travelable until expired") {
@@ -149,6 +150,37 @@ class SnapshotStoreSpec extends SparkTestBase {
     val t = store.truncate()
     assert(t.files.isEmpty)
     assert(store.read(spark).isEmpty)
+  }
+
+  /** Runs `work(i)` for i in 0 until n on n threads and waits for all. */
+  private def onThreads(n: Int)(work: Int => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try (0 until n).map(i => pool.submit(new Runnable { def run(): Unit = work(i) }))
+      .foreach(_.get())
+    finally pool.shutdown()
+  }
+
+  test("concurrent committers: 8 instances × 50 truncates end at v399") {
+    val root = tmp()
+    onThreads(8)(_ => {
+      val store = new SnapshotStore(root)
+      (1 to 50).foreach(_ => store.truncate())
+    })
+    assert(new SnapshotStore(root).currentVersion.contains(399L))
+  }
+
+  test("concurrent committers: every row of N threads × M appends is visible") {
+    val root = tmp()
+    val (threads, appends) = (4, 10)
+    onThreads(threads)(t => {
+      val store = new SnapshotStore(root)
+      (0 until appends).foreach(k =>
+        store.append(spark, Seq((t * 100L + k, "a")).toDF("id", "pk"), "pk"))
+    })
+    val store = new SnapshotStore(root)
+    assert(store.currentVersion.contains(threads * appends - 1L))
+    assert(store.read(spark).get.select("id").as[Long].collect().toSet ==
+      (for (t <- 0 until threads; k <- 0 until appends) yield t * 100L + k).toSet)
   }
 
   test("snapshot json roundtrip preserves 64-bit values exactly") {
