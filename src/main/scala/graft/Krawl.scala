@@ -48,8 +48,9 @@ object Krawl {
     val summary = CrawlPipeline.runConfigured(spark, storeDir, tableRoot, config,
       limit = Some(paths.length.toLong), revisit = true,
       scope = col("unit_path").isin(paths.toSeq: _*))
-    val fetched = CrawlPipeline.urlSeenStore(tableRoot).readAt(spark, summary.version)
-      .map(_.filter(col("run_seq") === summary.version).select("unit_path", "status"))
+    val fetched = CrawlPipeline.urlSeenStore(tableRoot)
+      .readBetween(spark, summary.version - 1, summary.version)
+      .map(_.select("unit_path", "status"))
       .getOrElse(Seq.empty[(String, String)].toDF("unit_path", "status"))
     // report: per input URL, its outcome (missing from store → not_in_store)
     parsed.join(fetched, Seq("unit_path"), "left_outer")

@@ -708,7 +708,7 @@ object SparkEntry {
           "completed_ms", "retries", "status")
     }),
     // url_seen COMPACTION through the driver gate: sliced crawl to
-    // exhaustion with periodic compaction + a final compaction, then the
+    // exhaustion with auto-compaction + a final compaction, then the
     // resolved summary itself is the oracle-checked output — (perm, n_err)
     // per unit are closed-form functions of the id residues (robots %103 →
     // permanent; not_found %101 → permanent; error %997 → never-permanent
@@ -720,8 +720,7 @@ object SparkEntry {
       val storeDir = s"/tmp/graft_e2e_store_$n" // shared with q_crawl_e2e
       graft.fixtures.SyntheticStore.ensureOnDisk(s, storeDir, n)
       val root = freshRunRoot("compact", n)
-      graft.pipeline.CrawlPipeline.runUntilDone(s, storeDir, root,
-        math.max(1L, n / 3), compactEvery = 2)
+      graft.pipeline.CrawlPipeline.runUntilDone(s, storeDir, root, math.max(1L, n / 3))
       graft.pipeline.CrawlPipeline.compactUrlSeen(s, root)
       graft.pipeline.CrawlPipeline.urlSeenSummaryStore(root).read(s).get
         .select(col("unit_path"), col("perm").cast("long").as("perm"),

@@ -1,10 +1,13 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fetch.FetchStage
 import graft.fixtures.SyntheticStore
 import graft.functions.{ImageFunctions, TextNormalize, UrlFunctions}
+import graft.operators.CrawlOps
 import graft.tables.SnapshotStore
 
 /** The end-to-end crawl (SURVEY §3.4, §7.2): seed → canonicalize →
@@ -49,33 +52,28 @@ object CrawlPipeline {
     */
   def rawStore(tableRoot: String) = new SnapshotStore(s"$tableRoot/raw")
   /** Resolved-summary twin of the url_seen event log: ONE row per unit
-    * (`bucket, unit_path, perm, n_err`) folded from all events up to the
-    * `covered_version` metric. The sustained-10^10 maintenance path: the
-    * per-run exclusion aggregate reads this summary plus only the DELTA
-    * events (`run_seq > covered_version`), so exclusion cost stays
-    * proportional to candidates + recent activity instead of re-aggregating
-    * the full attempt history every run.
+    * (resolution counters, bucket, CrawlingMeta state) folded from all events
+    * up to its `covered_version` metric (`compactUrlSeen`). The per-run
+    * exclusion reads it plus only the events after that version, so its
+    * cost follows candidates + recent activity, not the attempt history.
     */
   def urlSeenSummaryStore(tableRoot: String) =
     new SnapshotStore(s"$tableRoot/url_seen_summary")
 
   /** Per-unit resolution counters from an event-log slice: `perm` = unit has
     * a permanent outcome, `n_err` = retryable-error attempts. The SAME fold
-    * whether it runs over raw events (compaction, first runs) or over
-    * summary ∪ delta rows (`perm`/`n_err` re-aggregate associatively:
-    * max-of-max, sum-of-sum).
+    * whether it runs over raw events or over summary ∪ delta rows
+    * (`perm`/`n_err` re-aggregate associatively: max-of-max, sum-of-sum).
     */
-  private def foldResolution(events: DataFrame,
-      groupCols: Seq[String] = Seq("unit_path")): DataFrame = {
-    val aggs = graft.operators.CrawlOps.resolutionAggs
-    events.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  private def foldResolution(events: DataFrame): DataFrame = {
+    val aggs = CrawlOps.resolutionAggs
+    events.groupBy("unit_path").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The committed summary pinned to the SNAPSHOT its covered_version came
-    * from (`readAt`, not `read` — a compaction committing between the two
-    * calls must not pair a new summary with a stale covered version, which
-    * would double-count the events in between). Shared by the exclusion
-    * fold and the compacted CrawlingMeta view.
+  /** The committed summary with the covered_version of the SAME snapshot
+    * (`readAt`: a compaction committing in between must not pair a new
+    * summary with a stale covered version, double-counting the events
+    * between them).
     */
   private def summaryWithCovered(spark: SparkSession,
       tableRoot: String): Option[(DataFrame, Long)] =
@@ -85,48 +83,40 @@ object CrawlPipeline {
       df <- urlSeenSummaryStore(tableRoot).readAt(spark, snap.version)
     } yield (df, covered)
 
-  /** Periodic compaction job (run between crawls, like Iceberg table
-    * maintenance): fold the whole url_seen event log into the resolved
-    * summary, stamped with the url_seen version it covers. Each compaction
-    * REPLACES the summary in ONE commit (`SnapshotStore.replace` — the
-    * summary is derived state; the event log stays the source of truth for
-    * CrawlingMeta history). Crash-safe: a crash at any point leaves either
-    * the fully-old or fully-new summary, so the old covered_version stays
-    * readable until the new one commits. The prior summary's files are
-    * physically expired right after the commit.
+  /** Table maintenance (like Iceberg's): advance the summary to the
+    * url_seen version current at the start by ONE merge of the events
+    * committed since its covered version, summary' = merge(summary,
+    * fold(events in (covered, current])) — the manifests' file delta
+    * (`readBetween`); with no summary, just the fold of (-1, current]. Cost
+    * is the gap plus the summary, never the history. Valid while url_seen
+    * is append-only after `covered_version`; its one rewrite,
+    * `startOverHosting`, truncates the summary in the same commit. The fold
+    * is `CrawlOps.metaStateWithResolution` (the exclusion's resolution
+    * counters, the bucket, the mergeable CrawlingMeta state). The new
+    * summary replaces the old in one commit based on the summary version it
+    * merged: a concurrent compaction fails it loudly, so `covered_version`
+    * never moves back. Writes nothing when no event follows the covered
+    * version. Returns the covered version, None with no summary.
     */
   def compactUrlSeen(spark: SparkSession, tableRoot: String): Option[Long] = {
+    val summary = urlSeenSummaryStore(tableRoot)
     val seen = urlSeenStore(tableRoot)
-    for {
-      // events pinned to the SAME snapshot that defines covered_version
-      // (`readAt`): a crawl committing mid-compaction must not leak its
-      // events into a summary stamped with the older version — that would
-      // permanently double-count them in every summary+delta merge
-      snap <- seen.currentSnapshot
-      events <- seen.readAt(spark, snap.version)
+    // the summary first: url_seen can only have moved past what it covers
+    val basedOn = summary.currentVersion.getOrElse(-1L)
+    val prior = summaryWithCovered(spark, tableRoot)
+    val covered = prior.fold(-1L)(_._2)
+    (for {
+      version <- seen.currentVersion.filter(_ > covered)
+      events <- seen.readBetween(spark, covered, version)
     } yield {
-      val coveredVersion = snap.version
-      // ONE aggregation pass carries the resolution counters (shared
-      // CrawlOps.resolutionAggs — the per-run delta fold uses the same
-      // expressions, so summary and delta can never disagree), the routing
-      // bucket (partition layout), and the full mergeable CrawlingMeta
-      // state: both event-log consumers absorb compacted history
-      val summary = graft.operators.CrawlOps.metaStateWithResolution(events)
-      replaceSummary(spark, tableRoot, summary, coveredVersion)
-      coveredVersion
-    }
-  }
-
-  /** Commit a freshly-computed summary state (shared by the full-fold and
-    * incremental compaction paths): one atomic `replace` stamped with the
-    * url_seen version it covers, prior summary files expired right after.
-    */
-  private def replaceSummary(spark: SparkSession, tableRoot: String,
-      summary: DataFrame, coveredVersion: Long): Unit = {
-    val store = urlSeenSummaryStore(tableRoot)
-    store.replace(spark, summary, "bucket",
-      Map("covered_version" -> coveredVersion), clusterBeforeWrite = true)
-    store.expire(keepLast = 1)
+      val gap = CrawlOps.metaStateWithResolution(events)
+      val state = prior.fold(gap)(p => CrawlOps.mergeMetaStatesWithResolution(p._1, gap))
+      SnapshotStore.commit(Seq(summary.write(spark, state, "bucket",
+        Map("covered_version" -> version), clusterBeforeWrite = true, replace = true)
+        .copy(basedOn = Some(basedOn))))
+      summary.expire(keepLast = 1)
+      version
+    }).orElse(prior.map(_._2))
   }
 
   /** Seed URL per store id: all SIX platform families by id residue — the
@@ -187,15 +177,35 @@ object CrawlPipeline {
   def storeKeysDir(storeDir: String): String =
     storeDir.stripSuffix("/") + "_keys"
 
+  /** The store's parquet files, sorted, with their sizes. The key sidecar
+    * and the bucketed layout are derived from the store: `ensureBucketedStore`
+    * stamps each with the fingerprint it was built from, in a `_` file that
+    * parquet reads skip, and each is used only while the store still has it.
+    */
+  private def storeFingerprint(storeDir: String): String = {
+    val root = Paths.get(storeDir)
+    val s = Files.walk(root)
+    try sha256Hex(s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(f => s"${root.relativize(f)} ${Files.size(f)}").toVector.sorted.mkString("\n"))
+    finally s.close()
+  }
+
+  private val Stamp = "_STORE_FINGERPRINT"
+
+  private def stampedWith(dir: String, fp: String): Boolean =
+    Files.exists(Paths.get(dir, Stamp)) && Files.readString(Paths.get(dir, Stamp)) == fp
+
+  private def sha256Hex(s: String): String = java.security.MessageDigest
+    .getInstance("SHA-256").digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   /** Frontier from the synthetic store dir: one URL per store row (the
     * store's image_id encodes the payload id; the platform family comes
     * from the id residue). Seeds are (url, seq=id).
     */
   def frontier(spark: SparkSession, storeDir: String): DataFrame = {
-    val keysDir = storeKeysDir(storeDir)
     val src =
-      if (new java.io.File(s"$keysDir/_SUCCESS").exists())
-        spark.read.parquet(keysDir)
+      if (stampedWith(storeKeysDir(storeDir), storeFingerprint(storeDir)))
+        spark.read.parquet(storeKeysDir(storeDir))
       else spark.read.parquet(storeDir)
     val ids = src
       .select(regexp_extract(col("image_id"), "^thing:(\\d+)/", 1).cast("long").as("id"),
@@ -257,11 +267,7 @@ object CrawlPipeline {
     * of the full path (dir.hashCode is 32-bit — two distinct store dirs
     * colliding would silently join the wrong payload bytes).
     */
-  def storeTableName(dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
-    s"graft_store_b$digest"
-  }
+  def storeTableName(dir: String): String = s"graft_store_b${sha256Hex(dir).take(32)}"
 
   /** One-time ingest of the payload store into an id-bucketed table — the
     * shared storage layout that makes the payload join storage-partitioned.
@@ -272,45 +278,43 @@ object CrawlPipeline {
     * into the store's bucketing while the image bytes never move and
     * nothing flows through the driver. Idempotent: reuses the bucketed
     * files across sessions (re-registering the external table when a fresh
-    * catalog doesn't know it yet).
+    * catalog doesn't know it yet) while their stamp matches the store's
+    * fingerprint, and rebuilds both derived layouts when it does not.
     */
   def ensureBucketedStore(spark: SparkSession, storeDir: String): String = {
     val dir = storeDir.stripSuffix("/") + "_bucketed"
     val tbl = storeTableName(dir)
-    // key projection sidecar (same prep step, same write-once idempotency):
-    // a few small files the frontier scan reads instead of splitting the
-    // payload files into hundreds of byte-sized tasks to extract two
-    // columns. Sharded to the session's parallelism so the scan (and the
-    // per-row URL derivation on top of it) still parallelizes — a single
-    // file would serialize the frontier parse into one task, which is the
-    // exact failure mode the sidecar exists to avoid. ~10^-4 of the store
-    // bytes; at 10^10 rows the ingest shards it like any columnar table.
-    val keysDir = storeKeysDir(storeDir)
-    if (!new java.io.File(s"$keysDir/_SUCCESS").exists()) synchronized {
-      if (!new java.io.File(s"$keysDir/_SUCCESS").exists())
-        spark.read.parquet(storeDir).select(col("image_id"), col("phash"))
-          .repartition(math.max(spark.sparkContext.defaultParallelism, 16))
-          .write.mode("overwrite").parquet(keysDir)
+    val fp = storeFingerprint(storeDir)
+    // (re)build a derived layout under the lock unless it is stamped with fp
+    def derive(out: String)(build: => Unit): Unit = if (!stampedWith(out, fp)) synchronized {
+      if (!stampedWith(out, fp)) { build; Files.writeString(Paths.get(out, Stamp), fp) }
+    }
+    // the key sidecar, sharded to the session's parallelism so the frontier
+    // scan (and the URL derivation on it) still parallelizes — one file
+    // would serialize the frontier parse into one task
+    derive(storeKeysDir(storeDir)) {
+      spark.read.parquet(storeDir).select(col("image_id"), col("phash"))
+        .repartition(math.max(spark.sparkContext.defaultParallelism, 16))
+        .write.mode("overwrite").parquet(storeKeysDir(storeDir))
+    }
+    derive(dir) {
+      // pre-cluster on the bucket hash so each task writes exactly one
+      // bucket file (otherwise: tasks × buckets small files); overwrite
+      // also drops a registration of the stale layout
+      spark.read.parquet(storeDir)
+        .withColumn("id", regexp_extract(col("image_id"), "^thing:(\\d+)/", 1).cast("long"))
+        .repartition(NBuckets, col("id"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(NBuckets, "id")
+        .option("path", dir)
+        .saveAsTable(tbl)
     }
     if (!spark.catalog.tableExists(tbl)) synchronized {
       if (!spark.catalog.tableExists(tbl)) {
-        if (new java.io.File(s"$dir/_SUCCESS").exists()) {
-          // files already in the bucketed layout → register, don't rewrite
-          val schema = spark.read.parquet(dir).schema
-          spark.sql(s"CREATE TABLE $tbl (${schema.toDDL}) USING parquet " +
-            s"CLUSTERED BY (id) INTO $NBuckets BUCKETS LOCATION '$dir'")
-        } else {
-          val df = spark.read.parquet(storeDir)
-            .withColumn("id",
-              regexp_extract(col("image_id"), "^thing:(\\d+)/", 1).cast("long"))
-          // pre-cluster on the bucket hash so each task writes exactly one
-          // bucket file (otherwise: tasks × buckets small files)
-          df.repartition(NBuckets, col("id"))
-            .write.mode("overwrite").format("parquet")
-            .bucketBy(NBuckets, "id")
-            .option("path", dir)
-            .saveAsTable(tbl)
-        }
+        // files already in the bucketed layout → register, don't rewrite
+        val schema = spark.read.parquet(dir).schema
+        spark.sql(s"CREATE TABLE $tbl (${schema.toDDL}) USING parquet " +
+          s"CLUSTERED BY (id) INTO $NBuckets BUCKETS LOCATION '$dir'")
       }
     }
     tbl
@@ -377,18 +381,16 @@ object CrawlPipeline {
       val might = seenFilters.predicate(filterDir)
       val maybeSeen = routed.filter(might)
       val candSet = maybeSeen.select("unit_path").distinct()
-      val perUnit = summaryWithCovered(spark, tableRoot) match {
-        case None =>
-          foldResolution(seenDf.join(candSet, Seq("unit_path"), "left_semi"))
-        case Some((summaryDf, covered)) =>
-          val base = summaryDf.select("unit_path", "perm", "n_err")
-            .join(candSet, Seq("unit_path"), "left_semi")
-          val delta = foldResolution(seenDf
-            .filter(col("run_seq") > covered)
-            .join(candSet, Seq("unit_path"), "left_semi"))
+      val summary = summaryWithCovered(spark, tableRoot)
+      val delta = foldResolution(seenDf
+        .filter(col("run_seq") > summary.fold(-1L)(_._2))
+        .join(candSet, Seq("unit_path"), "left_semi"))
+      val perUnit = summary.fold(delta) { case (summaryDf, _) =>
+        summaryDf.select("unit_path", "perm", "n_err")
+          .join(candSet, Seq("unit_path"), "left_semi")
           // perm re-aggregates as max-of-max, n_err as sum-of-sum
-          base.unionByName(delta).groupBy("unit_path")
-            .agg(max("perm").as("perm"), sum("n_err").as("n_err"))
+          .unionByName(delta).groupBy("unit_path")
+          .agg(max("perm").as("perm"), sum("n_err").as("n_err"))
       }
       val resolved = perUnit
         .filter(col("perm") === 1 || col("n_err") >= maxErrorRetries)
@@ -401,6 +403,12 @@ object CrawlPipeline {
   /** One crawl run: process up to `limit` frontier units not yet in
     * url_seen, publish every table it writes in one commit, return counters.
     * Re-invoking continues from the committed snapshot (resume, R6).
+    *
+    * After the commit the seen filters take the run's keys, and once the
+    * events committed since the summary's covered version exceed
+    * `autoCompactAlpha` × its rows (<= 0: never), `compactUrlSeen` merges
+    * exactly those events into it (valid while url_seen is append-only after
+    * `covered_version`: `startOverHosting` truncates the summary too).
     */
   def run(spark: SparkSession, storeDir: String, tableRoot: String,
       limit: Option[Long] = None,
@@ -415,12 +423,8 @@ object CrawlPipeline {
       // Each kind owns its directory, so switching kinds on an existing
       // table root just builds the new kind fresh.
       seenFilters: graft.frontier.SeenFilterStore[_] = graft.frontier.SeenFilters.bloom,
-      // self-triggering table maintenance (reference parity: the state
-      // rewrite happens on every store, fetcher_state.py:26-51): compact
-      // the url_seen event log into the resolved summary whenever the
-      // uncompacted delta exceeds autoCompactAlpha × summary rows, so the
-      // summary-first exclusion fold's input stays bounded WITHOUT any
-      // caller opting in. <= 0 disables (explicit-maintenance mode).
+      // self-triggering table maintenance, see above (reference parity: the
+      // state rewrite happens on every store, fetcher_state.py:26-51)
       autoCompactAlpha: Double = 1.0,
       // budgets from the (validated) config layer — defaults reproduce the
       // shipped constants exactly (CrawlConfig.default)
@@ -605,40 +609,15 @@ object CrawlPipeline {
       val resultRows = snaps.head.metrics("commit_rows")
       val snap = snaps(2) // url_seen
 
-      // auto-compaction policy: events appended since the summary's covered
-      // version, counted from snapshot-manifest metrics alone (no table
-      // scan — one small JSON per commit since the last compaction, a count
-      // the policy itself keeps bounded)
+      // auto-compaction policy: the events committed since the summary's
+      // covered version, from the lineage of two manifests (no table scan)
       def autoCompact(): Unit = if (autoCompactAlpha > 0) {
         val summarySnap = urlSeenSummaryStore(tableRoot).currentSnapshot
         val covered = summarySnap.flatMap(_.metrics.get("covered_version")).getOrElse(-1L)
         val summaryRows = summarySnap.map(_.files.map(_.rows).sum).getOrElse(0L)
-        val deltaRows = ((covered + 1) to snap.version)
-          .map(v => seen.readSnapshot(v).metrics.getOrElse("commit_rows", 0L)).sum
-        if (deltaRows > autoCompactAlpha * math.max(1L, summaryRows)) {
-          // INCREMENTAL compaction: this run's events are still cached (the
-          // seenRows projection of `log`), so when the summary already
-          // covers everything before this commit — or this commit IS the
-          // whole event log — the new summary folds only this run's events
-          // and merges with the stored state (`mergeMetaStatesWithResolution`,
-          // associative re-aggregation). Compaction cost is then ∝ this
-          // run's events, never the table's history — the maintenance twin
-          // of the summary-first exclusion fold. Any other gap shape
-          // (skipped compactions, a start-over rewrite, a pre-widening
-          // summary schema) falls back to the full event-log fold.
-          val runState = graft.operators.CrawlOps.metaStateWithResolution(seenRows)
-          if (snap.parentVersion == -1L)
-            replaceSummary(spark, tableRoot, runState, snap.version)
-          else summaryWithCovered(spark, tableRoot) match {
-            case Some((summaryDf, c)) if c == snap.parentVersion &&
-                summaryDf.columns.contains("visits") =>
-              replaceSummary(spark, tableRoot,
-                graft.operators.CrawlOps.mergeMetaStatesWithResolution(
-                  summaryDf, runState),
-                snap.version)
-            case _ => compactUrlSeen(spark, tableRoot)
-          }
-        }
+        if (seen.lineageDelta(covered, snap.version).values.sum >
+            autoCompactAlpha * math.max(1L, summaryRows))
+          compactUrlSeen(spark, tableRoot)
       }
       // the filter merge and the compaction are independent post-commit
       // maintenance on disjoint state (per-bucket filter files vs the summary
@@ -741,56 +720,36 @@ object CrawlPipeline {
 
   /** The CrawlingMeta view over this table root's url_seen event log. */
   def crawlingMeta(spark: SparkSession, tableRoot: String): Option[DataFrame] =
-    urlSeenStore(tableRoot).read(spark)
-      .map(graft.operators.CrawlOps.crawlingMeta)
+    urlSeenStore(tableRoot).read(spark).map(CrawlOps.crawlingMeta)
 
-  /** CrawlingMeta with the compacted summary absorbing history: identical
-    * output to `crawlingMeta`, but only events NEWER than the summary's
-    * covered version are window-folded — the compacted past comes from the
-    * summary's stored meta state, merged across the seam by
-    * `CrawlOps.mergeMetaStates` (cross-boundary hash changes included). At
-    * sustained 10^10 scale this is the reporting twin of the summary-first
-    * exclusion: neither consumer ever re-folds compacted events.
+  /** `crawlingMeta` with the summary absorbing history: only the events
+    * committed after its covered version (`readBetween`, the gap compaction
+    * merges) are window-folded, and merged onto the summary's meta state
+    * across the seam by `CrawlOps.mergeMetaStates` (cross-boundary hash
+    * changes included). Same output; compacted events are never re-folded.
     */
-  def crawlingMetaCompacted(spark: SparkSession, tableRoot: String): Option[DataFrame] =
-    urlSeenStore(tableRoot).read(spark).map { events =>
-      summaryWithCovered(spark, tableRoot) match {
-        // a summary written before the meta-state widening carries only the
-        // resolution columns — fall back to the full fold instead of
-        // failing resolution on the missing state columns (the next
-        // compaction rewrites the summary at the full schema)
-        case Some((summaryDf, covered)) if summaryDf.columns.contains("visits") =>
-          val delta = graft.operators.CrawlOps.metaState(
-            events.filter(col("run_seq") > covered))
-          graft.operators.CrawlOps.mergeMetaStates(
-            summaryDf.drop("bucket", "perm", "n_err"), delta)
-            .select(graft.operators.CrawlOps.MetaPublicCols.map(col): _*)
-        case _ => graft.operators.CrawlOps.crawlingMeta(events)
-      }
-    }
+  def crawlingMetaCompacted(spark: SparkSession, tableRoot: String): Option[DataFrame] = {
+    // the summary first: url_seen can only have moved past what it covers
+    val prior = summaryWithCovered(spark, tableRoot)
+    val seen = urlSeenStore(tableRoot)
+    val gap = seen.currentVersion
+      .flatMap(v => seen.readBetween(spark, prior.fold(-1L)(_._2), v))
+    (prior.map(_._1.drop("bucket", "perm", "n_err")) ++ gap.map(CrawlOps.metaState))
+      .reduceOption(CrawlOps.mergeMetaStates)
+      .map(_.select(CrawlOps.MetaPublicCols.map(col): _*))
+  }
 
   /** Run to exhaustion (all frontier units either seen or error),
     * `limit`-sized slices per run. Returns the per-run summaries.
     */
   def runUntilDone(spark: SparkSession, storeDir: String, tableRoot: String,
-      limit: Long, compactEvery: Int = 0,
-      autoCompactAlpha: Double = 1.0): Seq[RunSummary] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[RunSummary]
-    var keepGoing = true
-    while (keepGoing) {
-      val s = run(spark, storeDir, tableRoot, Some(limit),
-        autoCompactAlpha = autoCompactAlpha)
-      out += s
-      // periodic table maintenance: fold the event log into the resolved
-      // summary every `compactEvery` runs (0 = never)
-      if (compactEvery > 0 && out.size % compactEvery == 0)
-        compactUrlSeen(spark, tableRoot)
-      // retryable errors leave the frontier after MaxErrorRetries recorded
-      // attempts, so an empty slice (attempted == 0) means true exhaustion —
-      // slices always advance into fresh frontier instead of re-fetching
-      // known-permanent failures forever
-      keepGoing = s.attempted > 0
-    }
-    out.toSeq
+      limit: Long, autoCompactAlpha: Double = 1.0): Seq[RunSummary] = {
+    // retryable errors leave the frontier after MaxErrorRetries recorded
+    // attempts, so an empty slice (attempted == 0) means true exhaustion —
+    // slices always advance into fresh frontier instead of re-fetching
+    // known-permanent failures forever
+    val (busy, rest) = Iterator.continually(run(spark, storeDir, tableRoot, Some(limit),
+      autoCompactAlpha = autoCompactAlpha)).span(_.attempted > 0)
+    busy.toVector :+ rest.next()
   }
 }

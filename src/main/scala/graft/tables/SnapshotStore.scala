@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A `SnapshotStore` is one table; the directory above it is its table root:
   *
   * ```
-  * <root>/_commits/v<K>.json       {"version":K,"tables":{"<table>":N,…}}
+  * <root>/_commits/v<K>.json       {"version":K,"tables":{"<table>":N,…}}, K current
   * <root>/_commits/CURRENT         text "v<K>", atomically replaced
   * <root>/_commits/LOCK            the commit lock file
   * <root>/<table>/data/<commit-uuid>/part-*.parquet   immutable data files
@@ -29,11 +29,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * builds each table's snapshot on that table's current version (appends
   * rebase, so concurrent committers lose nothing), writes each `v<N>.json`,
   * then the entry `v<K>.json` (both temp-file + ATOMIC_MOVE), and last flips
-  * `_commits/CURRENT`, the only pointer readers follow. A crash at any point
-  * leaves either the old entry (orphan files are ignored, overwritten by the
-  * next commit, reclaimed by `expire`) or every table of the commit
-  * published at once — the reference's store-state-then-continue
-  * checkpointing (fetcher_state.py:26-51) with root-level atomicity.
+  * `_commits/CURRENT`, the only pointer readers follow; the older entries
+  * are then deleted. A crash at any point leaves either the old entry
+  * (orphan files are ignored, overwritten by the next commit, reclaimed by
+  * `expire`) or every table of the commit published at once — the
+  * reference's store-state-then-continue checkpointing
+  * (fetcher_state.py:26-51) with root-level atomicity.
   */
 final class SnapshotStore(val root: String) {
   import SnapshotStore._
@@ -70,13 +71,15 @@ final class SnapshotStore(val root: String) {
     * diff no longer equals the row delta — that's an error, loudly: the
     * caller must fall back to a full scan (or consume deltas BEFORE
     * compacting, which is how `CrawlPipeline`'s auto-compaction is
-    * sequenced). Returns None when the range added no files.
+    * sequenced). `fromVersion = -1` is "before the first commit", so
+    * (-1, v] is all of version v. Returns None when the range added no
+    * files.
     */
   def readBetween(spark: SparkSession, fromVersion: Long,
       toVersion: Long): Option[DataFrame] = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion > toVersion $toVersion")
-    val fromPaths = readSnapshot(fromVersion).files.map(_.path).toSet
+    val fromPaths = snapshotOrEmpty(fromVersion).files.map(_.path).toSet
     val to = readSnapshot(toVersion)
     val removed = fromPaths -- to.files.map(_.path).toSet
     require(removed.isEmpty,
@@ -90,13 +93,13 @@ final class SnapshotStore(val root: String) {
     * lineage counts in the manifests — no file I/O. The driver-side
     * companion of [[readBetween]]: a consumer can see WHICH partitions
     * changed (and by how much) before deciding to scan anything.
-    * Same append-only validity domain; negative deltas (history rewrite)
-    * fail loudly.
+    * Same append-only validity domain (and the same `fromVersion = -1`);
+    * negative deltas (history rewrite) fail loudly.
     */
   def lineageDelta(fromVersion: Long, toVersion: Long): Map[String, Long] = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion > toVersion $toVersion")
-    val from = readSnapshot(fromVersion).lineage
+    val from = snapshotOrEmpty(fromVersion).lineage
     val to = readSnapshot(toVersion).lineage
     val delta = (from.keySet ++ to.keySet).iterator
       .map(k => k -> (to.getOrElse(k, 0L) - from.getOrElse(k, 0L)))
@@ -115,6 +118,11 @@ final class SnapshotStore(val root: String) {
     */
   def read(spark: SparkSession): Option[DataFrame] =
     currentSnapshot.flatMap(snap => readFiles(spark, snap.files))
+
+  /** Version `v`'s snapshot; the empty table before the first commit at -1. */
+  private def snapshotOrEmpty(v: Long): Snapshot =
+    if (v == -1L) Snapshot(-1L, -1L, Vector.empty, Map.empty, Map.empty)
+    else readSnapshot(v)
 
   private def readFiles(spark: SparkSession, files: Vector[DataFileMeta]): Option[DataFrame] =
     if (files.isEmpty) None
@@ -297,9 +305,16 @@ object SnapshotStore {
       }
       val entry = tables ++ changes.map(_.store.name).zip(snaps.map(_.version))
       val log = root.resolve(LogDir)
-      writeAtomic(log.resolve(s"v${version + 1}.json"), Json.obj(
+      val entryName = s"v${version + 1}.json"
+      writeAtomic(log.resolve(entryName), Json.obj(
         "version" -> Json.n(version + 1), "tables" -> longsJson(entry)).toString)
       writeAtomic(log.resolve("CURRENT"), s"v${version + 1}")
+      // only CURRENT's entry is ever read: prune the older ones (a reader
+      // that resolved one of them just now re-reads CURRENT, see logEntry)
+      withList(log)(_.filter { f =>
+        val n = f.getFileName.toString
+        n.startsWith("v") && n.endsWith(".json") && n != entryName
+      }.foreach(Files.deleteIfExists))
       snaps
     }
   }
@@ -307,13 +322,20 @@ object SnapshotStore {
   private val LogDir = "_commits"
 
   /** A root's current log entry: its version and the table versions it
-    * names. None before the root's first commit. */
+    * names. None before the root's first commit. An entry that is gone was
+    * pruned by a commit that has already moved CURRENT on: read it again. */
+  @scala.annotation.tailrec
   private def logEntry(root: Path): Option[(Long, Map[String, Long])] = {
     val current = root.resolve(LogDir).resolve("CURRENT")
-    Option.when(Files.exists(current)) {
+    if (!Files.exists(current)) None
+    else {
       val k = Files.readString(current).trim.stripPrefix("v")
-      val j = Json.parse(Files.readString(root.resolve(LogDir).resolve(s"v$k.json")))
-      (k.toLong, longs(j.asInstanceOf[Json.JObj]("tables")))
+      val entry = try Some(Files.readString(root.resolve(LogDir).resolve(s"v$k.json")))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      entry match {
+        case Some(j) => Some((k.toLong, longs(Json.parse(j).asInstanceOf[Json.JObj]("tables"))))
+        case None => logEntry(root)
+      }
     }
   }
 
@@ -352,8 +374,10 @@ object SnapshotStore {
     try f(s.iterator().asScala) finally s.close()
   }
 
-  private def isEmptyDir(d: Path): Boolean = {
-    val s = Files.list(d)
-    try !s.iterator().hasNext finally s.close()
+  private def withList[A](dir: Path)(f: Iterator[Path] => A): A = {
+    val s = Files.list(dir)
+    try f(s.iterator().asScala) finally s.close()
   }
+
+  private def isEmptyDir(d: Path): Boolean = withList(d)(!_.hasNext)
 }

@@ -245,7 +245,8 @@ class CrawlPipelineSpec extends SparkTestBase {
       autoCompactAlpha = 0)
     // B: compacted after EVERY run → each run's exclusion reads the summary
     // with an empty delta
-    val sumB = CrawlPipeline.runUntilDone(spark, bigStore, rootB, 500L, compactEvery = 1)
+    val sumB = CrawlPipeline.runUntilDone(spark, bigStore, rootB, 500L,
+      autoCompactAlpha = 0.01)
     // C: compacted ONCE after the first slice → later runs merge the stale
     // summary with a growing event delta (run_seq > covered_version)
     CrawlPipeline.run(spark, bigStore, rootC, Some(500L), autoCompactAlpha = 0)
@@ -456,6 +457,48 @@ class CrawlPipelineSpec extends SparkTestBase {
     })
   }
 
+  test("gap compaction: after skipped compactions, compactUrlSeen reads " +
+      "only the url_seen events committed since the covered version") {
+    val root = freshRoot()
+    // one compacted slice (the default policy compacts the first commit),
+    // then three slices whose compaction never ran — the state a crash
+    // after each run's commit, before its compaction, leaves
+    CrawlPipeline.run(spark, storeDir, root, Some(100L))
+    val summaryStore = CrawlPipeline.urlSeenSummaryStore(root)
+    assert(summaryStore.currentSnapshot.get.metrics("covered_version") == 0L)
+    (1 to 3).foreach(_ =>
+      CrawlPipeline.run(spark, storeDir, root, Some(100L), autoCompactAlpha = 0))
+    val seen = CrawlPipeline.urlSeenStore(root)
+    val version = seen.currentVersion.get
+    assert(version == 3L)
+    val allRows = seen.readSnapshot(version).files.map(_.rows).sum
+    val gapRows = allRows - seen.readSnapshot(0L).files.map(_.rows).sum
+    assert(gapRows > 0L && gapRows < allRows)
+
+    val records = new UrlSeenScanRecords
+    spark.sparkContext.addSparkListener(records)
+    val read = try {
+      records.settle(spark.sparkContext)
+      val before = records.total
+      assert(CrawlPipeline.compactUrlSeen(spark, root).contains(version))
+      records.settle(spark.sparkContext)
+      records.total - before
+    } finally spark.sparkContext.removeSparkListener(records)
+    assert(read == gapRows,
+      s"compaction read $read url_seen records; the gap has $gapRows, all events $allRows")
+
+    val cols = Seq("unit_path", "visits", "first_visited", "last_visited",
+      "last_successfully_visited", "changes", "last_detected_change",
+      "first_ok_hash", "first_ok_seq", "last_ok_hash", "bucket", "perm", "n_err")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect()
+        .map(r => cols.map(c => Option(r.getAs[Any](c)).map(_.toString).orNull))
+        .toSet
+    assert(summaryStore.currentSnapshot.get.metrics("covered_version") == version)
+    assert(rows(summaryStore.read(spark).get) ==
+      rows(graft.operators.CrawlOps.metaStateWithResolution(seen.read(spark).get)))
+  }
+
   test("frontier key sidecar: identical frontier rows with and without the " +
       "projection written by ensureBucketedStore") {
     val dir = Files.createTempDirectory("graft-store-keys").toString
@@ -470,6 +513,23 @@ class CrawlPipelineSpec extends SparkTestBase {
     assert(new java.io.File(s"${CrawlPipeline.storeKeysDir(dir)}/_SUCCESS").exists(),
       "prep must write the key projection")
     assert(frontierRows() == before, "sidecar-backed frontier rows diverged")
+  }
+
+  test("frontier key sidecar: a store rewritten after the prep is read " +
+      "afresh, and the next prep rebuilds both derived layouts") {
+    val dir = Files.createTempDirectory("graft-store-stale").toString
+    SyntheticStore.ensureOnDisk(spark, dir, 120L)
+    CrawlPipeline.ensureBucketedStore(spark, dir)
+    // other ids in the same store dir, under the prep's sidecar
+    spark.range(500L, 560L, 1, 4).as[Long].map(id => SyntheticStore.row(id)).toDF()
+      .write.mode("overwrite").parquet(dir)
+    val newIds = (500L until 560L).toSet
+    def frontierIds() = CrawlPipeline.frontier(spark, dir).select("id").as[Long].collect().toSet
+    assert(frontierIds() == newIds, "frontier served the stale key sidecar")
+    val tbl = CrawlPipeline.ensureBucketedStore(spark, dir)
+    assert(frontierIds() == newIds)
+    assert(spark.table(tbl).select("id").as[Long].collect().toSet == newIds,
+      "the bucketed layout was not rebuilt for the rewritten store")
   }
 
   test("cuckoo seen-filter kind: e2e state identical to bloom; targeted " +
@@ -790,4 +850,62 @@ class CrawlPipelineSpec extends SparkTestBase {
       Seq("appropedia.org", "github.com", "oshwa.org", "thingiverse.com",
         "gitlab.com", "codeberg.org"))
   }
+}
+
+/** url_seen records read by the jobs it sees: the input records of every
+  * task that scanned a parquet file under `/url_seen/data/`. A task is told
+  * apart by the scan it ran, whose SQL row metric it reports; the scans
+  * come from the SQL plans the listener bus posts (adaptive re-plans too).
+  */
+private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkListener {
+  import org.apache.spark.scheduler._
+  import org.apache.spark.sql.execution.SparkPlanInfo
+  import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+    SparkListenerSQLExecutionStart}
+
+  private val scanMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+  private val records = new java.util.concurrent.atomic.AtomicLong
+  private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val markersDone = new java.util.concurrent.atomic.AtomicInteger
+
+  def total: Long = records.get
+
+  /** Wait until the bus has delivered every event posted so far: run a
+    * marker job and wait for its end, which comes after them. */
+  def settle(sc: org.apache.spark.SparkContext): Unit = {
+    val done = markersDone.get
+    sc.setJobDescription(UrlSeenScanRecords.Marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    val deadline = System.currentTimeMillis() + 10000L
+    while (markersDone.get == done && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(markersDone.get > done, "the listener bus did not settle")
+  }
+
+  private def note(p: SparkPlanInfo): Unit = {
+    if (p.metadata.get("Location").exists(_.contains("/url_seen/data/")))
+      p.metrics.filter(_.name == "number of output rows")
+        .foreach(m => scanMetrics.add(m.accumulatorId))
+    p.children.foreach(note)
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => note(s.sparkPlanInfo)
+    case u: SparkListenerSQLAdaptiveExecutionUpdate => note(u.sparkPlanInfo)
+    case _ =>
+  }
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties).exists(_.getProperty("spark.job.description") ==
+        UrlSeenScanRecords.Marker)) markerJobs.add(e.jobId)
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    if (markerJobs.contains(e.jobId)) markersDone.incrementAndGet()
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (e.taskMetrics != null && e.taskInfo.accumulables.exists(a => scanMetrics.contains(a.id)))
+      records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+}
+
+private object UrlSeenScanRecords {
+  val Marker = "url-seen-scan-records-marker"
 }

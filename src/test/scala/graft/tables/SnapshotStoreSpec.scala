@@ -1,6 +1,7 @@
 package graft.tables
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 
 class SnapshotStoreSpec extends SparkTestBase {
@@ -181,6 +182,46 @@ class SnapshotStoreSpec extends SparkTestBase {
     assert(store.currentVersion.contains(threads * appends - 1L))
     assert(store.read(spark).get.select("id").as[Long].collect().toSet ==
       (for (t <- 0 until threads; k <- 0 until appends) yield t * 100L + k).toSet)
+  }
+
+  /** The file names in a table's root commit log. */
+  private def logFiles(table: String): Set[String] = {
+    val s = Files.list(Paths.get(table).getParent.resolve("_commits"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
+
+  test("commit log pruning: after five commits _commits holds CURRENT, LOCK " +
+      "and the one entry CURRENT names") {
+    val root = tmp()
+    val store = new SnapshotStore(root)
+    (1 to 5).foreach(i => store.append(spark, Seq((i.toLong, "a")).toDF("id", "pk"), "pk"))
+    assert(logFiles(root) == Set("CURRENT", "LOCK", "v4.json"))
+    assert(store.currentVersion.contains(4L) && store.read(spark).get.count() == 5)
+  }
+
+  test("commit log pruning: a reader resolving CURRENT during 4 × 20 " +
+      "concurrent appends never fails") {
+    val root = tmp()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicLong
+    val reader = new Thread(() => {
+      val store = new SnapshotStore(root)
+      while (!stop.get) {
+        try { store.currentVersion; reads.incrementAndGet() }
+        catch { case t: Throwable => failure.compareAndSet(null, t); stop.set(true) }
+      }
+    })
+    reader.start()
+    try onThreads(4)(t => {
+      val store = new SnapshotStore(root)
+      (0 until 20).foreach(k =>
+        store.append(spark, Seq((t * 100L + k, "a")).toDF("id", "pk"), "pk"))
+    }) finally { stop.set(true); reader.join() }
+    assert(failure.get == null, s"reader failed after ${reads.get} reads: ${failure.get}")
+    assert(reads.get > 0L)
+    assert(new SnapshotStore(root).currentVersion.contains(79L))
+    assert(logFiles(root) == Set("CURRENT", "LOCK", "v79.json"))
   }
 
   test("snapshot json roundtrip preserves 64-bit values exactly") {
