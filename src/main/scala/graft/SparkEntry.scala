@@ -680,7 +680,7 @@ object SparkEntry {
       graft.fixtures.SyntheticStore.ensureOnDisk(s, storeDir, n)
       val root = freshRunRoot("e2e", n)
       graft.pipeline.CrawlPipeline.run(s, storeDir, root)
-      graft.pipeline.CrawlPipeline.fetchLogStore(root).read(s).get
+      graft.pipeline.CrawlPipeline.urlSeenStore(root).read(s).get
         .select("unit_path", "hosting_id", "id", "pos", "scheduled_ms",
           "completed_ms", "retries", "status")
     }),
@@ -703,7 +703,7 @@ object SparkEntry {
         .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")),
           identity)
       graft.pipeline.CrawlPipeline.runConfigured(s, storeDir, root, cfg)
-      graft.pipeline.CrawlPipeline.fetchLogStore(root).read(s).get
+      graft.pipeline.CrawlPipeline.urlSeenStore(root).read(s).get
         .select("unit_path", "hosting_id", "id", "pos", "scheduled_ms",
           "completed_ms", "retries", "status")
     }),

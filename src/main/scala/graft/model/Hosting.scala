@@ -300,8 +300,4 @@ object GitHubFileHandler {
   /** reference: normalizer/github.py:100-105 */
   def extractPath(url: String): String =
     parts(url).drop(preVersPathParts).mkString("/")
-
-  /** reference: normalizer/github.py:89-90 */
-  def isHomeHostingUrl(info: ProjInfo, url: String): Boolean =
-    url.startsWith(s"$BaseUrl/${info.slug}/")
 }

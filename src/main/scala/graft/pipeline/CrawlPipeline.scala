@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fetch.FetchStage
 import graft.fixtures.SyntheticStore
@@ -13,12 +13,11 @@ import graft.tables.SnapshotStore
 /** The end-to-end crawl (SURVEY §3.4, §7.2): seed → canonicalize →
   * URL-seen anti-join (Bloom-prefiltered) → robots gate → politeness fetch →
   * normalize (caption + image invariants) → snapshot-committed sinks
-  * (`results`, `url_seen`, `fetch_log`), resumable from the latest snapshot.
+  * (`results`, `url_seen`), resumable from the latest snapshot.
   *
   * Table layout under `tableRoot`:
-  *   url_seen/   (unit_path, url_hash, bucket, status)   partitioned by bucket
-  *   results/    north-rule schema + invariants           partitioned by id_group
-  *   fetch_log/  FetchLogRow                              partitioned by hosting_id
+  *   url_seen/   FetchLogRow + run_seq (one row per attempt)  partitioned by bucket
+  *   results/    north-rule schema + invariants               partitioned by id_group
   *
   * Scale posture: all joins key on unit_path/url_hash; the store join is an
   * equi-join on unit_path (storage-partitioned by the same id_group at
@@ -40,7 +39,9 @@ object CrawlPipeline {
 
   def urlSeenStore(tableRoot: String) = new SnapshotStore(s"$tableRoot/url_seen")
   def resultsStore(tableRoot: String) = new SnapshotStore(s"$tableRoot/results")
-  def fetchLogStore(tableRoot: String) = new SnapshotStore(s"$tableRoot/fetch_log")
+  /** url_seen is the fetch log (each attempt's full `FetchLogRow`); this
+    * name stays because krawlbench reads the log through it. */
+  def fetchLogStore(tableRoot: String) = urlSeenStore(tableRoot)
   /** S10 final sink: the three RDF graphs per project (reference
     * store_final, fetch_result_repository_workdir.py:93-111). Flag-gated in
     * `run` like the reference's raw sink (S9).
@@ -402,7 +403,10 @@ object CrawlPipeline {
 
   /** One crawl run: process up to `limit` frontier units not yet in
     * url_seen, publish every table it writes in one commit, return counters.
-    * Re-invoking continues from the committed snapshot (resume, R6).
+    * Re-invoking continues from the committed snapshot (resume, R6). Every
+    * attempt is one url_seen row (its `FetchLogRow` plus `run_seq`); the
+    * status counters are observed on that write and also recorded as the
+    * url_seen commit's metrics.
     *
     * After the commit the seen filters take the run's keys, and once the
     * events committed since the summary's covered version exceed
@@ -508,9 +512,6 @@ object CrawlPipeline {
           col("caption"), col("phash"), col("phash_check"), col("unit_path"),
           col("id_group"))
 
-      val statusCounts = log.groupBy("status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-
       // S10: 3-graph RDF sink — the FULL normalize→TOML→RDF chain per fetched
       // unit, mirroring the reference's NormalizationListener
       // (fetcher/factory.py:49-59): the delivered manifest payload runs
@@ -581,14 +582,14 @@ object CrawlPipeline {
           col("bytes").as("orig"), col("fmt"), col("id_group"))
         rawStore(tableRoot).write(spark, raw, "id_group")
       })
-      // url_hash/bucket/content_hash rode through the fetch stage — no
-      // re-join needed. EVERY attempt is recorded (CrawlingMeta event log):
-      // errors accumulate a retry count and stop being selected after
-      // MaxErrorRetries; re-visits accumulate visit/change counters.
-      val seenRows = log
-        .select(col("unit_path"), col("hosting_id"), col("id"), col("status"),
-          col("url_hash"), col("bucket"), col("content_hash"))
-        .withColumn("run_seq", lit(sliceId + 1))
+      // url_seen is the fetch log: EVERY attempt's full row is a CrawlingMeta
+      // event (errors stop being selected after MaxErrorRetries; re-visits
+      // accumulate visit/change counters). Its write counts the statuses.
+      val seenRows = log.withColumn("run_seq", lit(sliceId + 1))
+      val statusObs = Observation("status_counts")
+      val statusCols = Seq("ok", "not_found", "error", "robots_denied")
+        .map(s => count(when(col("status") === s, 1)).as(s))
+      val counted = seenRows.observe(statusObs, statusCols.head, statusCols.tail: _*)
       // every sink stages its data files (independent tables → their write
       // jobs run concurrently; Spark schedules parallel jobs from threads),
       // then ONE commit publishes them all. A run that fails or crashes
@@ -596,18 +597,17 @@ object CrawlPipeline {
       // scope or limit, selects and writes its slice exactly once.
       val changes = awaitAll(Seq(
         () => resultsStore(tableRoot).write(spark, results, "id_group"),
-        () => fetchLogStore(tableRoot).write(spark, log.toDF(), "hosting_id",
-          statusCounts, clusterBeforeWrite = true),
-        () => seen.write(spark, seenRows, "bucket", statusCounts,
-          clusterBeforeWrite = true).copy(basedOn = Some(sliceId))) ++
+        () => seen.write(spark, counted, "bucket", clusterBeforeWrite = true)
+          .copy(basedOn = Some(sliceId))) ++
         projectsSink ++ rawSinkTask)
+      val statusCounts = statusObs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
 
       if (crashBeforeSeenCommit)
         throw new RuntimeException("injected crash between the sink writes and the run's commit")
 
-      val snaps = SnapshotStore.commit(changes)
+      val snaps = SnapshotStore.commit(changes.updated(1, changes(1).copy(metrics = statusCounts)))
       val resultRows = snaps.head.metrics("commit_rows")
-      val snap = snaps(2) // url_seen
+      val snap = snaps(1) // url_seen
 
       // auto-compaction policy: the events committed since the summary's
       // covered version, from the lineage of two manifests (no table scan)
@@ -631,10 +631,10 @@ object CrawlPipeline {
       RunSummary(
         version = snap.version,
         attempted = statusCounts.values.sum,
-        ok = statusCounts.getOrElse("ok", 0L),
-        notFound = statusCounts.getOrElse("not_found", 0L),
-        error = statusCounts.getOrElse("error", 0L),
-        robotsDenied = statusCounts.getOrElse("robots_denied", 0L),
+        ok = statusCounts("ok"),
+        notFound = statusCounts("not_found"),
+        error = statusCounts("error"),
+        robotsDenied = statusCounts("robots_denied"),
         resultRows = resultRows)
     } finally log.unpersist()
   }
@@ -684,11 +684,11 @@ object CrawlPipeline {
 
   /** Scope a `--start-over` reset to ONE hosting family (the reference
     * resets only the named fetcher's saved state, fetcher.py:44-47 +
-    * 84-86): url_seen/fetch_log/results keep every OTHER hosting's rows;
-    * the derived url_seen summary is dropped entirely (rebuilt by the
-    * next compaction) and the per-bucket seen-filter files reconcile
+    * 84-86): url_seen/results keep every OTHER hosting's rows; the
+    * derived url_seen summary is dropped entirely (rebuilt by the next
+    * compaction) and the per-bucket seen-filter files reconcile
     * automatically on the next run (their stamped version no longer
-    * matches the rewritten url_seen). All four resets publish in one
+    * matches the rewritten url_seen). All three resets publish in one
     * commit, which fails if a table moved while its rewrite was written.
     */
   def startOverHosting(spark: SparkSession, tableRoot: String,
@@ -703,11 +703,9 @@ object CrawlPipeline {
       else store.write(spark, remaining, partitionCol, clusterBeforeWrite = true,
         replace = true)).copy(basedOn = Some(snap.version))
     val summary = urlSeenSummaryStore(tableRoot)
-    val otherHosting = col("hosting_id") =!= hostingId
     val changes = Seq(
       Option.when(summary.currentSnapshot.exists(_.files.nonEmpty))(summary.truncation),
-      rewrite(urlSeenStore(tableRoot), "bucket", otherHosting),
-      rewrite(fetchLogStore(tableRoot), "hosting_id", otherHosting),
+      rewrite(urlSeenStore(tableRoot), "bucket", col("hosting_id") =!= hostingId),
       // NOTE scale trade-off: results is partitioned by id_group, so this
       // predicate cannot prune — resetting one hosting rewrites the other
       // hostings' payload rows too. At fixture/operator scale that is fine;

@@ -114,7 +114,7 @@ class CrawlPipelineSpec extends SparkTestBase {
       "skipped, not appended twice (idempotent resume)") {
     val root = freshRoot()
     CrawlPipeline.run(spark, storeDir, root, Some(150L)) // slice 1, clean
-    // slice 2 crashes AFTER results/fetch_log commit, BEFORE url_seen commit
+    // slice 2 crashes after its sink writes, BEFORE the run's one root commit
     intercept[RuntimeException] {
       CrawlPipeline.run(spark, storeDir, root, Some(150L), crashBeforeSeenCommit = true)
     }
@@ -160,7 +160,7 @@ class CrawlPipelineSpec extends SparkTestBase {
       "released before the error surfaces; url_seen is not committed") {
     val root = freshRoot()
     // a regular file where the results table's directory goes: the results
-    // append fails while the fetch_log append runs beside it
+    // append fails while the url_seen append runs beside it
     Files.createFile(java.nio.file.Paths.get(s"$root/results"))
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     intercept[java.io.IOException] {
@@ -168,14 +168,55 @@ class CrawlPipelineSpec extends SparkTestBase {
     }
     assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
       "fetch-log cache leaked")
-    // the fetch_log write beside it finished (it was awaited) but, like
+    // the url_seen write beside it finished (it was awaited) but, like
     // every table of the failed run, was not published
-    val staged = Files.list(java.nio.file.Paths.get(s"$root/fetch_log/data"))
+    val staged = Files.list(java.nio.file.Paths.get(s"$root/url_seen/data"))
     assert(staged.iterator().asScala.exists(d => Files.exists(d.resolve("_SUCCESS"))),
-      "the fetch_log write was left running")
+      "the url_seen write was left running")
     staged.close()
-    assert(CrawlPipeline.fetchLogStore(root).currentVersion.isEmpty)
     assert(CrawlPipeline.urlSeenStore(root).currentVersion.isEmpty)
+  }
+
+  test("one attempt log: url_seen holds each attempt's full fetch-log row, " +
+      "no run writes fetch_log and no job collects the status counts") {
+    val root = freshRoot()
+    val listener = new UrlSeenScanRecords
+    spark.sparkContext.addSparkListener(listener)
+    val runs = try {
+      val rs = Seq.fill(2)(CrawlPipeline.run(spark, storeDir, root, Some(150L)))
+      listener.settle(spark.sparkContext)
+      rs
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val collects = listener.sqlDescriptions
+      .filter(_.startsWith("collect at CrawlPipeline.scala"))
+    assert(collects.isEmpty, s"status-count jobs: $collects")
+
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/fetch_log")))
+    val commits = java.nio.file.Paths.get(root, "_commits")
+    val entry = Files.readString(commits.resolve(
+      Files.readString(commits.resolve("CURRENT")).trim + ".json"))
+    val tables = graft.tables.Json.parse(entry).asInstanceOf[graft.tables.Json.JObj]
+      .apply("tables").asInstanceOf[graft.tables.Json.JObj].v.map(_._1).toSet
+    assert(tables == Set("results", "url_seen", "url_seen_summary"))
+
+    val seen = CrawlPipeline.urlSeenStore(root)
+    val log = seen.read(spark).get
+    assert(log.columns.toSet == org.apache.spark.sql.Encoders
+      .product[graft.fetch.FetchLogRow].schema.fieldNames.toSet + "run_seq")
+    for (r <- runs) {
+      assert(seen.readBetween(spark, r.version - 1, r.version).get.count() == r.attempted)
+      assert(seen.readSnapshot(r.version).metrics("ok") == r.ok)
+    }
+
+    // each run commits its attempts into its own data/<commit> directory
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("commit"), col("hosting_id")).orderBy(col("priority"), col("seq"))
+    val ranked = log
+      .withColumn("commit", regexp_extract(input_file_name(), "/data/([^/]+)/", 1))
+      .withColumn("rank", row_number().over(w).cast("long"))
+    assert(ranked.select("commit").distinct().count() == 2)
+    assert(ranked.filter(col("rank") =!= col("pos")).count() == 0,
+      "url_seen rows out of (priority, seq) order within their run")
   }
 
   test("crash in a scoped run, then a run with another scope: its payload " +
@@ -856,6 +897,7 @@ class CrawlPipelineSpec extends SparkTestBase {
   * task that scanned a parquet file under `/url_seen/data/`. A task is told
   * apart by the scan it ran, whose SQL row metric it reports; the scans
   * come from the SQL plans the listener bus posts (adaptive re-plans too).
+  * It also keeps the description (call site) of every SQL execution.
   */
 private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkListener {
   import org.apache.spark.scheduler._
@@ -867,8 +909,11 @@ private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkL
   private val records = new java.util.concurrent.atomic.AtomicLong
   private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   private val markersDone = new java.util.concurrent.atomic.AtomicInteger
+  private val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   def total: Long = records.get
+
+  def sqlDescriptions: Seq[String] = descriptions.asScala.toSeq
 
   /** Wait until the bus has delivered every event posted so far: run a
     * marker job and wait for its end, which comes after them. */
@@ -889,7 +934,8 @@ private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkL
   }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-    case s: SparkListenerSQLExecutionStart => note(s.sparkPlanInfo)
+    case s: SparkListenerSQLExecutionStart =>
+      descriptions.add(s.description); note(s.sparkPlanInfo)
     case u: SparkListenerSQLAdaptiveExecutionUpdate => note(u.sparkPlanInfo)
     case _ =>
   }
