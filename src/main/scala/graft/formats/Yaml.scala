@@ -76,10 +76,9 @@ object Yaml {
   private def parseMap(lines: IndexedSeq[Line], start: Int, indent: Int): (Json.Value, Int) = {
     val fields = mutable.ArrayBuffer.empty[(String, Json.Value)]
     var i = start
-    var currentLines = lines
-    while (i < currentLines.length && currentLines(i).indent == indent &&
-        !currentLines(i).content.startsWith("- ")) {
-      val content = currentLines(i).content
+    while (i < lines.length && lines(i).indent == indent &&
+        !lines(i).content.startsWith("- ")) {
+      val content = lines(i).content
       val colon = indexOfColon(content)
       if (colon < 0) throw new IllegalArgumentException(s"bad YAML mapping line: $content")
       val key = unquote(content.substring(0, colon).trim)
@@ -90,12 +89,12 @@ object Yaml {
       } else {
         // nested block (map or list) — lists may sit at the SAME indent
         val childIdx = i + 1
-        if (childIdx < currentLines.length &&
-            (currentLines(childIdx).indent > indent ||
-              (currentLines(childIdx).indent == indent &&
-                currentLines(childIdx).content.startsWith("- ")))) {
-          val childIndent = currentLines(childIdx).indent
-          val (v, next) = parseBlock(currentLines, childIdx, childIndent)
+        if (childIdx < lines.length &&
+            (lines(childIdx).indent > indent ||
+              (lines(childIdx).indent == indent &&
+                lines(childIdx).content.startsWith("- ")))) {
+          val childIndent = lines(childIdx).indent
+          val (v, next) = parseBlock(lines, childIdx, childIndent)
           fields += ((key, v)); i = next
         } else {
           fields += ((key, Json.JNull)); i += 1

@@ -1,8 +1,9 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.CrawlOps
 
 /** Freshness-driven recrawl scheduling over the sitemap-fed frontier
   * (`sources/Sitemaps.scala`). The reference krawler crawls each source
@@ -95,10 +96,11 @@ object Recrawl {
     * largest remainders (ties → smaller host string). Because every
     * grant is bounded by its own demand, one pass is exact — no
     * iterate-to-fixpoint. The apportionment is fully distributed: the
-    * frontier is touched by exactly one count-by-host aggregation, and
-    * the global total/leftover/rank structures are single-partition
-    * windows over the per-host rows only (hosts ≪ URLs) — nothing is
-    * collected to the driver at any host cardinality.
+    * frontier is touched by exactly one count-by-host aggregation, the
+    * global total and leftover are one-row aggregates joined back by
+    * broadcast, and the remainder rank is `CrawlOps.globalRank` — no
+    * single-partition window and nothing collected to the driver at any
+    * host cardinality.
     *
     * Input: any frame with a `host` column (one row per due URL).
     * Output: (host, due_count, allocated) — allocated sums to
@@ -107,30 +109,27 @@ object Recrawl {
   def allocateBudget(due: DataFrame, globalBudget: Long,
       perHostCap: Long = Long.MaxValue): DataFrame = {
     require(globalBudget >= 0 && perHostCap >= 1, "nonnegative budget, cap >= 1")
-    // FULLY DISTRIBUTED (the r5 verdict's one 100×-scale assumption,
-    // removed): the previous form collect()ed the per-host counts and
-    // sorted them on the driver — fine for thousands of hosts, a
-    // driver-side bottleneck at a general web frontier's 10^7–10^8 hosts
-    // (guide §5: the driver should do almost no data work). Same
-    // largest-remainder arithmetic as the driver version (equivalence
-    // pinned in OptimizedOpsSpec): base shares and remainders are plain
-    // expressions — DECIMAL(38,0) products, since budget × demand can
-    // exceed Long at 10^10 scale — and the only non-scan structures are
-    // ONE count-by-host aggregation plus two single-partition windows
-    // over the per-host rows (≤ #hosts rows, never frontier rows: the
-    // global total/leftover sums and the remainder rank).
-    val wAll = Window.partitionBy()
-    val wRank = Window.orderBy(col("rem").desc, col("host").asc)
-    due.groupBy(col("host")).agg(count(lit(1)).as("due_count"))
+    // FULLY DISTRIBUTED: the per-host counts never reach the driver
+    // (guide §5), and no structure runs in a single partition. Same
+    // largest-remainder arithmetic as the driver version it replaced
+    // (equivalence pinned in OptimizedOpsSpec): base shares and remainders
+    // are plain expressions — DECIMAL(38,0) products, since budget × demand
+    // can exceed Long at 10^10 scale — over ONE count-by-host aggregation;
+    // the global total and leftover are one-row aggregates broadcast back
+    // onto the per-host rows, and the remainder rank is the distributed
+    // `globalRank` (hosts are unique, so (rem desc, host) is a total order).
+    val perHost = due.groupBy(col("host")).agg(count(lit(1)).as("due_count"))
       .withColumn("demand", least(col("due_count"), lit(perHostCap)))
-      .withColumn("total", sum(col("demand")).over(wAll))
+    val shares = perHost
+      .crossJoin(broadcast(perHost.agg(sum(col("demand")).as("total"))))
       .withColumn("prod",
         lit(globalBudget).cast("decimal(38,0)") * col("demand").cast("decimal(38,0)"))
       .withColumn("base", expr("prod div total")) // IntegralDivide → long, exact
       .withColumn("rem", col("prod") -
         col("base").cast("decimal(38,0)") * col("total").cast("decimal(38,0)"))
-      .withColumn("leftover", lit(globalBudget) - sum(col("base")).over(wAll))
-      .withColumn("rank", row_number().over(wRank))
+    val leftover = shares.agg((lit(globalBudget) - sum(col("base"))).as("leftover"))
+    CrawlOps.globalRank(shares, "rank", col("rem").desc, col("host").asc)
+      .crossJoin(broadcast(leftover))
       .withColumn("allocated",
         when(col("total") <= globalBudget, col("demand"))
           .otherwise(col("base") +

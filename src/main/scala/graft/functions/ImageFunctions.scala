@@ -191,25 +191,5 @@ object ImageFunctions {
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   // ---- UDF surface ----
-  final case class Dims(w: Int, h: Int)
-  val imageDims = udf { bytes: Array[Byte] =>
-    decode(bytes).map(i => Dims(i.getWidth, i.getHeight))
-  }
   val phash64 = udf { bytes: Array[Byte] => phashOfBytes(bytes) }
-  /** PSNR of a decoded image vs reference pixel bytes (w*h ints, big-endian
-    * packed RGB) — used by the invariant check against regenerated goldens.
-    */
-  val psnrVsGolden = udf { (bytes: Array[Byte], golden: Array[Byte], w: Int, h: Int) =>
-    decode(bytes).map { img =>
-      val dec = pixelsOf(img)
-      val ref = new Array[Int](w * h)
-      var i = 0
-      while (i < ref.length) {
-        ref(i) = ((golden(i * 3) & 0xFF) << 16) | ((golden(i * 3 + 1) & 0xFF) << 8) |
-          (golden(i * 3 + 2) & 0xFF)
-        i += 1
-      }
-      psnr(dec, ref)
-    }
-  }
 }

@@ -1,7 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 
 /** robots.txt parsing + evaluation (RFC 9309). The reference crawler has no
   * robots handling (verified: zero matches in /root/reference/krawl); the

@@ -336,21 +336,11 @@ object CrawlOps {
     metaState(events).select(MetaPublicCols.map(col): _*)
 
   /** The seven user-facing CrawlingMeta columns (the rest of `metaState` is
-    * internal merge state).
+    * internal merge state and the resolution counters).
     */
   val MetaPublicCols: Seq[String] = Seq("unit_path", "visits", "first_visited",
     "last_visited", "last_successfully_visited", "changes", "last_detected_change")
 
-  /** Full per-unit CrawlingMeta state over an event-log SEGMENT (any
-    * contiguous run_seq range). Beyond the public columns it carries the
-    * boundary state that makes two adjacent segments' states MERGEABLE
-    * (`mergeMetaStates`): the first/last successful content hashes and the
-    * first successful run_seq — a change across a segment boundary is
-    * exactly `left.last_ok_hash != right.first_ok_hash`, detected at
-    * `right.first_ok_seq`. This is what lets the compacted summary absorb
-    * the event history: CrawlingMeta over (summary ∪ delta) ≡ over the full
-    * log, without ever re-folding compacted events.
-    */
   /** Per-unit resolution counters, shared between the pipeline's exclusion
     * fold and the compaction summary so the two can NEVER disagree on
     * resolution semantics: `perm` = the unit reached a permanent outcome,
@@ -361,18 +351,19 @@ object CrawlOps {
       .otherwise(0)).as("perm"),
     sum(when(col("status") === "error", 1L).otherwise(0L)).as("n_err"))
 
-  def metaState(events: DataFrame): DataFrame =
-    metaStateImpl(events, withResolution = false)
-
-  /** `metaState` + the resolution counters + the unit's routing bucket, all
-    * folded in the SAME events.groupBy — the compaction shape: one shared
-    * aggregation pass instead of a separate resolution fold joined on a
-    * differently-partitioned key.
+  /** Full per-unit CrawlingMeta state over an event-log SEGMENT (any
+    * contiguous run_seq range). Beyond the public columns it carries the
+    * boundary state that makes two adjacent segments' states MERGEABLE
+    * (`mergeMetaStates`): the first/last successful content hashes and the
+    * first successful run_seq — a change across a segment boundary is
+    * exactly `left.last_ok_hash != right.first_ok_hash`, detected at
+    * `right.first_ok_seq`. The resolution counters (`resolutionAggs`) fold
+    * in the SAME events.groupBy, so the compaction summary costs one shared
+    * aggregation pass. This is what lets the compacted summary absorb the
+    * event history: CrawlingMeta over (summary ∪ delta) ≡ over the full
+    * log, without ever re-folding compacted events.
     */
-  def metaStateWithResolution(events: DataFrame): DataFrame =
-    metaStateImpl(events, withResolution = true)
-
-  private def metaStateImpl(events: DataFrame, withResolution: Boolean): DataFrame = {
+  def metaState(events: DataFrame): DataFrame = {
     // ONE shuffle on unit_path: the running-frame window computes each ok
     // row's previous-ok-row hash in the same sorted pass the aggregation
     // consumes, and ok-only extremes fold into the shared groupBy as
@@ -403,11 +394,7 @@ object CrawlOps {
       max(when(col("changed"), col("run_seq"))).as("last_detected_change"),
       min_by(okStruct, okSeq).getField("h").as("first_ok_hash"),
       min(okSeq).as("first_ok_seq"),
-      max_by(okStruct, okSeq).getField("h").as("last_ok_hash")) ++
-      (if (withResolution)
-        // bucket is a pure function of unit_path — max picks the one value
-        max(col("bucket")).as("bucket") +: resolutionAggs
-      else Seq.empty)
+      max_by(okStruct, okSeq).getField("h").as("last_ok_hash")) ++ resolutionAggs
     annotated.groupBy("unit_path").agg(aggs.head, aggs.tail: _*)
   }
 
@@ -415,25 +402,13 @@ object CrawlOps {
     * precedes every run_seq in `right` — the summary/delta shape). Counters
     * add, extremes coalesce in segment order, and the one cross-boundary
     * change (hash differs across the seam) is counted at the right
-    * segment's first successful visit.
+    * segment's first successful visit. The resolution counters
+    * re-aggregate associatively exactly as the exclusion fold does (perm
+    * max-of-max, n_err sum-of-sum). This is what makes compaction
+    * INCREMENTAL: new summary = merge(old summary, fold(delta events)) ≡
+    * fold(all events), so compacting costs the delta, never the history.
     */
-  def mergeMetaStates(left: DataFrame, right: DataFrame): DataFrame =
-    mergeMetaStatesImpl(left, right, withResolution = false)
-
-  /** `mergeMetaStates` over FULL summary states (`metaStateWithResolution`
-    * shape): the meta columns merge identically, and the resolution
-    * counters re-aggregate associatively exactly as the exclusion fold does
-    * (perm max-of-max, n_err sum-of-sum; bucket is a pure function of
-    * unit_path — either side's value is the value). This is what makes
-    * compaction INCREMENTAL: new summary = merge(old summary, fold(delta
-    * events)) ≡ fold(all events), so compacting costs the delta, never the
-    * history.
-    */
-  def mergeMetaStatesWithResolution(left: DataFrame, right: DataFrame): DataFrame =
-    mergeMetaStatesImpl(left, right, withResolution = true)
-
-  private def mergeMetaStatesImpl(left: DataFrame, right: DataFrame,
-      withResolution: Boolean): DataFrame = {
+  def mergeMetaStates(left: DataFrame, right: DataFrame): DataFrame = {
     val l = left.columns.filter(_ != "unit_path")
       .foldLeft(left)((d, c) => d.withColumnRenamed(c, s"l_$c"))
     val r = right.columns.filter(_ != "unit_path")
@@ -441,7 +416,7 @@ object CrawlOps {
     val boundary = col("l_last_ok_hash").isNotNull &&
       col("r_first_ok_hash").isNotNull &&
       col("l_last_ok_hash") =!= col("r_first_ok_hash")
-    val metaCols = Seq(
+    l.join(r, Seq("unit_path"), "full_outer").select(
       col("unit_path"),
       (coalesce(col("l_visits"), lit(0L)) + coalesce(col("r_visits"), lit(0L)))
         .as("visits"),
@@ -456,13 +431,10 @@ object CrawlOps {
         col("l_last_detected_change")).as("last_detected_change"),
       coalesce(col("l_first_ok_hash"), col("r_first_ok_hash")).as("first_ok_hash"),
       coalesce(col("l_first_ok_seq"), col("r_first_ok_seq")).as("first_ok_seq"),
-      coalesce(col("r_last_ok_hash"), col("l_last_ok_hash")).as("last_ok_hash"))
-    val resolutionCols = if (!withResolution) Seq.empty else Seq(
-      coalesce(col("l_bucket"), col("r_bucket")).as("bucket"),
+      coalesce(col("r_last_ok_hash"), col("l_last_ok_hash")).as("last_ok_hash"),
       greatest(coalesce(col("l_perm"), lit(0)), coalesce(col("r_perm"), lit(0)))
         .as("perm"),
       (coalesce(col("l_n_err"), lit(0L)) + coalesce(col("r_n_err"), lit(0L)))
         .as("n_err"))
-    l.join(r, Seq("unit_path"), "full_outer").select(metaCols ++ resolutionCols: _*)
   }
 }

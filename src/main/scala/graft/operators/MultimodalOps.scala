@@ -3,22 +3,15 @@ package graft.operators
 import java.awt.image.BufferedImage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.fixtures.SyntheticStore
 import graft.functions.ImageFunctions
 
-/** Multimodal column operators: image/audio/video payloads as opaque binary
-  * columns with typed metadata, processed in batch-shaped partition passes.
-  *
-  * Image decode/resize/feature-extract are REAL (javax.imageio is in the
-  * JVM). Audio/video decoding libraries are not in this container, so those
-  * decoders are STUBS — deterministic fakes derived from the payload hash —
-  * while the Spark-side plumbing (schema, partitioning, batch shape,
-  * null-safe error channel) is real and tested. Swapping the stub for ffmpeg
-  * bindings changes one function.
+/** Multimodal column operators over the crawl's image+caption pairs: image
+  * payloads as opaque binary columns with typed metadata, processed in
+  * batch-shaped partition passes. Decode, resize and feature extraction are
+  * real (javax.imageio); an undecodable payload yields a null, never a
+  * failed scan.
   */
 object MultimodalOps {
-
-  // ---- images (real) ----
 
   final case class ImageMeta(w: Int, h: Int, fmt_guess: String, phash: Long)
 
@@ -71,43 +64,6 @@ object MultimodalOps {
       if (centered.exists(_ != 0.0f)) centered else gray.map(_.toFloat)
     }
   val imageEmbeddingUdf = udf(imageEmbedding _)
-
-  // ---- audio (stubbed decode, real plumbing) ----
-
-  final case class AudioMeta(duration_ms: Long, sample_rate: Int, n_channels: Int,
-      rms_millibels: Long)
-
-  /** STUB: a real implementation decodes the container (e.g. via javax.sound
-    * or ffmpeg). The deterministic fake derives typed metadata from the
-    * payload hash so pipelines exercise realistic value distributions.
-    */
-  def decodeAudioStub(bytes: Array[Byte]): AudioMeta = {
-    val h = SyntheticStore.mix64(java.util.Arrays.hashCode(bytes).toLong)
-    AudioMeta(
-      duration_ms = 500L + Math.floorMod(h, 600000L),
-      sample_rate = Array(16000, 22050, 44100, 48000)(Math.floorMod(h >>> 8, 4L).toInt),
-      n_channels = 1 + Math.floorMod(h >>> 16, 2L).toInt,
-      rms_millibels = -6000L + Math.floorMod(h >>> 24, 5900L))
-  }
-  val audioMetaUdf = udf(decodeAudioStub _)
-
-  // ---- video (stubbed decode, real plumbing) ----
-
-  final case class VideoFrame(frame_idx: Int, ts_ms: Long, phash: Long)
-
-  /** STUB frame sampler: a real implementation seeks keyframes via ffmpeg.
-    * Emits `n` deterministic frames with per-frame pHashes derived from the
-    * payload hash — the exact shape a real sampler returns.
-    */
-  def sampleFramesStub(bytes: Array[Byte], n: Int): Seq[VideoFrame] = {
-    val h0 = SyntheticStore.mix64(java.util.Arrays.hashCode(bytes).toLong * 31 + 5)
-    val durationMs = 1000L + Math.floorMod(h0, 120000L)
-    (0 until n).map { i =>
-      VideoFrame(i, durationMs * i / math.max(1, n - 1),
-        SyntheticStore.mix64(h0 + i))
-    }
-  }
-  def frameSampleUdf(n: Int) = udf { bytes: Array[Byte] => sampleFramesStub(bytes, n) }
 
   /** Batch-shaped multimodal featurization over a store table: metadata +
     * thumbnail + embedding per image row. mapInPandas-equivalent batch shape

@@ -538,9 +538,6 @@ object TextOps {
     * limited by 16-bit block keys (pigeonhole: distance ≤3 ⇒ at least one of
     * 4 blocks equal), so the join is an inverted-index join, not a cross.
     */
-  def simhashPairs(spark: SparkSession, sfDir: String, maxHamming: Int = 3): DataFrame =
-    simhashPairsOf(spark, docs(spark, sfDir), s"dir:$sfDir", maxHamming)
-
   def simhashPairsOf(spark: SparkSession, docsDf: DataFrame, cacheKey: String,
       maxHamming: Int = 3): DataFrame = {
     val sig = graft.PlanCache.cached(spark, s"simhash-sig:$cacheKey")(

@@ -119,32 +119,6 @@ object VectorOps {
       .select(col("id_a"), col("id_b"), col("cos_permille"))
   }
 
-  /** IVF (inverted-file) ANN — the second scale path next to hyperplane
-    * LSH, the classical coarse-quantizer + inverted-list design (Sivic &
-    * Zisserman, "Video Google", ICCV 2003; the IVF-Flat index family
-    * popularized by the public FAISS docs — implemented here from the
-    * published method, not any codebase): a small coarse quantizer of
-    * `nCentroids` anchor vectors
-    * partitions the corpus into inverted lists (one shuffle on the list
-    * id); a query probes only its `nProbe` nearest lists and re-ranks
-    * exactly inside them. At 10^10 vectors the quantizer is trained
-    * offline and broadcast (here: deterministic anchor rows from the
-    * corpus itself — vec_id ∈ [anchorBase, anchorBase+nCentroids)), the
-    * list id is the only shuffle key, and probe cost is nProbe/nCentroids
-    * of the corpus instead of all of it.
-    *
-    * Assignment is by COSINE to the anchor (scale-invariant: a vector and
-    * its ×2^k copy see bit-identical cosines to every anchor — the same
-    * exact power-of-two fp argument as the planted ANN clones — so
-    * assignment is stable under normalization differences). Ties break on
-    * the lower anchor index, deterministically.
-    */
-  def annIvf(spark: SparkSession, sfDir: String,
-      nQueries: Int = 20, k: Int = 3, nCentroids: Int = 16,
-      nProbe: Int = 2): DataFrame =
-    annIvfOf(spark, spark.read.parquet(s"$sfDir/embeddings.parquet"),
-      s"dir:$sfDir", nQueries, k, nCentroids, nProbe)
-
   private[operators] final case class Anchor(j: Int, v: Array[Double], nrm: Double)
 
   /** Deterministic anchor rows standing in for an offline-trained coarse
@@ -269,6 +243,26 @@ object VectorOps {
     r
   }
 
+  /** IVF (inverted-file) ANN — the second scale path next to hyperplane
+    * LSH, the classical coarse-quantizer + inverted-list design (Sivic &
+    * Zisserman, "Video Google", ICCV 2003; the IVF-Flat index family
+    * popularized by the public FAISS docs — implemented here from the
+    * published method, not any codebase): a small coarse quantizer of
+    * `nCentroids` anchor vectors
+    * partitions the corpus into inverted lists (one shuffle on the list
+    * id); a query probes only its `nProbe` nearest lists and re-ranks
+    * exactly inside them. At 10^10 vectors the quantizer is trained
+    * offline and broadcast (here: deterministic anchor rows from the
+    * corpus itself — vec_id ∈ [anchorBase, anchorBase+nCentroids)), the
+    * list id is the only shuffle key, and probe cost is nProbe/nCentroids
+    * of the corpus instead of all of it.
+    *
+    * Assignment is by COSINE to the anchor (scale-invariant: a vector and
+    * its ×2^k copy see bit-identical cosines to every anchor — the same
+    * exact power-of-two fp argument as the planted ANN clones — so
+    * assignment is stable under normalization differences). Ties break on
+    * the lower anchor index, deterministically.
+    */
   def annIvfOf(spark: SparkSession, embDf: DataFrame, cacheKey: String,
       nQueries: Int = 20, k: Int = 3, nCentroids: Int = 16,
       nProbe: Int = 2, anchorBase: Long = 100L): DataFrame = {

@@ -37,6 +37,12 @@ object CrawlPipeline {
 
   val NBuckets = 32
 
+  /** A unit's seen-filter bucket: the partition of its url_seen events,
+    * its seen-filter file and its url_seen summary row.
+    */
+  def bucketOf(unitPath: Column): Column =
+    pmod(UrlFunctions.urlHash(unitPath), lit(NBuckets.toLong))
+
   def urlSeenStore(tableRoot: String) = new SnapshotStore(s"$tableRoot/url_seen")
   def resultsStore(tableRoot: String) = new SnapshotStore(s"$tableRoot/results")
   /** url_seen is the fetch log (each attempt's full `FetchLogRow`); this
@@ -92,8 +98,8 @@ object CrawlPipeline {
     * is the gap plus the summary, never the history. Valid while url_seen
     * is append-only after `covered_version`; its one rewrite,
     * `startOverHosting`, truncates the summary in the same commit. The fold
-    * is `CrawlOps.metaStateWithResolution` (the exclusion's resolution
-    * counters, the bucket, the mergeable CrawlingMeta state). The new
+    * is `CrawlOps.metaState` (the exclusion's resolution counters and the
+    * mergeable CrawlingMeta state), and each row gets its `bucketOf`. The new
     * summary replaces the old in one commit based on the summary version it
     * merged: a concurrent compaction fails it loudly, so `covered_version`
     * never moves back. Writes nothing when no event follows the covered
@@ -110,8 +116,9 @@ object CrawlPipeline {
       version <- seen.currentVersion.filter(_ > covered)
       events <- seen.readBetween(spark, covered, version)
     } yield {
-      val gap = CrawlOps.metaStateWithResolution(events)
-      val state = prior.fold(gap)(p => CrawlOps.mergeMetaStatesWithResolution(p._1, gap))
+      val gap = CrawlOps.metaState(events)
+      val state = prior.fold(gap)(p => CrawlOps.mergeMetaStates(p._1.drop("bucket"), gap))
+        .withColumn("bucket", bucketOf(col("unit_path")))
       SnapshotStore.commit(Seq(summary.write(spark, state, "bucket",
         Map("covered_version" -> version), clusterBeforeWrite = true, replace = true)
         .copy(basedOn = Some(basedOn))))
@@ -229,7 +236,7 @@ object CrawlPipeline {
       .filter(col("unit_path").isNotNull)
       .withColumn("hosting_id", substring_index(col("unit_path"), "/", 1))
       .withColumn("url_hash", UrlFunctions.urlHash(col("unit_path")))
-      .withColumn("bucket", pmod(col("url_hash"), lit(NBuckets.toLong)))
+      .withColumn("bucket", bucketOf(col("unit_path")))
       .withColumn("priority", UrlFunctions.hostPriority(col("hosting_id")))
 
   /** Skew-aware salting (SURVEY §7.4 risk 2): hosts whose frontier share
@@ -732,7 +739,7 @@ object CrawlPipeline {
     val seen = urlSeenStore(tableRoot)
     val gap = seen.currentVersion
       .flatMap(v => seen.readBetween(spark, prior.fold(-1L)(_._2), v))
-    (prior.map(_._1.drop("bucket", "perm", "n_err")) ++ gap.map(CrawlOps.metaState))
+    (prior.map(_._1.drop("bucket")) ++ gap.map(CrawlOps.metaState))
       .reduceOption(CrawlOps.mergeMetaStates)
       .map(_.select(CrawlOps.MetaPublicCols.map(col): _*))
   }

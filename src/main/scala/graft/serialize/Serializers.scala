@@ -1,7 +1,6 @@
 package graft.serialize
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.tables.Json
 
 /** Output serializers (SURVEY §2.8 C22-C24): canonical JSON, TOML with

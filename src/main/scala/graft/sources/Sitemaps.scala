@@ -142,8 +142,9 @@ object Sitemaps {
     docs.withColumn(xmlCol, gunzipUdf.asNondeterministic()(col(bytesCol)))
       .drop(bytesCol)
 
-  /** Parse a table of fetched sitemap documents (`urlCol` = the sitemap's
-    * own URL, `xmlCol` = its body) into one row per child entry:
+  /** Parse a table of fetched sitemap documents (`xmlCol` = the body; every
+    * other column, e.g. the sitemap's own URL, is carried onto each of the
+    * document's rows) into one row per child entry:
     *
     *   kind = "url":     a `<urlset><url>` entry — `url`, `lastmod_day`,
     *                     `changefreq`, `priority_permille`
@@ -157,8 +158,7 @@ object Sitemaps {
     * classification, `from_xml`, `inline` and normalization all fuse into
     * one codegen'd projection; no shuffle, no UDF.
     */
-  def parse(docs: DataFrame, urlCol: String = "sitemap_url",
-      xmlCol: String = "xml"): DataFrame = {
+  def parse(docs: DataFrame, xmlCol: String = "xml"): DataFrame = {
     val root = rootTag(col(xmlCol))
     val keep = docs.columns.filterNot(_ == xmlCol).map(col)
 

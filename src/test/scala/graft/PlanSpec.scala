@@ -302,7 +302,7 @@ class PlanSpec extends SparkTestBase {
       s"store side is not the bucketed scan:\n$tree")
   }
 
-  test("compaction fold (metaStateWithResolution): one shared key — every " +
+  test("compaction fold (metaState): one shared key — every " +
       "shuffle on unit_path, no cartesian/NLJ, base↔ok join needs no realignment") {
     import spark.implicits._
     val events = (1L to 5000L).map { i =>
@@ -310,7 +310,7 @@ class PlanSpec extends SparkTestBase {
       val status = if (i % 11 == 0) "error" else "ok"
       (unit, status, i / 500, i % 7, i % 32)
     }.toDF("unit_path", "status", "run_seq", "content_hash", "bucket")
-    val qe = graft.operators.CrawlOps.metaStateWithResolution(events).queryExecution
+    val qe = graft.operators.CrawlOps.metaState(events).queryExecution
     qe.executedPlan.execute().foreachPartition((_: Iterator[_]) => ())
     val p = qe.executedPlan.toString + "\n" +
       qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

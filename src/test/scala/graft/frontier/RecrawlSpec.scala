@@ -77,6 +77,22 @@ class RecrawlSpec extends SparkTestBase {
     assert(tight.toSeq.map(_._3).sum == 18L)
   }
 
+  test("allocateBudget: no window of its executed plan runs in a single " +
+    "partition (totals broadcast back, remainder rank distributed)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val due = (0 until 40).flatMap(i => List.fill(i % 7 + 1)(s"h$i.org"))
+      .toDF("host")
+    val out = Recrawl.allocateBudget(due, globalBudget = 50L, perHostCap = 5L)
+    assert(out.as[(String, Long, Long)].collect().map(_._3).sum == 50L)
+    val unkeyed = Plans.collectWithSubqueries(out.queryExecution.executedPlan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(unkeyed.isEmpty,
+      s"single-partition window in:\n${out.queryExecution.executedPlan}")
+  }
+
   test("sitemap → recrawl → fetch stage: the due ranking IS the politeness " +
     "order, and the schedule honors the per-host interval") {
     val (robots, docs) =

@@ -200,26 +200,4 @@ class MultimodalOpsSpec extends SparkTestBase {
       "p/blank" -> ((0L, true, false, false)),
       "p/markup" -> ((0L, true, false, false))))
   }
-
-  test("audio/video stubs: deterministic typed metadata with real schema") {
-    val withAudio = store.limit(10)
-      .withColumn("audio_meta", MultimodalOps.audioMetaUdf(col("bytes")))
-      .select(col("image_id"), col("audio_meta.*"))
-    val rows = withAudio.collect()
-    assert(rows.forall(r => r.getAs[Long]("duration_ms") >= 500L))
-    assert(rows.forall(r => Set(16000, 22050, 44100, 48000)(r.getAs[Int]("sample_rate"))))
-    // determinism across invocations
-    val again = store.limit(10)
-      .withColumn("audio_meta", MultimodalOps.audioMetaUdf(col("bytes")))
-      .select(col("image_id"), col("audio_meta.duration_ms")).collect()
-    assert(rows.map(r => r.getAs[Long]("duration_ms")).toSeq ==
-      again.map(_.getLong(1)).toSeq)
-
-    val frames = store.limit(3)
-      .withColumn("frames", MultimodalOps.frameSampleUdf(5)(col("bytes")))
-      .select(col("image_id"), explode(col("frames")).as("f"))
-      .select(col("f.frame_idx"), col("f.ts_ms"), col("f.phash")).collect()
-    assert(frames.length == 15)
-    assert(frames.map(_.getAs[Int]("frame_idx")).toSet == Set(0, 1, 2, 3, 4))
-  }
 }

@@ -81,7 +81,8 @@ class TextOpsSpec extends SparkTestBase {
       assert(ham <= 16, s"near-dup hamming $ham too large for base $base")
     }
     // blocked pair search finds the exact copies (hamming 0)
-    val pairs = TextOps.simhashPairs(spark, docsDir, maxHamming = 3)
+    val pairs = TextOps.simhashPairsOf(spark,
+      spark.read.parquet(s"$docsDir/documents.parquet"), s"dir:$docsDir", maxHamming = 3)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     for (b <- 0 until 30) assert(pairs.contains((b * 10L, b * 10L + 2)))
   }

@@ -54,8 +54,9 @@ class VectorOpsSpec extends SparkTestBase {
 
   test("IVF ANN: near-perfect recall on planted pairs at nProbe=2; probe " +
       "work bounded by list sizes") {
-    val ivfTop = VectorOps.annIvf(spark, embDir, nQueries = 20, k = 1,
-      nCentroids = 8, nProbe = 2)
+    val ivfTop = VectorOps.annIvfOf(spark,
+      spark.read.parquet(s"$embDir/embeddings.parquet"), s"dir:$embDir",
+      nQueries = 20, k = 1, nCentroids = 8, nProbe = 2)
       .select("qid", "neighbor_id").as[(Long, Long)].collect().toMap
     // a 0.02-noise perturbation moves cosine-to-anchor by far less than
     // typical inter-anchor gaps; with 2 probes the planted neighbor's list

@@ -25,6 +25,16 @@ class CrawlPipelineSpec extends SparkTestBase {
 
   private def freshRoot(): String = Files.createTempDirectory("graft-tables").toString
 
+  /** A meta state with the summary's `bucket` column, from the expression
+    * `compactUrlSeen` writes it with.
+    */
+  private def withBucket(state: org.apache.spark.sql.DataFrame) =
+    state.withColumn("bucket", CrawlPipeline.bucketOf(col("unit_path")))
+
+  /** The full url_seen summary (all 13 columns) folded from `events`. */
+  private def summaryFold(events: org.apache.spark.sql.DataFrame) =
+    withBucket(graft.operators.CrawlOps.metaState(events))
+
   test("single full run: every unit resolved exactly once; URL-seen set is the golden multi-host set") {
     val root = freshRoot()
     val s = CrawlPipeline.run(spark, storeDir, root)
@@ -407,8 +417,7 @@ class CrawlPipelineSpec extends SparkTestBase {
         .map(r => cols.map(c => Option(r.getAs[Any](c)).map(_.toString).orNull))
         .toSet
     val fromSummary = rows(CrawlPipeline.urlSeenSummaryStore(root).read(spark).get)
-    val fullFold = rows(graft.operators.CrawlOps.metaStateWithResolution(
-      seen.read(spark).get))
+    val fullFold = rows(summaryFold(seen.read(spark).get))
     assert(fromSummary == fullFold,
       "incremental summary diverged from the full event-log fold")
 
@@ -428,8 +437,7 @@ class CrawlPipelineSpec extends SparkTestBase {
     CrawlPipeline.run(spark, mutatedDir, root, revisit = true,
       autoCompactAlpha = 0.01)
     val mutSummary = rows(CrawlPipeline.urlSeenSummaryStore(root).read(spark).get)
-    val mutFold = rows(graft.operators.CrawlOps.metaStateWithResolution(
-      seen.read(spark).get))
+    val mutFold = rows(summaryFold(seen.read(spark).get))
     assert(mutSummary == mutFold,
       "incremental summary diverged after a revisit with content changes")
     val changed = CrawlPipeline.urlSeenSummaryStore(root).read(spark).get
@@ -454,8 +462,7 @@ class CrawlPipelineSpec extends SparkTestBase {
     CrawlPipeline.run(spark, mutatedDir2, root, revisit = true,
       autoCompactAlpha = 0.01)
     val mutSummary2 = rows(CrawlPipeline.urlSeenSummaryStore(root).read(spark).get)
-    val mutFold2 = rows(graft.operators.CrawlOps.metaStateWithResolution(
-      seen.read(spark).get))
+    val mutFold2 = rows(summaryFold(seen.read(spark).get))
     assert(mutSummary2 == mutFold2,
       "merge-branch summary diverged across a cross-seam content change")
     val changed2 = CrawlPipeline.urlSeenSummaryStore(root).read(spark).get
@@ -491,10 +498,10 @@ class CrawlPipelineSpec extends SparkTestBase {
         val unit = i % units
         (s"h.test/u$unit", (i / units).toLong, status, hash, unit % 4L)
       }.toDF("unit_path", "run_seq", "status", "content_hash", "bucket")
-      val merged = CrawlOps.mergeMetaStatesWithResolution(
-        CrawlOps.metaStateWithResolution(log.filter(col("run_seq") < split)),
-        CrawlOps.metaStateWithResolution(log.filter(col("run_seq") >= split)))
-      rows(merged) == rows(CrawlOps.metaStateWithResolution(log))
+      val merged = CrawlOps.mergeMetaStates(
+        CrawlOps.metaState(log.filter(col("run_seq") < split)),
+        CrawlOps.metaState(log.filter(col("run_seq") >= split)))
+      rows(withBucket(merged)) == rows(summaryFold(log))
     })
   }
 
@@ -537,7 +544,7 @@ class CrawlPipelineSpec extends SparkTestBase {
         .toSet
     assert(summaryStore.currentSnapshot.get.metrics("covered_version") == version)
     assert(rows(summaryStore.read(spark).get) ==
-      rows(graft.operators.CrawlOps.metaStateWithResolution(seen.read(spark).get)))
+      rows(summaryFold(seen.read(spark).get)))
   }
 
   test("frontier key sidecar: identical frontier rows with and without the " +
