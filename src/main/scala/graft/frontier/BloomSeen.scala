@@ -5,14 +5,13 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{BinaryType, DataType}
-import org.apache.spark.util.LongAccumulator
 import org.apache.spark.util.sketch.BloomFilter
 
 /** A URL-seen sketch over 64-bit keys (SURVEY §2.11, J6): the one thing that
@@ -97,9 +96,10 @@ case class SketchAgg[S](
   * `<dir>/bucket_<b>.<codec.name>`, plus a `VERSION` stamp naming the
   * url_seen snapshot the files cover. Filters are built and merged in a
   * distributed aggregation and written by the executor that holds each
-  * bucket's row — nothing is collected to the driver. The frontier is routed
-  * by bucket, so each task loads only the filters of the buckets it owns:
-  * per-task residency = O(buckets-in-task × filter size).
+  * bucket's row — nothing is collected to the driver. The `predicate` is
+  * applied above the frontier's routing by bucket (`CrawlPipeline
+  * .selectCandidates`), so each task loads only the filters of the buckets it
+  * owns: per-task residency = O(buckets-in-task × filter size).
   *
   * A VERSION mismatch (crash between the url_seen commit and the filter
   * update) is met with a full `rebuild`, so the filters are never stale-
@@ -123,7 +123,7 @@ final case class SeenFilterStore[S](codec: SketchCodec[S]) {
   /** Merge `keys` (bucket, url_hash) into the per-bucket files and stamp the
     * directory with `version`.
     */
-  def update(spark: SparkSession, keys: DataFrame, dir: String, version: Long): Unit = {
+  def update(keys: DataFrame, dir: String, version: Long): Unit = {
     Files.createDirectories(Paths.get(dir))
     val aggregated = keys.groupBy(col("bucket").cast("long"))
       .agg(codec.agg(col("url_hash")))
@@ -143,21 +143,23 @@ final case class SeenFilterStore[S](codec: SketchCodec[S]) {
   /** Drop the directory's files and build it from the full seen-key set
     * (initial build; VERSION-mismatch recovery; a saturated cuckoo filter).
     */
-  def rebuild(spark: SparkSession, allKeys: DataFrame, dir: String, version: Long): Unit = {
+  def rebuild(allKeys: DataFrame, dir: String, version: Long): Unit = {
     val p = Paths.get(dir)
     if (Files.exists(p)) {
       val s = Files.list(p) // closed below: streams hold an fd
       val entries = try s.iterator().asScala.toVector finally s.close()
       entries.foreach(Files.delete)
     }
-    update(spark, allKeys, dir, version)
+    update(allKeys, dir, version)
   }
 
   /** Might-contain over (bucket, url_hash), loading filters lazily per task.
-    * `loadCounter` (spec instrumentation) counts file loads.
+    * Nondeterministic, because it reads the filter files when it runs: the
+    * optimizer then keeps it where it is written instead of pushing it below
+    * a repartition into the scan, where every task would meet every bucket.
     */
-  def predicate(dir: String, loadCounter: Option[LongAccumulator] = None): Column =
-    udf(new MightContainFromFiles(this, dir, loadCounter))
+  def predicate(dir: String): Column =
+    udf(new MightContainFromFiles(this, dir)).asNondeterministic()
       .apply(col("bucket").cast("long"), col("url_hash"))
 }
 
@@ -171,23 +173,20 @@ object SeenFilterStore {
   }
 }
 
-/** Each task caches only the buckets it actually sees — with the frontier
-  * routed by bucket that is ~1 filter per task. An absent file is an empty
-  * bucket under a version-consistent directory; either way it answers "might
-  * be seen" and the exact anti-join settles it, so there are no false
-  * negatives under ANY directory state.
+/** Each task loads and caches the filters of the buckets it actually sees:
+  * evaluated above the frontier's routing by bucket, that is only the
+  * buckets the task owns. An absent file is an empty bucket under a
+  * version-consistent directory; either way it answers "might be seen" and
+  * the exact anti-join settles it, so there are no false negatives under ANY
+  * directory state.
   */
-final class MightContainFromFiles[S](store: SeenFilterStore[S], dir: String,
-    loadCounter: Option[LongAccumulator])
+final class MightContainFromFiles[S](store: SeenFilterStore[S], dir: String)
     extends ((Long, Long) => Boolean) with Serializable {
   @transient private lazy val cache = scala.collection.mutable.Map.empty[Long, Option[S]]
   def apply(bucket: Long, h: Long): Boolean =
     cache.getOrElseUpdate(bucket, {
       val p = store.bucketFile(dir, bucket)
-      if (Files.exists(p)) {
-        loadCounter.foreach(_.add(1L))
-        Some(store.load(p))
-      } else None
+      if (Files.exists(p)) Some(store.load(p)) else None
     }).forall(store.codec.mightContain(_, h))
 }
 

@@ -365,13 +365,16 @@ object CrawlPipeline {
   val MaxErrorRetries = 3
 
   /** Frontier units eligible for this run: the URL-seen exclusion dataflow.
-    * Bucket-routed frontier → Bloom/cuckoo file prefilter → resolved-set
-    * fold over ONLY the prefilter-positive candidates' state (semi-join
-    * first) → exact anti-join. Summary-first (the sustained-10^10
+    * Bucket-routed frontier → Bloom/cuckoo file prefilter, evaluated above
+    * the routing so each routed task loads only its own buckets' filters,
+    * splitting definitely-new from maybe-seen → resolved-set fold over ONLY
+    * the frontier units' state (semi-join first) → exact anti-join of the
+    * maybe-seen units. Summary-first (the sustained-10^10
     * maintenance path): with a compacted summary present the fold reads the
-    * summary row plus only events NEWER than its covered version, so
-    * per-run cost is proportional to candidates + activity since the last
-    * compaction, never the full attempt history.
+    * summary row plus only the events of `seenOpt` NEWER than its covered
+    * version; with no events it reads the summary alone. So per-run cost is
+    * proportional to candidates + activity since the last compaction, never
+    * the full attempt history.
     *
     * Extracted from `run` so PlanSpec can pin the exclusion plan shape
     * (no CartesianProduct / no nested-loop join anywhere in the subtree).
@@ -379,34 +382,45 @@ object CrawlPipeline {
   def selectCandidates(spark: SparkSession, tableRoot: String,
       fullFrontier: DataFrame, seenOpt: Option[DataFrame],
       seenFilters: graft.frontier.SeenFilterStore[_],
-      maxErrorRetries: Int = MaxErrorRetries): DataFrame = seenOpt match {
-    case None => fullFrontier
-    case Some(seenDf) =>
+      maxErrorRetries: Int = MaxErrorRetries): DataFrame =
+    exclude(tableRoot, fullFrontier, seenOpt, summaryWithCovered(spark, tableRoot),
+      seenFilters, maxErrorRetries)
+
+  /** `selectCandidates` over a summary snapshot the caller has read. */
+  private def exclude(tableRoot: String, fullFrontier: DataFrame,
+      events: Option[DataFrame], summary: Option[(DataFrame, Long)],
+      seenFilters: graft.frontier.SeenFilterStore[_],
+      maxErrorRetries: Int): DataFrame =
+    if (events.isEmpty && summary.isEmpty) fullFrontier
+    else {
       // the filter directory is a pure function of (tableRoot, kind) —
       // derived here so a caller can never pair a kind with the wrong dir
       val filterDir = s"$tableRoot/${seenFilters.dirName}"
+      // both branches split on this one column over the same routed
+      // exchange, which the plan then computes once and reuses
       val routed = fullFrontier.repartition(NBuckets, col("bucket"))
-      val might = seenFilters.predicate(filterDir)
-      val maybeSeen = routed.filter(might)
-      val candSet = maybeSeen.select("unit_path").distinct()
-      val summary = summaryWithCovered(spark, tableRoot)
-      val delta = foldResolution(seenDf
-        .filter(col("run_seq") > summary.fold(-1L)(_._2))
+        .withColumn("maybe_seen", seenFilters.predicate(filterDir))
+      val maybeSeen = routed.filter(col("maybe_seen"))
+      // the state to fold is the frontier units': a unit the prefilter
+      // calls new has no event and no summary row, so prefiltering this
+      // set would only load every filter once more
+      val candSet = fullFrontier.select("unit_path")
+      val covered = summary.fold(-1L)(_._2)
+      val delta = events.map(e => foldResolution(e
+        .filter(col("run_seq") > covered)
+        .join(candSet, Seq("unit_path"), "left_semi")))
+      val fromSummary = summary.map(_._1.select("unit_path", "perm", "n_err")
         .join(candSet, Seq("unit_path"), "left_semi"))
-      val perUnit = summary.fold(delta) { case (summaryDf, _) =>
-        summaryDf.select("unit_path", "perm", "n_err")
-          .join(candSet, Seq("unit_path"), "left_semi")
-          // perm re-aggregates as max-of-max, n_err as sum-of-sum
-          .unionByName(delta).groupBy("unit_path")
-          .agg(max("perm").as("perm"), sum("n_err").as("n_err"))
-      }
+      val perUnit = (fromSummary ++ delta).reduce((s, d) => s.unionByName(d)
+        // perm re-aggregates as max-of-max, n_err as sum-of-sum
+        .groupBy("unit_path").agg(max("perm").as("perm"), sum("n_err").as("n_err")))
       val resolved = perUnit
         .filter(col("perm") === 1 || col("n_err") >= maxErrorRetries)
         .select("unit_path")
-      val definitelyNew = routed.filter(!might)
-      definitelyNew.unionByName(
-        maybeSeen.join(resolved, Seq("unit_path"), "left_anti"))
-  }
+      routed.filter(!col("maybe_seen"))
+        .unionByName(maybeSeen.join(resolved, Seq("unit_path"), "left_anti"))
+        .drop("maybe_seen")
+    }
 
   /** One crawl run: process up to `limit` frontier units not yet in
     * url_seen, publish every table it writes in one commit, return counters.
@@ -452,6 +466,8 @@ object CrawlPipeline {
     import spark.implicits._
 
     val seen = urlSeenStore(tableRoot)
+    // the summary first: url_seen can only have moved past what it covers
+    val summary = summaryWithCovered(spark, tableRoot)
     val seenSnap = seen.currentSnapshot
     // the url_seen version this run's slice is selected from: the run's
     // events carry run_seq = sliceId + 1, and its commit fails loudly if
@@ -462,30 +478,31 @@ object CrawlPipeline {
 
     // URL-seen anti-join with per-bucket Bloom pre-filter (no false
     // negatives by construction; exact anti-join on unit_path settles the
-    // Bloom positives). Scale layout (VERDICT r1 #2): one Bloom FILE per
-    // bucket, frontier ROUTED by bucket, so each task loads only its own
-    // buckets' filters — no driver collect, no whole-map broadcast.
-    // url_seen is an append-only EVENT LOG (one row per attempt); a unit is
-    // excluded from future slices once it has a permanent outcome or
-    // MaxErrorRetries failed attempts. `revisit` ignores the exclusion and
-    // re-crawls the whole frontier (visit counters + change detection).
-    val seenOpt = seenSnap.flatMap(snap => seen.readAt(spark, snap.version))
+    // Bloom positives; see selectCandidates). url_seen is an append-only
+    // EVENT LOG (one row per attempt); a unit is excluded from future slices
+    // once it has a permanent outcome or MaxErrorRetries failed attempts.
+    // The exclusion reads the summary plus only the events it does not
+    // cover (None when it covers sliceId), never the whole history.
+    // `revisit` ignores the exclusion and re-crawls the whole frontier
+    // (visit counters + change detection).
+    val gap = seenSnap.flatMap(snap =>
+      seen.readBetween(spark, summary.fold(-1L)(_._2), snap.version))
     // reconcile the filter files with the committed url_seen BEFORE this
     // run uses or updates them — for EVERY run shape (a revisit run also
     // stamps a new VERSION at commit, so skipping the reconcile here would
     // permanently hide keys lost to a crash → Bloom false negatives)
-    seenOpt.foreach { seenDf =>
-      if (!seenFilters.filtersVersion(bloomDir).contains(sliceId)) {
-        // crash between the run's commit and filter update (or first read
-        // of a pre-existing table): rebuild so filters can't be stale
-        seenFilters.rebuild(spark,
-          seenDf.select(col("bucket"), col("url_hash")), bloomDir, sliceId)
-      }
+    if (seenSnap.isDefined && !seenFilters.filtersVersion(bloomDir).contains(sliceId)) {
+      // crash between the run's commit and filter update (or first read of
+      // a pre-existing table): rebuild so filters can't be stale, from the
+      // summary (one row per unit up to its covered version) ∪ the gap
+      val keys = summary.map(_._1.select(col("bucket"),
+          UrlFunctions.urlHash(col("unit_path")).as("url_hash"))) ++
+        gap.map(_.select(col("bucket"), col("url_hash")))
+      keys.reduceOption(_.unionByName(_)).foreach(seenFilters.rebuild(_, bloomDir, sliceId))
     }
     val candidates =
       if (revisit) fullFrontier
-      else selectCandidates(spark, tableRoot, fullFrontier, seenOpt,
-        seenFilters, maxErrorRetries)
+      else exclude(tableRoot, fullFrontier, gap, summary, seenFilters, maxErrorRetries)
 
     // fixture-scale run slice of the golden order (kill/resume simulation)
     val sliced = limit match {
@@ -633,7 +650,7 @@ object CrawlPipeline {
       // concurrent jobs — the serial tail of every run shrinks by the
       // smaller of the two. A compaction error surfaces with any filter
       // error attached.
-      awaitAll(Seq(() => autoCompact(), () => seenFilters.update(spark,
+      awaitAll(Seq(() => autoCompact(), () => seenFilters.update(
         seenRows.select(col("bucket"), col("url_hash")), bloomDir, snap.version)))
       RunSummary(
         version = snap.version,

@@ -350,6 +350,32 @@ class PlanSpec extends SparkTestBase {
       s"unexpected shuffle key:\n${exchanges.mkString("\n")}")
     // the delta read filters on run_seq BEFORE joining (not post-join)
     assert(p.contains("run_seq"), s"summary delta filter missing:\n$p")
+    // the sketch predicate runs above the bucket routing: no routing
+    // exchange has it below (it would load every bucket's filter per task)
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => n.children.flatMap(nodes)
+    })
+    def sketch(n: SparkPlan) = n.expressions.exists(_.exists {
+      case u: ScalaUDF => u.function.isInstanceOf[graft.frontier.MightContainFromFiles[_]]
+      case _ => false
+    })
+    val all = nodes(qe.executedPlan)
+    val routings = all.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == "bucket"))
+        case _ => false
+      }) => e
+    }
+    assert(routings.nonEmpty && all.exists(sketch), s"no bucket routing or sketch:\n$p")
+    assert(!routings.exists(r => nodes(r.child).exists(sketch)),
+      s"the sketch predicate is below the bucket routing:\n$p")
     // semantics: 240 units are resolved (no 997-class errors at N=300, so
     // every attempt was permanent) → exactly the other 60 remain eligible
     val remaining = candidates.select("unit_path").distinct().count()

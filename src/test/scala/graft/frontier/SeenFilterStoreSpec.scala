@@ -61,16 +61,20 @@ abstract class SeenFilterStoreSpec[S](protected val store: SeenFilterStore[S])
       .toDF("bucket", "url_hash")
 
     // initial build at version 0, incremental merge at version 1
-    store.update(spark, keys(1 to 1000), dir, version = 0L)
+    store.update(keys(1 to 1000), dir, version = 0L)
     assert(store.filtersVersion(dir).contains(0L))
-    store.update(spark, keys(1001 to 2000), dir, version = 1L)
+    store.update(keys(1001 to 2000), dir, version = 1L)
     assert(store.filtersVersion(dir).contains(1L))
 
-    // route candidates by bucket (the scale layout), then apply the predicate
-    val candidates = keys(1 to 6000)
-    val counter = spark.sparkContext.longAccumulator("filters_loaded")
-    val routed = candidates.repartition(nBuckets, col("bucket"))
-    val kept = routed.filter(store.predicate(dir, Some(counter)))
+    // a frontier of 4 parquet files (a local relation would let the
+    // optimizer evaluate the filter on the driver), routed by bucket (the
+    // scale layout), then the predicate, through a store that counts loads
+    val frontierDir = s"$dir-frontier"
+    keys(1 to 6000).repartition(4).write.parquet(frontierDir)
+    val loads = spark.sparkContext.longAccumulator("filters_loaded")
+    val counting = SeenFilterStore(CountingCodec(codec, loads))
+    val routed = spark.read.parquet(frontierDir).repartition(nBuckets, col("bucket"))
+    val kept = routed.filter(counting.predicate(dir))
       .select("url_hash").as[Long].collect().toSet
 
     // no false negatives across BOTH commits (incremental merge preserved v0)
@@ -80,16 +84,16 @@ abstract class SeenFilterStoreSpec[S](protected val store: SeenFilterStore[S])
     assert(kept.size < 2600, s"prefilter not selective: ${kept.size}")
     // residency bound: every bucket's filter loaded at most once per task
     // that OWNS it — routed by bucket, that is ≤ nBuckets total loads
-    // (not nBuckets × nPartitions)
-    assert(counter.value <= nBuckets, s"loaded ${counter.value} > $nBuckets filters")
+    // (not nBuckets × scan tasks)
+    assert(loads.value <= nBuckets, s"loaded ${loads.value} > $nBuckets filters")
   }
 
   test("file-per-bucket rebuild: VERSION mismatch recovery drops stale files") {
     val dir = freshDir()
     val k1 = Seq((0L, 11L), (1L, 22L)).toDF("bucket", "url_hash")
-    store.update(spark, k1, dir, 0L)
+    store.update(k1, dir, 0L)
     val k2 = Seq((2L, 33L)).toDF("bucket", "url_hash")
-    store.rebuild(spark, k2, dir, 5L)
+    store.rebuild(k2, dir, 5L)
     assert(store.filtersVersion(dir).contains(5L))
     // bucket 0/1 files were dropped by the rebuild → absent bucket is
     // conservatively might-contain (no false negatives under any state)
@@ -111,10 +115,10 @@ abstract class SeenFilterStoreSpec[S](protected val store: SeenFilterStore[S])
       val dir = freshDir()
       val bounds = 0 +: cuts :+ keys.size
       bounds.zip(bounds.tail).zipWithIndex.foreach { case ((from, until), v) =>
-        store.update(spark, keysDF(keys.slice(from, until)), dir, v.toLong)
+        store.update(keysDF(keys.slice(from, until)), dir, v.toLong)
       }
       val merged = allPass(keys, dir) && store.filtersVersion(dir).contains(cuts.size.toLong)
-      store.rebuild(spark, keysDF(keys), dir, 99L)
+      store.rebuild(keysDF(keys), dir, 99L)
       merged && allPass(keys, dir) && store.filtersVersion(dir).contains(99L)
     })
   }
@@ -178,7 +182,7 @@ class CuckooSeenSpec extends SeenFilterStoreSpec(SeenFilterStore(CuckooCodec(409
     val dir = freshDir()
     def keys(r: Range) = r.map(i => (i.toLong % nBuckets, i.toLong * 31 + 7))
       .toDF("bucket", "url_hash")
-    store.update(spark, keys(1 to 2000), dir, version = 1L)
+    store.update(keys(1 to 2000), dir, version = 1L)
 
     // remove 200 keys → they fall out of the prefilter (re-fetchable) while
     // every surviving key stays present
@@ -198,7 +202,7 @@ class CuckooSeenSpec extends SeenFilterStoreSpec(SeenFilterStore(CuckooCodec(409
     // SAY so (non-zero return), not silently under-invalidate
     val satDir = freshDir()
     SeenFilterStore(CuckooCodec(16)) // far undersized
-      .update(spark, keys(1 to 2000), satDir, version = 0L)
+      .update(keys(1 to 2000), satDir, version = 0L)
     val failed = CuckooSeen.removeKeys(spark, keys(1 to 80), satDir)
     assert(failed > 0L, "saturated filters must report failed deletions")
   }
@@ -211,7 +215,7 @@ class CuckooSeenSpec extends SeenFilterStoreSpec(SeenFilterStore(CuckooCodec(409
     } yield (keys, removed.toSet)
     check(Prop.forAll(withRemoved) { case (keys, removed) =>
       val dir = freshDir()
-      store.update(spark, keysDF(keys), dir, 0L)
+      store.update(keysDF(keys), dir, 0L)
       CuckooSeen.removeKeys(spark, keysDF(removed.toSeq), dir) == 0L &&
         allPass(keys.filterNot(removed), dir)
     })

@@ -547,6 +547,59 @@ class CrawlPipelineSpec extends SparkTestBase {
       rows(summaryFold(seen.read(spark).get)))
   }
 
+  test("gap read: a run reads only the url_seen events its summary does not " +
+      "cover, none when it covers every version") {
+    val root = freshRoot()
+    // the default policy compacts the first commit: the summary covers v0
+    CrawlPipeline.run(spark, storeDir, root, Some(100L))
+    val seen = CrawlPipeline.urlSeenStore(root)
+    def covered = CrawlPipeline.urlSeenSummaryStore(root).currentSnapshot.get
+      .metrics("covered_version")
+    assert(covered == seen.currentVersion.get)
+    val records = new UrlSeenScanRecords
+    spark.sparkContext.addSparkListener(records)
+    // url_seen (files, rows) the jobs of one uncompacted run read
+    def read(): (Long, Long) = {
+      records.settle(spark.sparkContext)
+      val before = (records.files, records.total)
+      CrawlPipeline.run(spark, storeDir, root, Some(50L), autoCompactAlpha = 0)
+      records.settle(spark.sparkContext)
+      (records.files - before._1, records.total - before._2)
+    }
+    try {
+      assert(read() == (0L, 0L), "a run read url_seen although the summary covers it")
+      // two more uncompacted slices: the next run reads exactly the files
+      // and rows of the three commits after the covered version
+      (1 to 2).foreach(_ =>
+        CrawlPipeline.run(spark, storeDir, root, Some(50L), autoCompactAlpha = 0))
+      val version = seen.currentVersion.get
+      assert(covered == 0L && version == 3L)
+      val gapFiles = seen.readSnapshot(version).files.size - seen.readSnapshot(0L).files.size
+      val gapRows = (1L to version).map(v => seen.readSnapshot(v).metrics("commit_rows")).sum
+      assert(read() == (gapFiles.toLong, gapRows),
+        s"the $version commits after the summary hold $gapFiles files, $gapRows rows")
+    } finally spark.sparkContext.removeSparkListener(records)
+  }
+
+  test("seen prefilter: selectCandidates over a parquet frontier loads at " +
+      "most 2 × NBuckets filters (each routed task loads only its own buckets')") {
+    import graft.frontier.{CountingCodec, SeenFilterStore, SeenFilters}
+    val root = freshRoot()
+    CrawlPipeline.run(spark, storeDir, root, Some(150L))
+    val loads = spark.sparkContext.longAccumulator("filters_loaded")
+    val counting = SeenFilterStore(CountingCodec(SeenFilters.bloom.codec, loads))
+    val candidates = CrawlPipeline.selectCandidates(spark, root,
+      CrawlPipeline.robotsAllowed(CrawlPipeline.frontier(spark, storeDir)),
+      CrawlPipeline.urlSeenStore(root).read(spark), counting)
+    // every attempt of the first 150 was permanent (no 997-class id at N=400)
+    assert(candidates.select("unit_path").as[String].collect().toSet ==
+      (1L to N).map(CrawlPipeline.expectedUnitPath).toSet --
+        CrawlPipeline.urlSeenStore(root).read(spark).get
+          .select("unit_path").as[String].collect())
+    assert(loads.value > 0L && loads.value <= 2L * CrawlPipeline.NBuckets,
+      s"the exclusion loaded ${loads.value} filters; ${CrawlPipeline.NBuckets} buckets")
+  }
+
   test("frontier key sidecar: identical frontier rows with and without the " +
       "projection written by ensureBucketedStore") {
     val dir = Files.createTempDirectory("graft-store-keys").toString
@@ -829,6 +882,15 @@ class CrawlPipelineSpec extends SparkTestBase {
     // fresh VERSION (previously it skipped the rebuild and stamped anyway,
     // hiding the stale state → Bloom false negatives on later runs)
     CrawlPipeline.run(spark, storeDir, root, limit = Some(50L), revisit = true)
+    // the rebuild (from the summary, which covers the first run) left no
+    // url_seen unit out: each one's bucket has a file and its key passes
+    val bloom = graft.frontier.SeenFilters.bloom
+    val keys = CrawlPipeline.urlSeenStore(root).read(spark).get
+      .select(col("bucket").cast("long"), col("url_hash")).distinct()
+    assert(keys.select("bucket").as[Long].collect()
+      .forall(b => Files.exists(java.nio.file.Paths.get(s"$root/bloom/bucket_$b.bloom"))))
+    assert(keys.filter(!bloom.predicate(s"$root/bloom")).isEmpty,
+      "a url_seen unit fails the rebuilt filters")
     val s3 = CrawlPipeline.run(spark, storeDir, root) // normal resume
     assert(s3.ok == 0, s"stale Bloom caused re-fetches: $s3")
     val ids = CrawlPipeline.resultsStore(root).read(spark).get
@@ -904,21 +966,27 @@ class CrawlPipelineSpec extends SparkTestBase {
   * task that scanned a parquet file under `/url_seen/data/`. A task is told
   * apart by the scan it ran, whose SQL row metric it reports; the scans
   * come from the SQL plans the listener bus posts (adaptive re-plans too).
-  * It also keeps the description (call site) of every SQL execution.
+  * It also sums those scans' files read (a driver-side metric, so it counts
+  * files whose row groups a pushed filter skips) and keeps the description
+  * (call site) of every SQL execution.
   */
 private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkListener {
   import org.apache.spark.scheduler._
   import org.apache.spark.sql.execution.SparkPlanInfo
-  import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-    SparkListenerSQLExecutionStart}
+  import org.apache.spark.sql.execution.ui.{SparkListenerDriverAccumUpdates,
+    SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
   private val scanMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
   private val records = new java.util.concurrent.atomic.AtomicLong
+  private val fileMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+  private val filesRead = new java.util.concurrent.atomic.AtomicLong
   private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   private val markersDone = new java.util.concurrent.atomic.AtomicInteger
   private val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   def total: Long = records.get
+
+  def files: Long = filesRead.get
 
   def sqlDescriptions: Seq[String] = descriptions.asScala.toSeq
 
@@ -934,9 +1002,12 @@ private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkL
   }
 
   private def note(p: SparkPlanInfo): Unit = {
-    if (p.metadata.get("Location").exists(_.contains("/url_seen/data/")))
+    if (p.metadata.get("Location").exists(_.contains("/url_seen/data/"))) {
       p.metrics.filter(_.name == "number of output rows")
         .foreach(m => scanMetrics.add(m.accumulatorId))
+      p.metrics.filter(_.name == "number of files read")
+        .foreach(m => fileMetrics.add(m.accumulatorId))
+    }
     p.children.foreach(note)
   }
 
@@ -944,6 +1015,8 @@ private final class UrlSeenScanRecords extends org.apache.spark.scheduler.SparkL
     case s: SparkListenerSQLExecutionStart =>
       descriptions.add(s.description); note(s.sparkPlanInfo)
     case u: SparkListenerSQLAdaptiveExecutionUpdate => note(u.sparkPlanInfo)
+    case d: SparkListenerDriverAccumUpdates =>
+      d.accumUpdates.foreach { case (id, v) => if (fileMetrics.contains(id)) filesRead.addAndGet(v) }
     case _ =>
   }
 
